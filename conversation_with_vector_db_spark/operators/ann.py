@@ -32,8 +32,11 @@ from .cache import scoped_cache
 from .vector import (
     brute_force_topk,
     cosine_similarity,
-    cosine_with_norms_batched,
+    cosine_with_norms,
     l2_norm,
+    majority_dim,
+    query_matrix,
+    score_batch,
     topk_per_query,
 )
 
@@ -116,8 +119,8 @@ def _signature_udf(planes: list[list[float]]):
         # (the behavior of the expression form, whose zip_with
         # truncates/null-pads a ragged vector into a NULL fold)
         # instead of crashing np.stack / the accumulate broadcast and
-        # killing the stage — same masking contract as dot_batched and
-        # matmul_topk.
+        # killing the stage — same masking contract as
+        # vector.score_batch.
         dim = wt.shape[0]
         mask = np.array(
             [v is not None and len(v) == dim for v in arr]
@@ -148,14 +151,19 @@ def with_lsh_bands(
     band's bit substring; equality on it is the candidate filter.
 
     ``dim`` is the vector dimensionality; pass it explicitly (table
-    metadata / fixture contract) so plan construction stays action-free.
+    metadata / fixture contract) so plan construction stays action-free
+    — when omitted it is :func:`..vector.majority_dim` of ``df``.
     ``probe_bits=1`` additionally emits every single-bit flip of each
     band key (multi-probe LSH, query side only): a near neighbor whose
     band signature differs by one bit still collides, raising recall
     without touching the corpus-side index.
     """
     if dim is None:
-        dim = _dim_of(df, vec_col)
+        dim = majority_dim(df, vec_col)
+    if dim is None:
+        raise ValueError(
+            "with_lsh_bands: no non-empty vectors to derive a dimension"
+        )
     if n_bands <= 0 or n_bits % n_bands != 0:
         # A silent non-divisible split would ignore trailing signature
         # bits (stats no longer match the stated config); n_bands >
@@ -202,30 +210,6 @@ def with_lsh_bands(
     )
 
 
-def _dim_of(df: DataFrame, vec_col: str) -> int:
-    """Fallback only: runs a Spark job. Prefer passing ``dim``."""
-    return len(df.select(vec_col).first()[0])
-
-
-def majority_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Deterministic dimension of a possibly-dirty corpus: the MODE
-    of non-NULL vector sizes (ties break to the larger dim).
-    ``first()``-row derivation depends on partition order — a
-    minority-dim row landing first would make the downstream
-    ``size(vec) == dim`` filter silently drop the MAJORITY of the
-    corpus from the index (ADVICE r10). One groupBy job over the
-    handful of distinct sizes (not distinct vectors). ``None`` on an
-    all-NULL/empty corpus."""
-    row = (
-        df.where(F.col(vec_col).isNotNull())
-        .groupBy(F.size(vec_col).alias("_d"))
-        .count()
-        .orderBy(F.desc("count"), F.desc("_d"))
-        .first()
-    )
-    return None if row is None else int(row["_d"])
-
-
 def hyperplane_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -251,9 +235,13 @@ def hyperplane_lsh_topk(
     on clustered data, so a join that carries the embeddings fans each
     pair's payload out n_bands(+probes) times; at the reference's
     1536-d (24 KB of arrays per pair) that shape measured 13x slower
-    than this one on a 20k-corpus sweep. Rescoring is Arrow-batched
-    (bit-identical to the HOF fold, ~100x less CPU on the candidate
-    bulk)."""
+    than this one on a 20k-corpus sweep. Rescoring is the unrolled
+    pair kernel (:func:`..vector.dot_unrolled`).
+
+    ``dim`` defaults to the corpus's :func:`..vector.majority_dim`,
+    derived ONCE and used for both sides' planes and the rescore."""
+    if dim is None:
+        dim = majority_dim(corpus, vec_col)
     c_keys = with_lsh_bands(
         corpus, vec_col, n_bits, n_bands, seed, dim
     ).select(F.col(id_col), "band", "band_key")
@@ -280,12 +268,9 @@ def hyperplane_lsh_topk(
         "qid",
         id_col,
         F.round(
-            cosine_with_norms_batched(
-                F.col("_qvec"),
-                F.col(vec_col),
-                F.col("_qn"),
-                F.col("_cn"),
-                dim=dim,  # unrolled zero-Python path when known (r11)
+            cosine_with_norms(
+                F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn"),
+                dim,
             ),
             4,
         ).alias("sim"),
@@ -448,10 +433,11 @@ def _rescore_probed(
     cosine over precomputed norms (bit-identical to the HOF fold),
     top-k via the WindowGroupLimit shape. Both the query-time and the
     write-time index paths end here, so their scores are identical by
-    construction. ``dim`` (the fit's indexed dimension, when the
-    caller has it) selects the unrolled zero-Python scoring chain;
-    without it the Arrow-batched fold handles the data-dependent case
-    — see :func:`..vector.cosine_with_norms_batched`."""
+    construction. ``dim`` is the fit's indexed dimension; when the
+    caller does not have it, :func:`..vector.majority_dim` of
+    ``assigned`` supplies it."""
+    if dim is None:
+        dim = majority_dim(assigned, vec_col)
     cands = assigned.withColumn(
         "_cn", l2_norm(F.col(vec_col))
     ).join(F.broadcast(probed.withColumn("_qn", l2_norm("_qvec"))), "cell")
@@ -459,20 +445,18 @@ def _rescore_probed(
         "qid",
         id_col,
         F.round(
-            # The probe fan-out makes this the bulk-pair stage.
-            # Branch parity (pinned): bit-identical on NULL/ragged/
-            # finite data; the one documented divergence is a genuine
-            # NaN ELEMENT inside a dim-length vector — the unrolled
-            # branch folds it to sim=NaN (HOF-faithful, sorts above
-            # every real double in the descending top-k) while the
-            # Arrow branch yields NULL (the boundary erases the
-            # NaN/NULL-element distinction; vector.py dot_batched).
-            # ivf_fit_cells filters NULL/ragged rows, not NaN
-            # elements, so a NaN-element corpus can rank differently
-            # across branches (ADVICE r11).
-            cosine_with_norms_batched(
+            # The probe fan-out makes this the bulk-pair stage: the
+            # unrolled pair kernel. Bit-identical to the cell-aware
+            # numpy tail (_matmul_rescore_probed) on NULL/ragged/
+            # finite/inf-overflow rows (pinned); the one documented
+            # divergence is a genuine NaN ELEMENT inside a dim-length
+            # vector — folded here to sim=NaN (HOF-faithful, sorts
+            # above every real double in the descending top-k), NULL
+            # in the numpy tail (the Arrow boundary erases the
+            # NaN/NULL-element distinction; vector.score_batch).
+            cosine_with_norms(
                 F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn"),
-                dim=dim,
+                dim,
             ),
             4,
         ).alias("sim"),
@@ -609,17 +593,16 @@ def _matmul_rescore_probed(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Cell-aware matmul rescore for the write-time index: each Arrow
+    """Cell-aware numpy rescore for the write-time index: each Arrow
     batch of the (partition-pruned) scan is scored ONLY against the
-    queries that probed its cell, with the same dimension-by-dimension
-    float64 accumulation as :func:`..vector.matmul_topk` — bit-identical
-    values to the pair-join `_rescore_probed` shape (asserted by the
-    pruned==unpruned equality in ann_ivf_indexed_suite), but the
-    1536-d embeddings never fan out into per-pair rows: the candidate
-    stream stays (qid, id, sim) narrow. Probed rows are already
-    collected (n_queries x nprobe — tiny), so the per-cell query
-    matrices fold into the closure like matmul_topk's query matrix."""
-    import numpy as np
+    queries that probed its cell, one :func:`..vector.score_batch` call
+    per cell group — bit-identical values to the pair-join
+    `_rescore_probed` shape (asserted by the pruned==unpruned equality
+    in ann_ivf_indexed_suite), but the 1536-d embeddings never fan out
+    into per-pair rows: the candidate stream stays (qid, id, sim)
+    narrow. Probed rows are already collected (n_queries x nprobe —
+    tiny), so the per-cell query matrices fold into the closure like
+    matmul_topk's query matrix."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -628,17 +611,13 @@ def _matmul_rescore_probed(
         if r["_qvec"] is None:
             continue
         by_cell.setdefault(int(r["cell"]), []).append(r)
-    cell_mats: dict[int, tuple] = {}
-    for cell, rows in by_cell.items():
-        qids = [r["qid"] for r in rows]
-        qmat = np.array(
-            [[float(x) for x in r["_qvec"]] for r in rows],
-            dtype=np.float64,
+    cell_mats = {
+        cell: (
+            [r["qid"] for r in rows],
+            *query_matrix([[float(x) for x in r["_qvec"]] for r in rows]),
         )
-        qn = np.zeros(len(rows))
-        for d in range(qmat.shape[1]):
-            qn += qmat[:, d] * qmat[:, d]
-        cell_mats[cell] = (qids, qmat, np.sqrt(qn))
+        for cell, rows in by_cell.items()
+    }
 
     in_fields = {f.name: f for f in scan.schema.fields}
     schema = StructType(
@@ -658,46 +637,13 @@ def _matmul_rescore_probed(
                 if entry is None:
                     continue
                 qids, qmat, qn = entry
-                dim = qmat.shape[1]
-                n = len(grp)
-                vecs = grp[vec_col].to_numpy()
-                valid = np.fromiter(
-                    (v is not None and len(v) == dim for v in vecs),
-                    dtype=bool,
-                    count=n,
-                )
-                idx = np.flatnonzero(valid)
-                c = cn = None
-                if idx.size:
-                    c = np.stack(
-                        [np.asarray(vecs[i], dtype=np.float64) for i in idx]
-                    )
-                    cn = np.zeros(idx.size)
-                    for d in range(dim):
-                        cn += c[:, d] * c[:, d]
-                    cn = np.sqrt(cn)
-                for j in range(len(qids)):
-                    sims = pd.array([None] * n, dtype="Float64")
-                    if idx.size:
-                        acc = np.zeros(idx.size)
-                        for d in range(dim):
-                            acc += c[:, d] * qmat[j, d]
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            sims[idx] = np.where(
-                                (qn[j] == 0) | (cn == 0),
-                                0.0,
-                                acc / (qn[j] * cn),
-                            )
-                    # .to_numpy(): grp keeps the parent frame's index
-                    # after groupby; mixing it with fresh RangeIndex
-                    # series would misalign rows to NaN.
-                    yield pd.DataFrame(
-                        {
-                            "qid": qids[j],
-                            id_col: grp[id_col].to_numpy(),
-                            "sim": pd.Series(sims, dtype="Float64"),
-                        }
-                    )
+                # .to_numpy(): grp keeps the parent frame's index
+                # after groupby; mixing it with the fresh RangeIndex
+                # sim series would misalign rows to NaN.
+                ids = grp[id_col].to_numpy()
+                sims = score_batch(grp[vec_col].to_numpy(), qmat, qn)
+                for qid, sim in zip(qids, sims):
+                    yield pd.DataFrame({"qid": qid, id_col: ids, "sim": sim})
 
     scored = (
         scan.select(id_col, vec_col, "cell")
@@ -801,13 +747,33 @@ def ivf_assign_cells(
     the PROBE's metric, so an upserted vector is found whenever its
     cell is probed. query x nlist crossJoin (broadcast-tiny),
     ``max_by`` argmax — no window, no shuffle beyond the final
-    aggregation on the update batch."""
+    aggregation on the update batch.
+
+    A NULL vector, or one whose size differs from the centroids', can
+    never be scored against the index: it raises (per row, inside the
+    job that assigns it — no extra Spark job) instead of landing in
+    cell 0 with a NULL similarity forever."""
+    vec = F.col(vec_col)
     sims = updates.crossJoin(F.broadcast(cent_df)).select(
         F.col(id_col),
         "cell",
-        cosine_similarity(F.col(vec_col), F.col("centroid")).alias(
-            "_csim"
-        ),
+        F.when(
+            F.size(vec) == F.size("centroid"),
+            cosine_similarity(vec, F.col("centroid")),
+        )
+        .otherwise(
+            F.raise_error(
+                F.format_string(
+                    "ivf_assign_cells: vector of %s=%s has size %s, the "
+                    "index centroids have size %s",
+                    F.lit(id_col),
+                    F.col(id_col).cast("string"),
+                    F.size(vec).cast("string"),
+                    F.size("centroid").cast("string"),
+                )
+            )
+        )
+        .alias("_csim"),
     )
     best = sims.groupBy(id_col).agg(
         F.expr(

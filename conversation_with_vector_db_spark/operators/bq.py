@@ -15,8 +15,9 @@ product quantization (:mod:`.pq`):
   built-in long arithmetic, no Python anywhere in the candidate
   stage. ``E[hamming] = dim * theta / pi`` for angle theta, so
   Hamming rank order estimates cosine rank order.
-* **Refine**: exact Arrow-batched cosine over the oversampled
-  candidate set only.
+* **Refine**: exact cosine (the unrolled pair kernel,
+  :func:`.vector.dot_unrolled`) over the oversampled candidate set
+  only.
 
 Packing uses 63 bits per word with a multiply-accumulate fold
 (``acc*2 + bit``) instead of 64-bit shifts: the fold peaks at
@@ -45,7 +46,12 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .vector import cosine_with_norms_batched, l2_norm, topk_per_query
+from .vector import (
+    cosine_with_norms,
+    l2_norm,
+    majority_dim,
+    topk_per_query,
+)
 
 #: Bits packed per long word — 63, not 64: the MSB-first fold
 #: ``acc*2 + bit`` stays within signed-long range (max 2^63 - 1) so it
@@ -136,12 +142,13 @@ def bq_topk(
     recall decays as the corpus outgrows it — at scale pair it with
     IVF cell pruning (codes partitioned by cell) rather than a global
     cut, exactly like the PQ composition in :mod:`.pq`.
+
+    ``dim`` defaults to the corpus's :func:`..vector.majority_dim`.
     """
     if dim is None:
-        first = corpus.select(F.size(vec_col)).first()
-        if first is None:
-            raise ValueError("bq_topk: empty corpus")
-        dim = int(first[0])
+        dim = majority_dim(corpus, vec_col)
+    if dim is None:
+        raise ValueError("bq_topk: empty corpus")
     n_cand = k * oversample
 
     codes = bq_encode(corpus, dim, vec_col, id_col)
@@ -174,12 +181,12 @@ def bq_topk(
             "qid",
             id_col,
             F.round(
-                cosine_with_norms_batched(
+                cosine_with_norms(
                     F.col("_qvec"),
                     F.col(vec_col),
                     F.col("_qn"),
                     F.col("_cn"),
-                    dim=dim,  # unrolled zero-Python path when known
+                    dim,
                 ),
                 4,
             ).alias("sim"),
@@ -210,12 +217,12 @@ def bq_write_index(
     the in-plan encode dominated bq_topk's wall at 10^6; this
     removes it). Composes with cell partitioning exactly like
     :func:`..pq.pq_write_index` when IVF pruning is also wanted.
+    ``dim`` defaults to the corpus's :func:`..vector.majority_dim`.
     """
     if dim is None:
-        first = corpus.select(F.size(vec_col)).first()
-        if first is None:
-            raise ValueError("bq_write_index: empty corpus")
-        dim = int(first[0])
+        dim = majority_dim(corpus, vec_col)
+    if dim is None:
+        raise ValueError("bq_write_index: empty corpus")
     corpus.select(id_col, vec_col).write.mode("overwrite").parquet(
         f"{path}/data"
     )
@@ -236,13 +243,14 @@ def bq_topk_indexed(
     """Compressed-scan top-k over a :func:`bq_write_index` layout:
     identical semantics (and results — pinned by test) to
     :func:`bq_topk`, but the candidate stage reads the persisted
-    code column only; raw vectors load solely for the refine join."""
+    code column only; raw vectors load solely for the refine join.
+    The dimension is the stored vectors' :func:`..vector.majority_dim`
+    — the rule :func:`bq_write_index` encoded the codes with."""
     codes = spark.read.parquet(f"{path}/codes")
     data = spark.read.parquet(f"{path}/data")
-    dim_row = data.select(F.size(vec_col)).first()
-    if dim_row is None:
+    dim = majority_dim(data, vec_col)
+    if dim is None:
         raise ValueError(f"bq_topk_indexed: empty index at {path}")
-    dim = int(dim_row[0])
     n_cand = k * oversample
 
     qcodes = bq_encode(queries, dim, vec_col, id_col).select(
@@ -271,11 +279,12 @@ def bq_topk_indexed(
             "qid",
             id_col,
             F.round(
-                cosine_with_norms_batched(
+                cosine_with_norms(
                     F.col("_qvec"),
                     F.col(vec_col),
                     F.col("_qn"),
                     F.col("_cn"),
+                    dim,
                 ),
                 4,
             ).alias("sim"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import scoped_cache
+from .vector import majority_dim
 
 #: Fixed-point scale for embedding quantization: 6 decimal digits keeps
 #: full float32 precision (~7 significant digits) while bounding the
@@ -292,22 +293,17 @@ def quantized_lloyd_fit(
     dedup assigns an arriving batch under the existing corpus' model
     without refitting). ``centroids`` is a k-or-fewer list of
     ``(cluster_id, quantized_vector)``; ``dim`` is the modal vector
-    length the model was fitted at (rows of any other length must be
-    dropped before :func:`assign_clusters`, exactly as the fit dropped
-    them)."""
+    length the model was fitted at (:func:`..vector.majority_dim`;
+    rows of any other length must be dropped before
+    :func:`assign_clusters`, exactly as the fit dropped them)."""
     q = scoped_cache(
         quantize_vectors(vectors, vec_col, scale).select(id_col, "q")
     )
-    dim_row = (
-        q.filter(F.size("q") > 0)
-        .groupBy(F.size("q").alias("d"))
-        .count()
-        .orderBy(F.desc("count"), "d")
-        .first()
-    )
-    if dim_row is None:
+    # quantize_vectors keeps each vector's size, so the cached codes
+    # answer the one dimension rule without another scan.
+    dim = majority_dim(q, "q")
+    if dim is None:
         raise ValueError("quantized_lloyd: input has no non-empty vectors")
-    dim = dim_row["d"]
     q = q.filter(F.size("q") == dim)
     init = q.orderBy(id_col).limit(k).collect()
     centroids = [(i, [int(v) for v in r["q"]]) for i, r in enumerate(init)]

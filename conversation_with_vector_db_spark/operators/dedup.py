@@ -77,19 +77,6 @@ def tokens(text: Column) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct 60-bit hashes of word n-grams of the normalized text."""
-    toks = tokens(text)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))
-            ),
-            lambda i: hash60(F.concat_ws(" ", F.slice(toks, i, n))),
-        )
-    )
-
-
 def exploded_shingles(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
@@ -385,8 +372,8 @@ def sized_pair_longs(threshold: float) -> Column:
     posting list: every ordered in-list pair that survives the
     AllPairs/PPJoin length filter, packed ``a*2^32+b``. One definition
     (ADVICE r11) so :func:`pair_counts_from_sized_lists` and any
-    decomposition tool (tools/r11_experiments.py) always measure the
-    SHIPPED expression instead of a re-implementation that can drift.
+    decomposition tool always measure the SHIPPED expression instead
+    of a re-implementation that can drift.
     """
     import math
 

@@ -36,15 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("source", StringType()),
-    ]
-)
-
 FEATURE_DIM = 8
 
 DECODED_SCHEMA = StructType(

@@ -23,9 +23,11 @@ literal sign rows; whole-stage codegen, no shuffle, no Python); the
 candidate cut is the usual WindowGroupLimit top-k; the exact rescore
 touches C rows per query via a broadcast of the (tiny) candidate
 list against the raw vector table. For 1536-d corpora the literal
-fold still compiles (1536 * dim_out multiply-adds), but the Arrow
-matmul path (operators/vector.dot_batched) is the better projection
-kernel past ~256 output dims — same gate the exact scan uses.
+fold still compiles (1536 * dim_out multiply-adds), but the numpy
+projection over Arrow batches (:func:`rp_project_arrow`, the
+query-against-corpus shape of operators/vector.py) is the better
+projection kernel past ~256 output dims — same gate the exact scan
+uses.
 """
 
 from __future__ import annotations
@@ -220,7 +222,7 @@ def rp_topk_arrow(
 
     from .vector import (
         collect_query_vectors,
-        cosine_with_norms_batched,
+        cosine_with_norms,
         l2_norm,
         matmul_topk,
     )
@@ -249,12 +251,12 @@ def rp_topk_arrow(
             "qid",
             id_col,
             F.round(
-                cosine_with_norms_batched(
+                cosine_with_norms(
                     F.col("_qe"),
                     F.col("_ce"),
                     F.col("_qn"),
                     l2_norm(F.col("_ce")),
-                    dim=dim_in,  # unrolled zero-Python path (r11)
+                    dim_in,
                 ),
                 4,
             ).alias("sim"),

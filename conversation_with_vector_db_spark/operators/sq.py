@@ -95,7 +95,7 @@ def sq8_topk(
     scales (what a serving index stores), cosine over reconstructions,
     top-k. Returns (qid, id, sim, rank) — deterministic, hence
     oracle-reproducible at hash level."""
-    from .vector import cosine_with_norms_batched, l2_norm
+    from .vector import cosine_with_norms, l2_norm
 
     scales = sq8_scales(corpus, dim, vec_col)
     c_hat = corpus.crossJoin(F.broadcast(scales)).select(
@@ -122,12 +122,12 @@ def sq8_topk(
         "qid",
         id_col,
         F.round(
-            cosine_with_norms_batched(
+            cosine_with_norms(
                 F.col("_qhat"),
                 F.col("_chat"),
                 F.col("_qn"),
                 l2_norm(F.col("_chat")),
-                dim=dim,  # unrolled zero-Python path (r11)
+                dim,
             ),
             4,
         ).alias("sim"),

@@ -1,13 +1,32 @@
 """Vector similarity operators (SURVEY §2.3; reference read path
 controllers/conversationController.js:32-45, Pinecone cosine ANN).
 
-Scalar/occasional dot products use JVM-side ``zip_with`` + ``aggregate``
-higher-order functions; BULK pair scoring uses the Arrow-batched
-:func:`dot_batched` (vectorized numpy over whole batches, bit-identical
-fold order — HOF lambdas are interpreted per element and lose by ~100x
-on tens of thousands of pairs). Elements are cast to double before
-multiply-accumulate to keep float32 rounding out of the similarity
-ordering.
+Two scoring kernels, one per shape; every scorer in the package uses
+the one its shape calls for:
+
+* **Pair lists** (candidate (a, b) pairs: LSH/BQ/SQ8/RP refines, IVF
+  pair tail, SemDeDup and dedup rescoring): :func:`dot_unrolled`, the
+  fold unrolled to the plan-build-time dimension — whole-stage codegen
+  multiply-adds in the JVM, no Python worker in the stage, and the
+  pair-duplicated vectors never cross a process boundary.
+  :func:`cosine_with_norms` takes that ``dim``.
+* **A few query vectors against a corpus scan** (exact top-k, the IVF
+  index read): :func:`score_batch`, numpy over whole Arrow batches via
+  ``mapInPandas`` — each corpus vector ships once, never once per
+  query. A probe that routed the transactional IVF read
+  (``ann.ivf_table_topk``, 256-d) through the unrolled chain instead
+  doubled its read p50 (3.6-3.9 s vs 1.6-1.8 s over a 120-doc table,
+  4 vCPUs), so this shape keeps numpy.
+
+Both accumulate dimension by dimension in float64 — the exact
+left-fold order and per-element double casts of the reference HOF
+:func:`dot` — so every kernel is bit-identical to the fold, not merely
+close. The fold itself serves scalar and occasional products (norms,
+centroid probes, tiny broadcast scans).
+
+A plan that does not know its dimension derives it by ONE rule,
+:func:`majority_dim`; ``dim=None`` means "derive it", never "use
+another kernel".
 
 Scale design (100 TB corpus):
 * The query side is tiny (one or a few vectors) -> ``broadcast``; the
@@ -35,105 +54,17 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_batched() -> "object":
-    """Arrow-batched dot product UDF — the bulk-pair form of :func:`dot`.
-
-    The HOF fold above is interpreted per element (~0.01 ms/pair at
-    dim 64); when one plan rescores tens of thousands of candidate
-    pairs that interpretation dominates the stage. This pandas UDF does
-    the same multiply-accumulate over a whole Arrow batch, accumulating
-    DIMENSION BY DIMENSION in float64 — the exact left-fold order (and
-    the exact per-element double casts) of the SQL ``aggregate`` form,
-    so the result is bit-identical to :func:`dot`, not merely close:
-    oracle hash-parity is preserved through round().
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no parameter annotations: PEP 563 stringifies them, which
-    # pandas_udf's signature inference rejects.
-    @pandas_udf("double")
-    def _dot(a, b):
-        n = len(a)
-        if n == 0:  # empty Arrow batch (empty partition)
-            return pd.Series([], dtype="float64")
-        an, bn = a.to_numpy(), b.to_numpy()
-        # NULL/ragged rows yield NULL, exactly like the HOF fold
-        # (zip_with null-pads -> aggregate propagates NULL). A pandas
-        # UDF runs UNCONDITIONALLY even under a F.when guard (Spark
-        # extracts it into its own ArrowEvalPython node), so the mask
-        # must live here — np.stack on a None row would kill the
-        # stage instead.
-        valid = np.fromiter(
-            (
-                x is not None and y is not None and len(x) == len(y)
-                for x, y in zip(an, bn)
-            ),
-            dtype=bool,
-            count=n,
-        )
-        # Values and NULL-ness carried SEPARATELY (FloatingArray with
-        # an explicit mask): assigning into a pandas nullable Float64
-        # array coerces NaN to NA, which silently turned a genuine
-        # NaN dot (inf-overflow fold: inf + -inf over FINITE inputs)
-        # into SQL NULL and diverged from the HOF fold's NaN (r11,
-        # caught by the dot_unrolled bit-identity pin). A nan INPUT
-        # element still yields NULL: the Arrow boundary converts NULL
-        # elements to nan (indistinguishable from a real NaN element),
-        # so nan-in-input must mean NULL-element semantics here —
-        # :func:`dot_unrolled` is the path with exact NaN-element
-        # fidelity.
-        vals = np.zeros(n, dtype=np.float64)
-        mask = ~valid
-        idx = np.flatnonzero(valid)
-        if idx.size:
-            lens = {len(an[i]) for i in idx}
-            if len(lens) == 1:
-                va = np.stack(an[idx]).astype(np.float64, copy=False)
-                vb = np.stack(bn[idx]).astype(np.float64, copy=False)
-                innan = np.isnan(va).any(axis=1) | np.isnan(vb).any(
-                    axis=1
-                )
-                acc = np.zeros(va.shape[0], dtype=np.float64)
-                for d in range(va.shape[1]):
-                    acc += va[:, d] * vb[:, d]
-                vals[idx] = acc
-                mask[idx[innan]] = True
-            else:
-                # mixed dims across rows (valid per-row, un-stackable):
-                # per-row left fold, same accumulation order
-                for i in idx:
-                    arr_a, arr_b = an[i], bn[i]
-                    if np.isnan(arr_a).any() or np.isnan(arr_b).any():
-                        mask[i] = True
-                        continue
-                    s = 0.0
-                    for xd, yd in zip(arr_a, arr_b):
-                        s += float(xd) * float(yd)
-                    vals[i] = s
-        return pd.Series(
-            pd.arrays.FloatingArray(vals, mask), dtype="Float64"
-        )
-
-    return _dot
-
-
 def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Dot product with the fold unrolled to a fixed ``dim`` — the
-    zero-Python-boundary form of :func:`dot_batched` for plans that
-    know the dimension at build time (r11, guide §4.1: prefer JVM
-    codegen over any Python path).
+    pair-list kernel: JVM codegen, no Python worker in the stage.
 
     The expression is literally the fold's addition chain —
     ``((0.0 + t0) + t1) + ... + t_{dim-1}`` with
     ``t_i = get(a,i)::double * get(b,i)::double`` — so values are
-    bit-identical to :func:`dot` / :func:`dot_batched` including the
-    ``-0.0`` left-fold edge (``0.0 + -0.0 == +0.0``, exactly like the
-    fold's zero seed). Whole-stage codegen compiles the chain to
-    straight-line multiply-adds; the interpreted HOF loop and the
-    Arrow round-trip (which ships every pair's BOTH vectors into a
-    Python worker and back) both disappear.
+    bit-identical to :func:`dot` including the ``-0.0`` left-fold edge
+    (``0.0 + -0.0 == +0.0``, exactly like the fold's zero seed), NaN
+    elements and inf overflow. Whole-stage codegen compiles the chain
+    to straight-line multiply-adds.
 
     Rows where either array is NULL or not exactly ``dim`` long fall
     back to :func:`dot`, which reproduces the HOF NULL/ragged
@@ -153,6 +84,25 @@ def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     )
 
 
+def majority_dim(df: DataFrame, vec_col: str) -> int | None:
+    """The one dimension rule: the MODE of non-empty vector sizes
+    (NULL and size-0 vectors do not count; ties break to the larger
+    dim). ``first()``-row derivation depends on partition order — a
+    minority-dim row landing first would make the downstream
+    ``size(vec) == dim`` filter silently drop the MAJORITY of the
+    corpus (ADVICE r10). One groupBy job over the handful of distinct
+    sizes (not distinct vectors). ``None`` when no row has a
+    non-empty vector."""
+    row = (
+        df.where(F.size(vec_col) > 0)
+        .groupBy(F.size(vec_col).alias("_d"))
+        .count()
+        .orderBy(F.desc("count"), F.desc("_d"))
+        .first()
+    )
+    return None if row is None else int(row["_d"])
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
@@ -166,30 +116,18 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+def cosine_with_norms(
+    a: Column, b: Column, na: Column, nb: Column, dim: int | None = None
+) -> Column:
     """Cosine given precomputed L2 norms — one array fold per pair
     instead of three. Bit-identical to :func:`cosine_similarity` (same
     ``dot / (na * nb)`` expression over the same doubles), so oracle
     parity is unaffected; use it whenever a vector participates in many
     pairs (candidate rescoring, brute-force scans) so each norm is
-    computed once per VECTOR, not once per PAIR."""
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot(a, b) / (na * nb)
-    )
-
-
-def cosine_with_norms_batched(
-    a: Column, b: Column, na: Column, nb: Column, dim: int | None = None
-) -> Column:
-    """:func:`cosine_with_norms` for bulk pair scoring — bit-identical
-    values on every path. With ``dim`` (the plan knows its vector width
-    at build time): the unrolled JVM chain (:func:`dot_unrolled`) —
-    codegen multiply-adds, NO Python worker in the stage, and the
-    pair-duplicated vectors never cross the JVM boundary (r11; at sf1
-    the Arrow path shipped ~0.5 GB of duplicated arrays per execution
-    of one rescore). Without ``dim``: the Arrow-batched numpy fold
-    (:func:`dot_batched`), still ~100x the interpreted HOF."""
-    d = dot_unrolled(a, b, dim) if dim is not None else dot_batched()(a, b)
+    computed once per VECTOR, not once per PAIR. ``dim`` (the plan's
+    vector width) unrolls the dot — the pair-list kernel; without it
+    the product is the reference fold."""
+    d = dot(a, b) if dim is None else dot_unrolled(a, b, dim)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
         d / (na * nb)
     )
@@ -216,8 +154,9 @@ def rescore_candidates(
     """Exact cosine over candidate (a, b) pairs, size-aware.
 
     Joins the pair list back to the vector table twice, precomputing
-    each vector's norm once so per-pair work is a single Arrow-batched
-    dot fold. The join strategy follows the vector-table size:
+    each vector's norm once so per-pair work is a single unrolled dot
+    (:func:`dot_unrolled`). The join strategy follows the vector-table
+    size:
 
     * ``vec_bytes <= broadcast_max_bytes``: broadcast both vector
       sides — candidate pairs never shuffle.
@@ -230,10 +169,12 @@ def rescore_candidates(
       missing size must not select broadcast.
 
     Output: (a, b, sim) with sim rounded to 4 digits (cross-engine
-    ordering stability). ``dim`` (when the caller knows the vector
-    width) selects the unrolled zero-Python scoring path — see
-    :func:`cosine_with_norms_batched`.
+    ordering stability). ``dim`` is the vector width; when omitted it
+    is derived from ``vectors`` by :func:`majority_dim` (one Spark job
+    at plan build — pass it when the caller knows it).
     """
+    if dim is None:
+        dim = majority_dim(vectors, vec_col)
     ea = vectors.select(
         F.col(id_col).alias("a"),
         F.col(vec_col).alias("ea"),
@@ -257,12 +198,8 @@ def rescore_candidates(
         "a",
         "b",
         F.round(
-            cosine_with_norms_batched(
-                F.col("ea"),
-                F.col("eb"),
-                F.col("na"),
-                F.col("nb"),
-                dim=dim,
+            cosine_with_norms(
+                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"), dim
             ),
             4,
         ).alias("sim"),
@@ -327,6 +264,74 @@ def collect_query_vectors(
     )
 
 
+def query_matrix(vectors: list) -> tuple:
+    """``(qmat, qn)``: the driver-folded query matrix and its L2 norms,
+    accumulated in the fold's order — the constant side of
+    :func:`score_batch`."""
+    import numpy as np
+
+    qmat = np.array(vectors, dtype=np.float64)
+    qn = np.zeros(qmat.shape[0])
+    for d in range(qmat.shape[1]):
+        qn += qmat[:, d] * qmat[:, d]
+    return qmat, np.sqrt(qn)
+
+
+def score_batch(vecs, qmat, qn) -> list:
+    """The query-against-corpus kernel: cosine of every corpus vector
+    in one Arrow batch (``vecs``, an object array of arrays) against
+    every row of ``qmat`` — one nullable ``Float64`` series per query.
+
+    Accumulation is dimension by dimension in float64, the exact
+    left-fold order of :func:`dot`, so values are bit-identical to the
+    fold (and to :func:`dot_unrolled`), inf-overflow NaN included.
+    NULL and query-dim-mismatched corpus vectors score NULL, like the
+    fold's zip_with/aggregate propagation (they rank last under DESC
+    NULLS LAST); np.stack on such a row would kill the stage instead.
+    A vector with a NaN ELEMENT also scores NULL: the Arrow boundary
+    turns a NULL element into nan, so the two are indistinguishable
+    here and NULL-element semantics win — the one documented
+    difference from the fold, which yields NaN for a genuine NaN
+    element.
+
+    Values and NULL-ness travel separately (``FloatingArray`` + mask):
+    assigning into a nullable Float64 array coerces a genuine NaN sim
+    to NA, which silently diverged from the fold (r11)."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(vecs)
+    dim = qmat.shape[1]
+    valid = np.fromiter(
+        (v is not None and len(v) == dim for v in vecs),
+        dtype=bool,
+        count=n,
+    )
+    idx = np.flatnonzero(valid)
+    if idx.size:
+        c = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in idx])
+        valid[idx[np.isnan(c).any(axis=1)]] = False
+        cn = np.zeros(idx.size)
+        for d in range(dim):
+            cn += c[:, d] * c[:, d]
+        cn = np.sqrt(cn)
+    out = []
+    for j in range(qmat.shape[0]):
+        vals = np.zeros(n, dtype=np.float64)
+        if idx.size:
+            acc = np.zeros(idx.size)
+            for d in range(dim):
+                acc += c[:, d] * qmat[j, d]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                vals[idx] = np.where(
+                    (qn[j] == 0) | (cn == 0), 0.0, acc / (qn[j] * cn)
+                )
+        out.append(
+            pd.Series(pd.arrays.FloatingArray(vals, ~valid), dtype="Float64")
+        )
+    return out
+
+
 def matmul_topk(
     corpus: DataFrame,
     query_vectors: list[tuple[int, list[float]]],
@@ -338,15 +343,14 @@ def matmul_topk(
 ) -> DataFrame:
     """Exact cosine top-k with the scoring stage vectorized via
     ``mapInPandas``: each Arrow batch of corpus vectors is scored
-    against the whole (driver-folded) query matrix with numpy.
+    against the whole (driver-folded) query matrix by
+    :func:`score_batch`.
 
     Same semantics as :func:`brute_force_topk`, different physics: the
     interpreted HOF fold costs ~6 us per pair, the batched form ~0.06 —
     at a 10^9-vector corpus that is the difference between a scan and a
-    stall. Accumulation is dimension-by-dimension in float64 — the
-    exact left-fold order (and per-element double casts) of the SQL
-    ``aggregate`` form, so results are bit-identical to
-    :func:`brute_force_topk`, not merely close (verified by test).
+    stall. Results are bit-identical to :func:`brute_force_topk`, not
+    merely close (verified by test).
 
     ``extra_cols`` pass through the scoring stage unchanged (metadata
     columns a filtered search reports). Top-k still lowers to the
@@ -359,7 +363,6 @@ def matmul_topk(
     4th-decimal tie (e.g. 0.03125) would diverge across engines and
     flip a driver-gate hash.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -370,12 +373,7 @@ def matmul_topk(
             "rather than score against a 0-row query matrix"
         )
     qids = [q[0] for q in query_vectors]
-    qmat = np.array([q[1] for q in query_vectors], dtype=np.float64)
-    nq, dim = qmat.shape
-    qn = np.zeros(nq)
-    for d in range(dim):
-        qn += qmat[:, d] * qmat[:, d]
-    qn = np.sqrt(qn)
+    qmat, qn = query_matrix([q[1] for q in query_vectors])
 
     in_fields = {f.name: f for f in corpus.schema.fields}
     schema = StructType(
@@ -389,57 +387,14 @@ def matmul_topk(
 
     def score(it):
         for pdf in it:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            vecs = pdf[vec_col].to_numpy()
-            # NULL or query-dim-mismatched corpus vectors score NULL —
-            # exactly the JVM branch's zip_with/aggregate propagation
-            # (they rank last under DESC NULLS LAST); np.stack on a
-            # None row would kill the stage instead.
-            valid = np.fromiter(
-                (v is not None and len(v) == dim for v in vecs),
-                dtype=bool,
-                count=n,
-            )
-            idx = np.flatnonzero(valid)
-            c = cn = None
-            if idx.size:
-                c = np.stack(
-                    [np.asarray(vecs[i], dtype=np.float64) for i in idx]
-                )
-                # A NULL corpus ELEMENT arrives as nan at the Arrow
-                # boundary; those rows must stay NULL like the JVM
-                # fold's NULL propagation (see dot_batched).
-                valid[idx[np.isnan(c).any(axis=1)]] = False
-                cn = np.zeros(idx.size)
-                for d in range(dim):
-                    cn += c[:, d] * c[:, d]
-                cn = np.sqrt(cn)
-            for j in range(nq):
-                # Values and NULL-ness separated (FloatingArray +
-                # mask), like dot_batched: assigning into a nullable
-                # Float64 coerces a genuine NaN sim (inf-overflow on
-                # finite-normed vectors) to SQL NULL and diverges from
-                # the JVM fold branch (r11).
-                vals = np.zeros(n, dtype=np.float64)
-                if idx.size:
-                    acc = np.zeros(idx.size)
-                    for d in range(dim):
-                        acc += c[:, d] * qmat[j, d]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        vals[idx] = np.where(
-                            (qn[j] == 0) | (cn == 0),
-                            0.0,
-                            acc / (qn[j] * cn),
-                        )
-                out = {"qid": qids[j], id_col: pdf[id_col]}
+            sims = score_batch(pdf[vec_col].to_numpy(), qmat, qn)
+            for qid, sim in zip(qids, sims):
+                out = {"qid": qid, id_col: pdf[id_col]}
                 for col in extra_cols:
                     out[col] = pdf[col]
-                out["sim"] = pd.Series(
-                    pd.arrays.FloatingArray(vals, ~valid),
-                    dtype="Float64",
-                )
+                out["sim"] = sim
                 yield pd.DataFrame(out)
 
     scored = corpus.select(id_col, vec_col, *extra_cols).mapInPandas(
@@ -561,9 +516,9 @@ def brute_force_topk(
         F.col(vec_col).alias("_qvec"),
         l2_norm(F.col(vec_col)).alias("_qn"),
     )
-    # JVM fold, not dot_batched(): with a handful of broadcast query
-    # vectors the Arrow transfer (query vector repeated per corpus row)
-    # costs more than the interpreted fold saves — measured at sf0.1.
+    # The reference fold itself: brute force is the correctness
+    # baseline (and exact_topk's toy-corpus branch, where a Python
+    # worker's round-trip costs more than the fold).
     c = corpus.withColumn("_cn", l2_norm(F.col(vec_col)))
     sim = cosine_with_norms(
         F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")

@@ -32,6 +32,7 @@ from ..operators.ann import (
     ivf_write_index,
     recall_at_k,
 )
+from ..operators.vector import majority_dim
 from .registry import query
 
 K = 10
@@ -96,7 +97,7 @@ def brp_recall_report(
     from pyspark.ml.functions import array_to_vector
 
     from ..operators.vector import (
-        cosine_with_norms_batched,
+        cosine_with_norms,
         l2_norm,
         topk_per_query,
     )
@@ -107,8 +108,6 @@ def brp_recall_report(
     # contract, applied to the stock-MLlib path. Dimension is the
     # MODE of sizes (majority_dim), not an arbitrary first() row —
     # partition-order independent on a mixed-dim corpus (ADVICE r10).
-    from ..operators.ann import majority_dim
-
     dim = majority_dim(emb, "embedding")
     if dim is None:
         raise ValueError(
@@ -127,9 +126,9 @@ def brp_recall_report(
     # transform into both join sides): the candidate list is the
     # bulk-pair stage (~0.88 of the corpus per query on the uniform
     # fixture), and the per-pair cosine_similarity fold recomputed
-    # three HOF folds per pair — the exact pattern the Arrow-batched
-    # rescorer exists to avoid. Bit-identical values per
-    # cosine_with_norms_batched's contract.
+    # three HOF folds per pair — the exact pattern the unrolled pair
+    # kernel exists to avoid. Bit-identical values per
+    # cosine_with_norms' contract.
     normed = normed.withColumn("_norm", l2_norm(F.col("embedding")))
     lsh = BucketedRandomProjectionLSH(
         inputCol="_features",
@@ -149,12 +148,12 @@ def brp_recall_report(
         F.col("datasetA.vec_id").alias("qid"),
         F.col("datasetB.vec_id").alias("vec_id"),
         F.round(
-            cosine_with_norms_batched(
+            cosine_with_norms(
                 F.col("datasetA.embedding"),
                 F.col("datasetB.embedding"),
                 F.col("datasetA._norm"),
                 F.col("datasetB._norm"),
-                dim=dim,  # majority dim above; unrolled path (r11)
+                dim,
             ),
             4,
         ).alias("sim"),
@@ -584,7 +583,7 @@ def ann_pq_recall_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("pq_adc_m16x32_refine100").alias("method"),
         (F.col("recall") >= PQ_FLOOR).alias("meets_floor"),
     )
-    dim = len(emb.select("embedding").first()[0])
+    dim = majority_dim(emb, "embedding")
     compress = spark.createDataFrame(
         [("pq_code_32x_smaller", (dim * 8) // PQ_M == 32)],
         "method string, meets_floor boolean",

@@ -67,26 +67,6 @@ def _docs_bytes(sf_dir: str) -> int | None:
     return parquet_bytes_on_disk(table_path(sf_dir, "documents"))
 
 
-def _capped_shingle_index(
-    spark: SparkSession, sf_dir: str | None
-) -> DataFrame:
-    """The dedup family's shared (doc_id, shingle) DF-capped index.
-
-    Below the fused-cap size gate the CACHED object is the capped
-    posting-list table (cap + postings in ONE groupBy — no count pass,
-    no anti-join; A/B at sf0.1: index build 5.9 -> 2.5 s) and the pair
-    view is a cheap explode over it; because every dedup query derives
-    the identical plan, the generational cache (`scoped_cache`
-    sameResult dedupe) shares ONE materialization across minhash /
-    incremental / fuzzy-decontamination / Jaccard-verify consumers in
-    a session. Above the gate — or when size is unknowable — the
-    two-pass broadcast anti-join shape bounds reducer memory by
-    ``MAX_DF`` (see `operators/dedup.FUSED_CAP_MAX_BYTES`).
-    """
-    sh, _, _ = _shared_dedup_index(spark, sf_dir)
-    return sh
-
-
 def _shared_dedup_index(
     spark: SparkSession, sf_dir: str | None
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:

@@ -378,11 +378,12 @@ WITH q0 AS (
     FROM embeddings
 ),
 -- Model dimension = modal non-empty vector length (ties to the
--- smaller), fixed BEFORE seeding; ragged rows drop — mirrors
--- operators/clustering.quantized_lloyd's seed path exactly.
+-- larger: operators/vector.majority_dim), fixed BEFORE seeding; ragged
+-- rows drop — mirrors operators/clustering.quantized_lloyd's seed path
+-- exactly.
 mdim AS (
     SELECT len(q) AS d FROM q0 WHERE len(q) > 0
-    GROUP BY 1 ORDER BY count(*) DESC, d LIMIT 1
+    GROUP BY 1 ORDER BY count(*) DESC, d DESC LIMIT 1
 ),
 q AS (
     SELECT * FROM q0 WHERE len(q) = (SELECT d FROM mdim)

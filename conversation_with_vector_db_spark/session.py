@@ -35,8 +35,6 @@ BASE_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(
     app_name: str = "conversation-with-vector-db-spark",

@@ -52,17 +52,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", StringType()),
-        StructField("props", StringType()),
-    ]
-)
-
 CONVERSATION_SCHEMA = StructType(
     [
         StructField("conversation_id", StringType()),
@@ -788,7 +777,7 @@ def streaming_semantic_dedup_sink(
             vectors = accepted_prev.select(
                 "vec_id", "embedding"
             ).unionByName(docs)
-            scored = rescore_candidates(cands, vectors)
+            scored = rescore_candidates(cands, vectors, dim=dim)
             w = Window.partitionBy("a").orderBy(F.desc("sim"), "b")
             best = (
                 scored.withColumn("rn", F.row_number().over(w))

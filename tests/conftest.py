@@ -27,8 +27,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # full-registry parity over the non-driver variants, pathological/empty
 # corpus stress sweeps, hypothesis property replays, randomized
 # op-sequence walks, and the layout-determinism lifecycle variants.
-# Run it with CVDB_FULL_TESTS=1 (CI-equivalent: both tiers are green
-# on every commit of this round — see OPTIMIZATION_r12.md).
+# Run it with CVDB_FULL_TESTS=1.
 FULL_TESTS = os.environ.get("CVDB_FULL_TESTS") == "1"
 
 

@@ -4,6 +4,7 @@ operators (the parts the SQL oracle can't certify)."""
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -162,21 +163,23 @@ class TestAnnRecall:
         assert all(r.meets_floor for r in rows), rows
 
 
+def _clustered_corpus(spark, n_clusters=8, per_cluster=40, dim=16):
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    centroids = rng.normal(size=(n_clusters, dim))
+    centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
+    rows = []
+    for vid in range(n_clusters * per_cluster):
+        v = centroids[vid % n_clusters] + 0.08 * rng.normal(size=dim)
+        rows.append((vid, [float(x) for x in v]))
+    return spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+
 class TestIvfIndexed:
     """Write-time IVF index (VERDICT r4 #3): partition-pruned probe."""
 
-    def _clustered_corpus(self, spark, n_clusters=8, per_cluster=40,
-                          dim=16):
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        centroids = rng.normal(size=(n_clusters, dim))
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True)
-        rows = []
-        for vid in range(n_clusters * per_cluster):
-            v = centroids[vid % n_clusters] + 0.08 * rng.normal(size=dim)
-            rows.append((vid, [float(x) for x in v]))
-        return spark.createDataFrame(rows, ["vec_id", "embedding"])
+    _clustered_corpus = staticmethod(_clustered_corpus)
 
     def test_indexed_suite_self_asserts(self, spark, sf_dir):
         row = registry.REGISTRY["ann_ivf_indexed_suite"].fn(
@@ -186,33 +189,75 @@ class TestIvfIndexed:
         assert row.pruned_matches_full, row
         assert row.partitions_pruned, row
 
-    def test_query_time_ivf_rescore_is_python_free(self, spark):
-        """ivf_topk threads the fit's majority dim into the shared
-        rescore tail (r11): the executed plan must carry NO Python
-        evaluation node, and the rows must be identical to the
-        dim-less Arrow arm of _rescore_probed over the same
-        fit/probe (the two dot branches are bit-identical by the
-        dot_unrolled pins; this pins the PLUMBING)."""
+    def test_pair_and_numpy_tails_agree_on_inf_overflow(self, spark):
+        """The IVF pair tail (_rescore_probed, unrolled JVM dot) and the
+        cell-aware numpy tail (_matmul_rescore_probed, score_batch) must
+        return the same rows at repr level on an inf-overflow row: the
+        fold over FINITE inputs ``[1e308, 1e308, -1e308]`` reaches
+        ``inf + -inf`` = NaN, which must stay NaN (ranked first) on both
+        tails, not turn into NULL on the numpy one."""
         from conversation_with_vector_db_spark.operators.ann import (
+            _matmul_rescore_probed,
             _rescore_probed,
-            ivf_fit_cells,
-            ivf_probed_cells,
-            ivf_topk,
         )
 
-        corpus = self._clustered_corpus(spark)
-        queries = corpus.filter(F.col("vec_id") < 3)
-        topk = ivf_topk(corpus, queries, k=5, nlist=8, nprobe=3)
-        plan = topk._jdf.queryExecution().executedPlan().toString()
-        assert not any(
-            s in plan for s in ("MapInArrow", "ArrowEval", "Python")
-        ), plan
-        assigned, cent = ivf_fit_cells(corpus, nlist=8)
-        probed = ivf_probed_cells(cent, queries, nprobe=3)
-        arrow = _rescore_probed(assigned, probed, 5, "vec_id", "embedding")
-        assert sorted(map(tuple, topk.collect())) == sorted(
-            map(tuple, arrow.collect())
+        scan = spark.createDataFrame(
+            [
+                (0, [1.0, 0.0, 0.0], 0),
+                (1, [1e308, 1e308, -1e308], 0),
+                (2, [0.5, 0.5, 0.0], 0),
+                (3, [0.0, 0.0, 0.0], 0),
+                (4, None, 0),
+                (5, [1.0, 2.0], 0),
+            ],
+            "vec_id long, embedding array<double>, cell int",
         )
+        probed = spark.createDataFrame(
+            [(10, [2.0, 2.0, 2.0], 0), (11, [1.0, 0.0, 0.0], 0)],
+            "qid long, _qvec array<double>, cell int",
+        )
+        by_rank = lambda df: repr(sorted(
+            map(tuple, df.collect()), key=lambda r: (r[0], r[3])
+        ))
+        pair = _rescore_probed(scan, probed, 6, "vec_id", "embedding", 3)
+        numpy_tail = _matmul_rescore_probed(
+            scan, probed.collect(), 6, "vec_id", "embedding"
+        )
+        assert by_rank(pair) == by_rank(numpy_tail)
+        first = {r["qid"]: r for r in pair.filter("rank = 1").collect()}
+        assert first[10]["vec_id"] == 1 and math.isnan(first[10]["sim"])
+
+    def test_upsert_rejects_vectors_it_cannot_score(self, spark, tmp_path):
+        """A vector whose size differs from the index's (or a NULL one)
+        could never be scored: the upsert must raise and commit
+        nothing, instead of landing it in cell 0 with a NULL sim."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_upsert,
+        )
+        from conversation_with_vector_db_spark.sources.snapshot_log import (
+            latest_version,
+        )
+
+        corpus = self._clustered_corpus(spark, n_clusters=4,
+                                        per_cluster=10, dim=4)
+        t = str(tmp_path / "ivf_dims")
+        ivf_table_create(spark, corpus, t, nlist=4)
+        v0 = latest_version(t)
+        for bad in ([1.0, 2.0, 3.0], None):
+            updates = spark.createDataFrame(
+                [(7, [0.1, 0.2, 0.3, 0.4]), (9001, bad)],
+                "vec_id long, embedding array<double>",
+            )
+            with pytest.raises(Exception, match="ivf_assign_cells"):
+                ivf_table_upsert(spark, t, updates)
+            assert latest_version(t) == v0
+        ok = spark.createDataFrame(
+            [(9001, [0.1, 0.2, 0.3, 0.4])],
+            "vec_id long, embedding array<double>",
+        )
+        ivf_table_upsert(spark, t, ok)
+        assert latest_version(t) > v0
 
     def test_indexed_pruning_reads_only_probed_files(self, spark, tmp_path):
         """The probed-cell IN filter must prune at FILE LISTING, not as
@@ -824,11 +869,15 @@ def test_lsh_recall_and_pruning_on_clustered_vectors(spark):
 
 
 def test_batched_udfs_handle_empty_partitions(spark):
+    """The Arrow-batched stages (LSH signatures, the numpy
+    query-against-corpus kernel) skip empty partitions and still agree
+    with the HOF fold."""
     from conversation_with_vector_db_spark.operators.ann import (
         with_lsh_bands,
     )
     from conversation_with_vector_db_spark.operators.vector import (
-        dot_batched,
+        cosine_similarity,
+        matmul_topk,
     )
 
     emb = spark.createDataFrame(
@@ -836,10 +885,19 @@ def test_batched_udfs_handle_empty_partitions(spark):
     ).repartition(8)  # most partitions empty
     banded = with_lsh_bands(emb, n_bits=8, n_bands=2, dim=2)
     assert banded.count() == 4
-    d = emb.select(
-        dot_batched()(F.col("embedding"), F.col("embedding")).alias("d")
+    top = matmul_topk(emb, [(9, [1.0, 2.0])], k=2)
+    fold = emb.select(
+        "vec_id",
+        F.round(
+            cosine_similarity(
+                F.array(F.lit(1.0), F.lit(2.0)), F.col("embedding")
+            ),
+            4,
+        ).alias("sim"),
     )
-    assert sorted(r.d for r in d.collect()) == [1.0, 1.0]
+    assert {(r.vec_id, r.sim) for r in top.collect()} == {
+        (r.vec_id, r.sim) for r in fold.collect()
+    }
 
 
 def test_signature_udf_nulls_ragged_dims_like_expr_form(spark):
@@ -980,16 +1038,27 @@ def test_exact_topk_branches_agree_on_null_vectors(spark):
         exact_topk(corpus, nullq, k=5, corpus_bytes=1 << 40)
 
 
-def test_ivf_mixed_dim_corpus_indexes_the_majority(spark):
+def test_ivf_mixed_dim_corpus_indexes_the_majority(spark, tmp_path):
     """ADVICE r10: dim used to come from an arbitrary first() row, so
     on a mixed-dimension corpus WHICH dimension survived the
     size(vec)==dim filter depended on partition order — a minority-dim
     row landing first silently dropped the majority of the corpus.
     Now dim is the MODE of sizes (majority_dim), partition-order
     independent: with the minority rows deliberately FIRST in a
-    single partition, the index must still cover every majority row."""
+    single partition, the index must still cover every majority row,
+    and every dim-less ANN entry point (IVF, BQ in-plan and indexed,
+    hyperplane LSH — one dimension for both sides) must rank exactly
+    what it ranks with the majority dim pinned."""
     from conversation_with_vector_db_spark.operators.ann import (
+        hyperplane_lsh_topk,
         ivf_fit_cells,
+    )
+    from conversation_with_vector_db_spark.operators.bq import (
+        bq_topk,
+        bq_topk_indexed,
+        bq_write_index,
+    )
+    from conversation_with_vector_db_spark.operators.vector import (
         majority_dim,
     )
 
@@ -1009,6 +1078,41 @@ def test_ivf_mixed_dim_corpus_indexes_the_majority(spark):
     assigned2, _ = ivf_fit_cells(corpus, nlist=2, dim=2)
     ids2 = {r["vec_id"] for r in assigned2.select("vec_id").collect()}
     assert ids2 == {100, 101}
+
+    rows = lambda df: sorted(
+        map(tuple, df.select("qid", "vec_id", "sim", "rank").collect())
+    )
+    queries = corpus.filter(F.col("vec_id") < 3)
+    pinned = rows(bq_topk(corpus, queries, k=4, dim=4, oversample=2))
+    assert rows(bq_topk(corpus, queries, k=4, oversample=2)) == pinned
+    path = str(tmp_path / "bq_mixed")
+    bq_write_index(corpus, path)
+    assert rows(bq_topk_indexed(
+        spark, path, queries, k=4, oversample=2
+    )) == pinned
+    # BQ packs 63 dims per code word, so a first()-row dim only bends
+    # its codes past one word: the same minority rows first over a
+    # 70-d majority.
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    wide = spark.createDataFrame(
+        minority
+        + [(i, [float(x) for x in rng.normal(size=70)]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    wide_q = wide.filter(F.col("vec_id") < 3)
+    pinned = rows(bq_topk(wide, wide_q, k=4, dim=70, oversample=1))
+    assert rows(bq_topk(wide, wide_q, k=4, oversample=1)) == pinned
+    bq_write_index(wide, path)
+    assert rows(bq_topk_indexed(
+        spark, path, wide_q, k=4, oversample=1
+    )) == pinned
+    lsh =dict(k=4, n_bits=8, n_bands=4)
+    assert rows(hyperplane_lsh_topk(corpus, queries, **lsh)) == rows(
+        hyperplane_lsh_topk(corpus, queries, dim=4, **lsh)
+    )
+
     # ties break to the larger dim, deterministically
     tied = spark.createDataFrame(
         [(1, [1.0]), (2, [1.0, 2.0])],
@@ -1016,6 +1120,90 @@ def test_ivf_mixed_dim_corpus_indexes_the_majority(spark):
     )
     assert majority_dim(tied, "embedding") == 2
     assert majority_dim(tied.where("vec_id < 0"), "embedding") is None
+    # size-0 vectors never count toward the mode
+    empties = spark.createDataFrame(
+        [(1, []), (2, []), (3, [1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    assert majority_dim(empties, "embedding") == 1
+
+
+def _ivf_topk_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.ann import ivf_topk
+
+    return ivf_topk(corpus, queries, k=5, nlist=8, nprobe=3)
+
+
+def _rescore_candidates_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.vector import (
+        rescore_candidates,
+    )
+
+    cands = (
+        queries.select(F.col("vec_id").alias("a"))
+        .crossJoin(corpus.select(F.col("vec_id").alias("b")))
+        .filter(F.col("a") < F.col("b"))
+    )
+    return rescore_candidates(cands, corpus)
+
+
+def _rescore_probed_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.ann import (
+        _rescore_probed,
+        ivf_fit_cells,
+        ivf_probed_cells,
+    )
+
+    assigned, cent = ivf_fit_cells(corpus, nlist=8)
+    probed = ivf_probed_cells(cent, queries, nprobe=3)
+    return _rescore_probed(assigned, probed, 5, "vec_id", "embedding")
+
+
+def _bq_topk_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.bq import bq_topk
+
+    return bq_topk(corpus, queries, k=5)
+
+
+def _bq_topk_indexed_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.bq import (
+        bq_topk_indexed,
+        bq_write_index,
+    )
+
+    path = str(tmp_path / "bqidx")
+    bq_write_index(corpus, path)
+    return bq_topk_indexed(corpus.sparkSession, path, queries, k=5)
+
+
+def _sq8_topk_case(corpus, queries, tmp_path):
+    from conversation_with_vector_db_spark.operators.sq import sq8_topk
+
+    return sq8_topk(corpus, queries, dim=16, k=5)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _ivf_topk_case,
+        _rescore_candidates_case,
+        _rescore_probed_case,
+        _bq_topk_case,
+        _bq_topk_indexed_case,
+        _sq8_topk_case,
+    ],
+    ids=lambda f: f.__name__[1:-len("_case")],
+)
+def test_rescore_plans_are_python_free(spark, tmp_path, build):
+    """Every pair-list rescorer scores with the unrolled JVM dot — with
+    ``dim`` omitted wherever it is optional (derived by majority_dim,
+    never by switching kernels): the executed plan carries NO Python
+    evaluation node."""
+    corpus = _clustered_corpus(spark)
+    out = build(corpus, corpus.filter(F.col("vec_id") < 3), tmp_path)
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not any(s in plan for s in ("Python", "Arrow", "Pandas")), plan
 
 
 def test_regex_counts_gate_flips_strategy(spark):
@@ -1332,15 +1520,14 @@ def test_zero_norm_vectors_are_cross_engine_exact(spark, sf_dir):
         load_tables(spark, sf_dir, ("embeddings",))
 
 
-def test_dot_unrolled_bit_identical_to_fold_and_arrow(spark):
-    """r11: the unrolled fixed-dim JVM dot (the zero-Python rescore
-    path) must be BIT-identical — repr-level, -0.0 included — to both
-    the HOF fold and the Arrow-batched form, on well-formed AND
-    hostile rows (NULL vector, NULL element, ragged short/long, zero
-    vector, negative zeros)."""
+def test_dot_unrolled_bit_identical_to_fold(spark):
+    """r11: the unrolled fixed-dim JVM dot (the pair-list kernel) must
+    be BIT-identical — repr-level, -0.0 included — to the HOF fold, on
+    well-formed AND hostile rows (NULL vector, NULL element, ragged
+    short/long, zero vector, negative zeros, inf overflow, NaN
+    element)."""
     from conversation_with_vector_db_spark.operators.vector import (
         dot,
-        dot_batched,
         dot_unrolled,
     )
 
@@ -1362,29 +1549,23 @@ def test_dot_unrolled_bit_identical_to_fold_and_arrow(spark):
     got = df.select(
         "id",
         dot(F.col("a"), F.col("b")).alias("fold"),
-        dot_batched()(F.col("a"), F.col("b")).alias("arrow"),
         dot_unrolled(F.col("a"), F.col("b"), 3).alias("unrolled"),
     ).collect()
+    assert len(got) == len(rows)
     for r in got:
         assert repr(r.unrolled) == repr(r.fold), (r.id, r.unrolled, r.fold)
-        if r.id == 9:
-            # Documented boundary limit: a NaN ELEMENT reaches the
-            # Arrow worker indistinguishable from a NULL element (both
-            # arrive as nan), so the batched path yields NULL where
-            # the fold (and the unrolled chain) yield NaN.
-            assert r.arrow is None, r.arrow
-        else:
-            assert repr(r.arrow) == repr(r.fold), (r.id, r.arrow, r.fold)
 
 
-def test_rescore_dim_path_matches_arrow_path_on_fixture(spark, sf_dir):
-    """The dim-unrolled rescore (what dedup_embedding_cosine now uses)
-    must reproduce the Arrow rescore pair-for-pair at repr level over
-    the real fixture's LSH candidate set."""
+def test_rescore_dim_path_matches_fold_on_fixture(spark, sf_dir):
+    """The dim-unrolled rescore (what dedup_embedding_cosine uses) must
+    reproduce the HOF-fold cosine pair-for-pair at repr level over the
+    real fixture's LSH candidate set — with ``dim`` passed and with it
+    derived by majority_dim."""
     from conversation_with_vector_db_spark.operators.ann import (
         with_lsh_bands,
     )
     from conversation_with_vector_db_spark.operators.vector import (
+        cosine_similarity,
         rescore_candidates,
     )
     from conversation_with_vector_db_spark.session import (
@@ -1409,17 +1590,25 @@ def test_rescore_dim_path_matches_arrow_path_on_fixture(spark, sf_dir):
         .distinct()
     )
     vb = parquet_bytes_on_disk(table_path(sf_dir, "embeddings"))
-    arrow = {
+    ea = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
+    eb = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
+    fold = {
         (r.a, r.b): repr(r.sim)
-        for r in rescore_candidates(cands, emb, vec_bytes=vb).collect()
-    }
-    unrolled = {
-        (r.a, r.b): repr(r.sim)
-        for r in rescore_candidates(
-            cands, emb, vec_bytes=vb, dim=64
+        for r in cands.join(ea, "a").join(eb, "b").select(
+            "a", "b",
+            F.round(cosine_similarity(F.col("ea"), F.col("eb")), 4)
+            .alias("sim"),
         ).collect()
     }
-    assert arrow == unrolled
+    assert fold
+    for dim in (64, None):
+        unrolled = {
+            (r.a, r.b): repr(r.sim)
+            for r in rescore_candidates(
+                cands, emb, vec_bytes=vb, dim=dim
+            ).collect()
+        }
+        assert unrolled == fold, dim
 
 
 def test_regex_counts_drop_cols_identical_on_both_branches(spark):

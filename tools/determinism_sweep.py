@@ -17,7 +17,7 @@ though a single parity run passes. The rounding discipline plus
 total-order tie-breaks should make every registered query
 layout-deterministic — this sweep is the falsifiable check, the
 partitioning analogue of the degenerate-input sweep in
-tests/test_queries.py.
+tests/test_empty_corpus.py.
 
 Usage: python tools/determinism_sweep.py [--sf-dir DIR] [--only GLOB]
 """
