@@ -194,14 +194,15 @@ def _ann_1536d_summary() -> dict | None:
 
 
 def _git_rev() -> str | None:
-    """Short rev of the tree this run measured (detail-file regime
-    stamp); None outside a git checkout or without the git binary."""
+    """Rev of the tree this run measured (detail-file regime stamp),
+    suffixed ``-dirty`` when the working tree has uncommitted changes;
+    None outside a git checkout or without the git binary."""
     import subprocess
 
     try:
         return (
             subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
+                ["git", "describe", "--always", "--dirty"],
                 cwd=os.path.dirname(os.path.abspath(__file__)),
                 capture_output=True,
                 text=True,

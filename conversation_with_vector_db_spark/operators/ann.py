@@ -696,9 +696,8 @@ def _stage_centroids(cent_df: DataFrame, table_dir: str) -> str:
     Invisible until a commit's ``meta["centroids"]`` references it —
     the sidecar is staged BEFORE the commit and the manifest publishes
     the pointer atomically with the assignment, so no crash point can
-    leave an assignment probing a model it wasn't built with (the
-    post-commit-publish window the r6 layout had). A writer dying
-    after staging leaves an unreferenced sidecar the age-gated
+    leave an assignment probing a model it wasn't built with. A writer
+    dying after staging leaves an unreferenced sidecar the age-gated
     :func:`ivf_table_vacuum` reaps like any uncommitted segment."""
     rel = f"centroids/m-{uuid.uuid4().hex}"
     cent_df.coalesce(1).write.parquet(f"{table_dir}/{rel}")
@@ -708,33 +707,19 @@ def _stage_centroids(cent_df: DataFrame, table_dir: str) -> str:
 def _load_centroids(spark, table_dir: str, version: int | None = None):
     """Centroid model effective at ``version``: the manifest-published
     ``meta["centroids"]`` pointer (atomic with its assignment — time
-    travel gets the exact model its version committed with). Falls
-    back to the r6 versioned-dir layout (``centroids/v<version>``:
-    newest at or below), then the pre-r6 bare root, for tables written
-    before the meta pointer existed."""
-    import os as _os
-    import re as _re
+    travel gets the exact model its version committed with). Every IVF
+    writer commits that pointer; a version without one raises."""
+    from ..sources.snapshot_log import latest_version, table_meta
 
-    from ..sources.snapshot_log import table_meta
-
+    if version is None:
+        version = latest_version(table_dir)
     rel = table_meta(table_dir, version).get("centroids")
-    if rel is not None:
-        return spark.read.parquet(f"{table_dir}/{rel}")
-    root = f"{table_dir}/centroids"
-    vs = sorted(
-        int(m.group(1))
-        for n in _os.listdir(root)
-        if (m := _re.match(r"^v(\d{8,})$", n))
-    )
-    if not vs:
-        # Pre-r6 layout: the sidecar was the root dir itself.
-        return spark.read.parquet(root)
-    pick = [u for u in vs if version is None or u <= version]
-    if not pick:
-        raise FileNotFoundError(
-            f"no centroid model at or below v{version} in {root}"
+    if rel is None:
+        raise ValueError(
+            f"{table_dir} has no centroid model at v{version}: its "
+            'manifest meta carries no "centroids" pointer'
         )
-    return spark.read.parquet(f"{root}/v{pick[-1]:08d}")
+    return spark.read.parquet(f"{table_dir}/{rel}")
 
 
 def ivf_assign_cells(
@@ -947,11 +932,8 @@ def ivf_table_vacuum(
     pre-vacuum meta walk) deletes immediately, like segments dropped by
     a committed rewrite; an UNREFERENCED sidecar is indistinguishable
     from an in-flight rebalance's staged model, so it only reaps past
-    ``orphan_min_age_sec`` (same rule as uncommitted segments). Legacy
-    r6 ``v<version>`` sidecars keep the floor rule: everything older
-    than the model effective at the window floor goes."""
+    ``orphan_min_age_sec`` (same rule as uncommitted segments)."""
     import os as _os
-    import re as _re
     import shutil as _sh
     import time as _time
 
@@ -1008,22 +990,6 @@ def ivf_table_vacuum(
                     continue  # possibly in-flight rebalance staging
             _sh.rmtree(_os.path.join(root, n), ignore_errors=True)
             deleted.append(rel)
-    # Legacy r6 versioned sidecars: reap below the floor's model.
-    floor = vs[0]
-    cvs = sorted(
-        int(m.group(1))
-        for n in names
-        if (m := _re.match(r"^v(\d{8,})$", n))
-    )
-    at_floor = [u for u in cvs if u <= floor]
-    if not at_floor:
-        return deleted  # floor predates every sidecar; keep all
-    keep_from = at_floor[-1]
-    for u in cvs:
-        if u < keep_from:
-            _sh.rmtree(_os.path.join(root, f"v{u:08d}"),
-                       ignore_errors=True)
-            deleted.append(f"centroids/v{u:08d}")
     return deleted
 
 

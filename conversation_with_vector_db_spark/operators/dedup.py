@@ -1350,97 +1350,3 @@ def duplicated_spans(docs: DataFrame, w: int = 12) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-def jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 64,
-    shingles0: DataFrame | None = None,
-) -> DataFrame:
-    """:func:`jaccard_pairs` with PREFIX-FILTERED candidate generation
-    (Bayardo et al. 2007 "Scaling Up All Pairs Similarity Search";
-    Xiao et al. 2008 PPJoin Lemma 1) — identical output, sub-quadratic
-    candidate volume.
-
-    Under any GLOBAL total order on shingles, two capped sets x, y with
-    ``J(x, y) >= t`` must satisfy ``|x ∩ y| >= α`` for
-    ``α = max(ceil(t*|x|), ceil(t*|y|))`` (the intersection is at least
-    ``t * |x ∪ y| >= t * max(|x|, |y|)``, and it is an integer), and by
-    the prefix-filter lemma their ``(size - α + 1)``-prefixes intersect.
-    Indexing each doc's independent ``|x| - ceil(t*|x|) + 1`` prefix is
-    therefore lossless (those prefixes are at least as long as the
-    pairwise lemma needs). The global order is (document frequency,
-    shingle) ascending — rarest first, the classic choice that makes
-    prefixes collide as little as possible. Candidates then get the
-    exact intersection count via :func:`jaccard_verify` over the FULL
-    capped shingle sets, so results match :func:`jaccard_pairs`
-    bit-for-bit (pinned by test, same oracle).
-
-    Why this is the 100 TB shape: the full inverted-index pairing
-    explodes ``sum(df^2)`` pair occurrences and hash-aggregates a
-    nearly-unique key stream (measured: ~70% of the exec wall at
-    sf0.1); prefix filtering pays two extra LINEAR shuffles (df join +
-    per-doc sort) to shrink the quadratic term by the prefix-collision
-    factor — the classic trade that wins asymptotically. A size-ratio
-    filter (``min >= t * max`` with a 1e-9 slack so float rounding can
-    only ADMIT extra candidates, never drop a qualifying pair) prunes
-    further before verification.
-    """
-    sh_raw = (
-        shingles0
-        if shingles0 is not None
-        else exploded_shingles(df, text_col, id_col, n)
-    )
-    dfreq = (
-        sh_raw.groupBy("shingle").agg(F.count("*").alias("_df"))
-    )
-    if max_df is not None:
-        dfreq = dfreq.filter(F.col("_df") <= max_df)
-    # Capped shingle stream carrying each shingle's global frequency —
-    # feeds prefix construction AND the exact verification below.
-    sh = scoped_cache(
-        sh_raw.join(dfreq.hint("shuffle_hash"), "shingle")
-    )
-    # Per-doc shingles sorted rarest-first under the global (df,
-    # shingle) order; prefix length sz - ceil(t*sz) + 1.
-    lists = sh.groupBy(id_col).agg(
-        F.sort_array(
-            F.collect_list(F.struct("_df", "shingle"))
-        ).alias("_ss")
-    )
-    sz = F.size("_ss")
-    plen = (sz - F.ceil(sz * F.lit(threshold)) + 1).cast("int")
-    prefix = lists.select(
-        F.col(id_col),
-        sz.alias("_sz"),
-        F.explode(F.slice("_ss", 1, plen)).alias("_g"),
-    ).select(id_col, "_sz", F.col("_g.shingle").alias("shingle"))
-    pa = prefix.select(
-        F.col(id_col).alias("a"), F.col("_sz").alias("_sza"), "shingle"
-    )
-    pb = prefix.select(
-        F.col(id_col).alias("b"), F.col("_sz").alias("_szb"), "shingle"
-    )
-    cands = (
-        pa.join(pb.hint("shuffle_hash"), "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .filter(
-            F.least("_sza", "_szb").cast("double")
-            >= F.greatest("_sza", "_szb") * F.lit(threshold) - F.lit(1e-9)
-        )
-        .select("a", "b")
-        .distinct()
-    )
-    return jaccard_verify(
-        df,
-        cands,
-        text_col=text_col,
-        id_col=id_col,
-        n=n,
-        threshold=threshold,
-        shingles=sh.select(id_col, "shingle"),
-    )

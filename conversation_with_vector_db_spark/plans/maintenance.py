@@ -2,9 +2,9 @@
 
 Every Mongo update/delete in the reference becomes a pure
 read-transform-write job here: the *predicate + assignment* is the
-operator, and the write is a keyed overwrite (see
-:mod:`..sources.parquet_io` for the physical upsert/partition
-patterns). Queries below return the post-maintenance table state so the
+operator, and the write is a keyed rewrite committed through
+:mod:`..sources.transactional` (the engine's only table writer).
+Queries below return the post-maintenance table state so the
 transform itself is oracle-checked.
 """
 
@@ -23,8 +23,8 @@ from .registry import query
     change log (_op, _seq); the read reconstructs the current table —
     latest _seq per key wins, deletes drop the key — via one window
     over the LOG only plus an anti-join on the base. Physical side
-    (append_change_log / compact_change_log rewriting only touched
-    partitions) is exercised in tests/test_sources_udf.py; this query
+    (append_change_segment / compact_change_log rewriting only touched
+    partitions) is exercised in tests/test_transactional.py; this query
     oracle-checks the overlay semantics themselves, including an
     upsert-over-delete seq conflict.""",
     oracle="""
@@ -57,7 +57,7 @@ FROM merged
 """,
 )
 def m8_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.parquet_io import merge_overlay
+    from ..sources.transactional import merge_overlay
 
     base = spark.table("embeddings").select("vec_id", "label")
     ups = base.filter(F.col("vec_id") % 40 == 0).select(

@@ -74,10 +74,7 @@ def get_spark(
         # results. Static conf: takes effect on the first session of
         # the process. 4096 entries covers the full 199-query registry
         # sweep; entries are KB-scale compiled classes.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # 100 TB posture: adaptive execution re-plans joins, coalesces
         # post-shuffle partitions, and splits skewed shuffle partitions.
         .config("spark.sql.adaptive.enabled", "true")

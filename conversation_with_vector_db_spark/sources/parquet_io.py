@@ -1,170 +1,17 @@
-"""Physical table maintenance on parquet (SURVEY §2.1 S5-S9).
+"""Parquet read helpers (SURVEY §2.1 S2/S4 and size probes).
 
 The reference's stores (Pinecone upsert/delete, Mongo insertMany, HNSW
-save/load) collapse to parquet layout operations here. The logical
-rewrites are in plans/vector.py (S5-S7 as anti-join ∪ union); this
-module is the WRITE side — how those rewrites hit disk safely.
-
-Scale rules encoded below:
-* partition by the delete/replace unit (``namespace``) so S7 is a
-  partition drop (metadata-only at the table-format layer) and S5/S6
-  rewrite only the touched partitions via dynamic partition overwrite,
-  never the whole table;
-* writes land via write-new-then-swap semantics (overwrite of a
-  partition directory is atomic-enough for the single-writer batch
-  jobs this engine targets; a table format like Iceberg/Delta slots in
-  here unchanged at production).
+save/load) map to table mutations that ALL commit through
+:mod:`.transactional` on :mod:`.snapshot_log`'s CAS manifests — that is
+the engine's only table writer. This module holds only reads: the
+on-disk size of a parquet table (callers' broadcast/AQE cost gates) and
+the text-document source.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_by: tuple[str, ...] = ("namespace",)
-) -> None:
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def append_rows(df: DataFrame, path: str) -> None:
-    """S9: Mongo insert/insertMany (sockets/chat/chatHandler.js:155-164;
-    controllers/initController.js:48) -> append-mode write."""
-    df.write.mode("append").parquet(path)
-
-
-def _dynamic_overwrite(df: DataFrame, path: str, partition_col: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def upsert_by_key(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    partition_col: str = "namespace",
-) -> None:
-    """S5: Pinecone-style upsert (models/embeddingmodel.js:4-12): new
-    records win by identity. Identity is (partition_col, key) — exactly
-    Pinecone's namespace semantics, where the same id in two namespaces
-    is two records; "moving" a key to another partition therefore
-    inserts a new record and never deletes the old identity. Only
-    partitions named in the updates are rewritten (dynamic overwrite);
-    untouched partitions are never read back or rewritten, and a key
-    match in a touched partition's sibling namespace is never
-    clobbered."""
-    current = spark.read.parquet(path)
-    touched = (
-        updates.select(partition_col).distinct()
-    )
-    touched_current = current.join(
-        F.broadcast(touched), partition_col, "left_semi"
-    )
-    merged = touched_current.join(
-        updates.select(partition_col, key), [partition_col, key], "left_anti"
-    ).unionByName(updates)
-    _dynamic_overwrite(merged, path, partition_col)
-
-
-def delete_by_key(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    key: str,
-    partition_col: str = "namespace",
-) -> None:
-    """S6: deleteOne(ids) (models/embeddingmodel.js:14-24) as a
-    partition-scoped anti-join rewrite.
-
-    Identity follows :func:`upsert_by_key`'s (partition_col, key)
-    semantics when ``ids`` carries the partition column — the same id
-    in two namespaces is two records and only the named one dies
-    (Pinecone deletes are namespace-scoped). An ``ids`` frame with
-    only the key column is the documented cross-namespace
-    delete-by-id.
-
-    Partitions the delete EMPTIES are dropped explicitly: dynamic
-    overwrite writes nothing for a zero-row partition, which would
-    leave the old files in place and silently resurrect every deleted
-    row — the same hazard compact_change_log handles."""
-    match_cols = (
-        [partition_col, key] if partition_col in ids.columns else [key]
-    )
-    current = spark.read.parquet(path)
-    victims = current.join(F.broadcast(ids), match_cols, "left_semi")
-    touched = victims.select(partition_col).distinct()
-    touched_vals = [r[0] for r in touched.collect()]
-    survivors = (
-        current.join(F.broadcast(touched), partition_col, "left_semi")
-        .join(F.broadcast(ids), match_cols, "left_anti")
-    )
-    # Materialize before the overwrite (the plan reads `path`) and
-    # learn which touched partitions still have rows.
-    survivors = survivors.localCheckpoint(eager=True)
-    surviving = {
-        r[0] for r in survivors.select(partition_col).distinct().collect()
-    }
-    _dynamic_overwrite(survivors, path, partition_col)
-    for v in touched_vals:
-        if v not in surviving:
-            drop_partition(spark, path, partition_col, v)
-    survivors.unpersist(False)
-
-
-def drop_partition(
-    spark: SparkSession, path: str, partition_col: str, value
-) -> None:
-    """S7: deleteAll() on a namespace (models/embeddingmodel.js:26-35) =
-    deleting the partition directory via the Hadoop FileSystem API — a
-    metadata/listing operation that never scans or rewrites other
-    partitions (dynamic overwrite can't express this: an empty write
-    touches no partitions). Under a table format (Iceberg/Delta) this
-    becomes ALTER TABLE ... DROP PARTITION, same semantics."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/{partition_col}={value}"
-    )
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-
-
-# ---------------------------------------------------------------------------
-# Merge-on-read change log (M1-M7 at 100 TB)
-# ---------------------------------------------------------------------------
-#
-# The read-transform-overwrite form above (upsert_by_key/delete_by_key)
-# is copy-on-write: every mutation rewrites whole partitions, so a
-# steady trickle of single-row patches against a 100 TB table rewrites
-# the table over and over — write amplification is the FIRST thing a
-# real user hits. The merge-on-read alternative:
-#
-#   * mutations APPEND tagged rows (_op upsert|delete, _seq) to a small
-#     side log — O(change) bytes written, never O(partition);
-#   * reads reconstruct the current table: latest log row per identity
-#     wins over base (one window over the LOG ONLY — small between
-#     compactions — plus an anti-join on the base scan). This is the
-#     read-amplification half of the trade;
-#   * a periodic COMPACTION folds the log into the base, rewriting only
-#     the partitions the log touches (dynamic overwrite), then truncates
-#     the log — amortizing the copy-on-write cost over many mutations.
-#
-# This is exactly the Delta/Iceberg/Hudi MOR design re-expressed on
-# bare parquet; swapping a table format in replaces the log with commit
-# metadata and makes compaction transactional, with no caller-visible
-# API change. That swap is DONE: sources/transactional.py routes the
-# same S5-S7 rewrites and this MOR protocol through
-# sources/snapshot_log.py's CAS-committed delta manifests — atomic
-# multi-partition commits, conflict-checked compaction with NO marker
-# fence, snapshot isolation, time travel. It is the engine's primary
-# write path; the marker-fenced helpers below remain ONLY as the
-# documented plain-FS fallback for filesystems that cannot CAS
-# (no hard links / no create-exclusive / no conditional put).
 
 
 def parquet_bytes_on_disk(path: str) -> int | None:
@@ -186,248 +33,6 @@ def parquet_bytes_on_disk(path: str) -> int | None:
         return total if total > 0 else None
     except OSError:
         return None
-
-
-def append_change_log(
-    df: DataFrame, log_path: str, op: str, seq: int
-) -> None:
-    """Append one batch of mutations (``op``: 'upsert' | 'delete') to
-    the side log. ``seq`` orders batches (monotonic writer-assigned —
-    a batch id / commit timestamp); later seq wins at read."""
-    if op not in ("upsert", "delete"):
-        raise ValueError(f"op must be upsert|delete, got {op!r}")
-    (
-        df.withColumn("_op", F.lit(op))
-        .withColumn("_seq", F.lit(seq).cast("long"))
-        .write.mode("append")
-        .parquet(log_path)
-    )
-
-
-def merge_overlay(
-    base: DataFrame, log: DataFrame, identity: list[str]
-) -> DataFrame:
-    """The MOR read: overlay a change log (``_op``, ``_seq`` columns)
-    on a base table — latest ``_seq`` per identity wins, deletes drop
-    the identity. Pure plan: one window over the LOG only + an
-    anti-join on the base."""
-    from pyspark.sql import Window
-
-    # Tiebreak equal _seq deterministically with _op ascending
-    # ('delete' < 'upsert' -> delete wins), exactly as the m8 oracle
-    # does — an arbitrary winner on seq conflicts would make the read
-    # nondeterministic run to run.
-    w = Window.partitionBy(*identity).orderBy(F.desc("_seq"), "_op")
-    latest = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    survivors = base.join(latest.select(*identity), identity, "left_anti")
-    upserts = latest.filter(F.col("_op") == "upsert").drop("_op", "_seq")
-    return survivors.unionByName(upserts)
-
-
-def read_merge_on_read(
-    spark: SparkSession,
-    base_path: str,
-    log_path: str,
-    key: str,
-    partition_col: str = "namespace",
-) -> DataFrame:
-    """Current state of the table: base parquet overlaid with the side
-    change log via :func:`merge_overlay` on the (partition, key)
-    identity."""
-    from pyspark.errors import AnalysisException
-
-    base = spark.read.parquet(base_path)
-    try:
-        log = spark.read.parquet(log_path)
-    except AnalysisException:
-        # Missing log path = genuinely no mutations yet. ONLY that:
-        # a bare except here would also swallow corrupt footers or FS
-        # outages and silently serve stale pre-mutation data
-        # (resurrecting deleted rows) instead of erroring.
-        return base
-    return merge_overlay(base, log, [partition_col, key])
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by compact_change_log at a requested failpoint — test
-    machinery for crash-consistency checks, never raised in normal
-    operation."""
-
-
-class CompactionInProgressError(RuntimeError):
-    """A compaction marker already exists: another compactor may be
-    LIVE. Two live compactors are not safe on bare parquet — the
-    second can read a partition mid-file-swap and persist that torn
-    view (see compact_change_log's concurrency note) — so the marker
-    doubles as a create-exclusive fence. Re-run with ``takeover=True``
-    only after confirming the holder is dead (it crashed and left the
-    marker); the fold then completes idempotently."""
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _marker_path(base_path: str) -> str:
-    return base_path.rstrip("/") + "/_compaction_inprogress"
-
-
-def compaction_in_progress(spark: SparkSession, base_path: str) -> bool:
-    """True while a compaction marker exists — a prior compaction is
-    running or died mid-run. Readers stay correct either way (see
-    compact_change_log's crash analysis); ops tooling uses this to
-    trigger a re-run, which completes the fold idempotently."""
-    fs, hpath = _hadoop_fs(spark, _marker_path(base_path))
-    return fs.exists(hpath)
-
-
-def _log_data_files(spark: SparkSession, log_path: str) -> list[str]:
-    """Snapshot the log's current data files (skipping _SUCCESS-style
-    metadata). The fold reads exactly this set and truncation deletes
-    exactly this set, so an append landing mid-compaction — which
-    always creates NEW files — is never read half-folded and never
-    deleted."""
-    try:
-        fs, hpath = _hadoop_fs(spark, log_path)
-        statuses = fs.listStatus(hpath)
-    except Exception:
-        return []
-    out = []
-    for s in statuses:
-        name = s.getPath().getName()
-        if s.isFile() and not name.startswith(("_", ".")):
-            out.append(s.getPath().toString())
-    return out
-
-
-def compact_change_log(
-    spark: SparkSession,
-    base_path: str,
-    log_path: str,
-    key: str,
-    partition_col: str = "namespace",
-    failpoint: str | None = None,
-    takeover: bool = False,
-) -> None:
-    """Fold the log into the base: rewrite ONLY the partitions the log
-    touches (dynamic overwrite), explicitly drop partitions the fold
-    EMPTIED (dynamic overwrite writes nothing for a zero-row
-    partition, which would resurrect deleted rows once the log is
-    gone), then delete exactly the log files that were folded.
-
-    Crash consistency on bare parquet (a table format would make the
-    whole fold one transactional commit; without one, the protocol
-    leans on two properties: the overlay is IDEMPOTENT — re-applying
-    folded log entries over an already-compacted base reproduces the
-    same rows — and the fold operates on a FILE SNAPSHOT of the log,
-    so concurrent appends, which create new files, are invisible to
-    the fold and survive truncation untouched):
-
-    1. take the ``_compaction_inprogress`` marker (the fence — see
-       below), THEN snapshot the log's data files and record the
-       folded max ``_seq`` in the marker; fence-before-snapshot
-       matters: a snapshot taken outside the fence could list files a
-       finishing compactor is about to truncate
-    2. dynamic-overwrite the touched base partitions from the merge of
-       base + snapshot
-    3. drop base partitions the fold emptied (all their rows deleted)
-    4. delete the snapshot's log files (newer files stay)
-    5. remove the marker
-
-    * die in 1-2 or mid-2: some partitions rewritten, snapshot intact —
-      readers overlay the full log and see exactly the
-      pre-compaction rows (idempotence); a re-run completes the fold.
-    * die in 2-4: base partly/fully compacted, snapshot files (or a
-      subset) intact — overlaying them again is a no-op by
-      idempotence; emptied partitions still read as deleted because
-      the surviving delete entries keep masking them; re-run
-      completes.
-    * die in 4-5: fully consistent; only the marker lingers; any
-      later compaction clears it.
-
-    The residual non-atomic window is step 2's per-partition file
-    swap — directory-rename-sized, the gap a real deployment closes
-    with Delta/Iceberg commit metadata (see the module design note).
-    ``failpoint`` ('after_marker' | 'after_overwrite') raises
-    :class:`SimulatedCrash` at the named step boundary so tests can
-    exercise each window.
-
-    Concurrency invariant: AT MOST ONE LIVE COMPACTOR per table. The
-    crash analysis above covers a compactor that DIES; it does not
-    make two live compactors safe — the second can read a base
-    partition during the first's step-2 file swap and persist that
-    torn view, and its lazily-planned log snapshot can hit
-    files the first already truncated. The marker is therefore taken
-    with CREATE-EXCLUSIVE *before* the log snapshot or any other
-    read, so the whole read set sits inside the fence: a second
-    compactor gets :class:`CompactionInProgressError` instead of a
-    race. Exclusive create is atomic on HDFS; on the local
-    RawLocalFileSystem it is exists-then-create (a theoretical
-    simultaneous-create window — the single-machine deployments it
-    serves), and an object-store deployment swaps in a conditional
-    put or an external coordinator. ``takeover=True`` bypasses the
-    fence for crash recovery — callers assert the holder is dead
-    exactly the way any lease-less protocol must; the re-run then
-    completes the fold idempotently.
-    """
-    fs, marker = _hadoop_fs(spark, _marker_path(base_path))
-    try:
-        out = fs.create(marker, takeover)
-    except Exception as exc:
-        if not takeover and fs.exists(marker):
-            raise CompactionInProgressError(
-                f"compaction marker already present under {base_path}: "
-                "another compactor may be live; re-run with "
-                "takeover=True only after confirming it is dead"
-            ) from exc
-        raise
-    out.close()
-    snapshot = _log_data_files(spark, log_path)
-    if not snapshot:
-        fs.delete(marker, False)
-        return  # nothing to compact
-    log = spark.read.parquet(*snapshot)
-    folded_max = log.agg(F.max("_seq")).first()[0]
-    if folded_max is None:
-        fs.delete(marker, False)
-        return
-    out = fs.create(marker, True)  # we own the fence; record the fold
-    out.write(str(folded_max).encode("utf-8"))
-    out.close()
-    if failpoint == "after_marker":
-        raise SimulatedCrash("after_marker")
-    base = spark.read.parquet(base_path)
-    merged = merge_overlay(base, log, [partition_col, key])
-    touched = log.select(partition_col).distinct()
-    merged_touched = merged.join(
-        F.broadcast(touched), partition_col, "left_semi"
-    )
-    # Materialize before writing: the merged plan READS base_path, which
-    # the dynamic overwrite is about to rewrite.
-    merged_touched = merged_touched.localCheckpoint(eager=True)
-    touched_vals = [r[0] for r in touched.collect()]
-    surviving = {
-        r[0]
-        for r in merged_touched.select(partition_col).distinct().collect()
-    }
-    _dynamic_overwrite(merged_touched, base_path, partition_col)
-    if failpoint == "after_overwrite":
-        raise SimulatedCrash("after_overwrite")
-    for v in touched_vals:
-        if v not in surviving:
-            drop_partition(spark, base_path, partition_col, v)
-    log_fs, _ = _hadoop_fs(spark, log_path)
-    jvm = spark._jvm
-    for f in snapshot:
-        log_fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-    fs.delete(marker, False)
-    merged_touched.unpersist(False)
 
 
 def read_text_documents(

@@ -1,7 +1,7 @@
 """Minimal transactional table format on bare parquet — the commit
-layer the merge-on-read module points at ("swapping a table format in
-replaces the log with commit metadata and makes compaction
-transactional", parquet_io.py).
+layer under :mod:`.transactional`, the engine's only table writer
+(keyed upserts/deletes, partition drops, the merge-on-read change log
+and its compaction all commit here).
 
 Design (the Delta/Iceberg core, re-expressed in ~200 lines):
 
@@ -28,9 +28,7 @@ Design (the Delta/Iceberg core, re-expressed in ~200 lines):
   manifest under the final name or fails ``EEXIST`` — no reader can
   observe a half-written manifest, and exactly one of any number of
   racing writers wins each version. (Object stores swap the hard link
-  for a conditional put / if-none-match; HDFS for create-exclusive.
-  The marker fence in parquet_io covers plain-FS deployments that
-  cannot CAS.)
+  for a conditional put / if-none-match; HDFS for create-exclusive.)
 * Losers RETRY against the new head: appends always commute (replay =
   new live set + my segment); rewrites revalidate that every segment
   they intend to remove is still live — if a concurrent rewrite took
@@ -760,9 +758,8 @@ def compact_snapshots(
 
     Runs as a rewrite, so concurrent appends survive (they are in the
     post-CAS live set) and a concurrent compactor loses cleanly with
-    :class:`CommitConflictError` instead of double-folding — the
-    multi-writer guarantee the marker-fenced bare-parquet compaction
-    cannot give. Retries re-plan from the current head. A compactor
+    :class:`CommitConflictError` instead of double-folding. Retries
+    re-plan from the current head. A compactor
     dying mid-stage leaves only invisible staged files for the
     age-gated vacuum.
 

@@ -1,11 +1,10 @@
-"""Snapshot-log-backed table maintenance — ONE write path (VERDICT r4
-#2): the S5-S7 keyed rewrites, partition drops, and the merge-on-read
-change log all commit through :mod:`.snapshot_log`'s CAS manifests, so
-every mutation is an atomic version with snapshot isolation, conflict
-detection, and time travel. The marker-fenced bare-parquet helpers in
-:mod:`.parquet_io` remain the documented plain-FS fallback for
-deployments that cannot CAS (see compact_change_log's fence note
-there); everything new should use this module.
+"""Snapshot-log-backed table maintenance — the engine's ONLY table
+writer: the S5-S7 keyed rewrites, partition drops, and the
+merge-on-read change log all commit through :mod:`.snapshot_log`'s CAS
+manifests, so every mutation is an atomic version with snapshot
+isolation, conflict detection, and time travel. This module also owns
+the change log's ``_op``/``_seq`` row protocol and its overlay plan
+(:func:`merge_overlay`).
 
 Layout invariants (how partition semantics survive on an opaque
 segment store):
@@ -23,13 +22,12 @@ segment store):
   filtering before any file is opened — partition pruning above the
   parquet layer, exactly what manifests buy at 100 TB.
 * Merge-on-read log segments are named ``data/log-<uuid>`` and carry
-  ``_op``/``_seq`` columns (same row protocol as parquet_io's
-  change log; the overlay plan is shared via
-  :func:`..sources.parquet_io.merge_overlay`). Compaction folds log +
-  touched base segments into fresh tagged segments in ONE
-  conflict-checked commit — concurrent appends survive, a racing
-  compactor loses cleanly with :class:`CommitConflictError`, and no
-  marker fence is needed.
+  ``_op``/``_seq`` columns; reads overlay them on the base with
+  :func:`merge_overlay` (also the m8 maintenance plan's overlay).
+  Compaction folds log + touched base segments into fresh tagged
+  segments in ONE conflict-checked commit — concurrent appends
+  survive, a racing compactor loses cleanly with
+  :class:`CommitConflictError`, and no marker fence is needed.
 
 Copy-on-write ops (upsert/delete/drop) and the MOR log are both
 supported on one table, but CoW ops refuse to run while un-compacted
@@ -52,7 +50,6 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .parquet_io import merge_overlay
 from .snapshot_log import (
     CommitConflictError,
     commit_segments,
@@ -71,6 +68,7 @@ __all__ = [
     "create_partitioned_table",
     "delete_by_key",
     "drop_partition",
+    "merge_overlay",
     "read_merge_on_read",
     "read_table",
     "upsert_by_key",
@@ -908,8 +906,8 @@ def append_change_segment(
     seq: int,
 ) -> int:
     """MOR mutation: append one tagged change-log segment (``op``:
-    'upsert' | 'delete'; ``seq`` orders batches, later wins — same row
-    protocol as parquet_io.append_change_log) as an atomic commit.
+    'upsert' | 'delete'; ``seq`` orders batches, later wins — the row
+    protocol :func:`merge_overlay` reads) as an atomic commit.
     O(change) bytes; the base is untouched."""
     if op not in ("upsert", "delete"):
         raise ValueError(f"op must be upsert|delete, got {op!r}")
@@ -922,6 +920,30 @@ def append_change_segment(
     return commit_segments(
         table_dir, added=[rel], removed=[], op="append_log"
     )
+
+
+def merge_overlay(
+    base: DataFrame, log: DataFrame, identity: list[str]
+) -> DataFrame:
+    """The MOR read: overlay a change log (``_op``, ``_seq`` columns)
+    on a base table — latest ``_seq`` per identity wins, deletes drop
+    the identity. Pure plan: one window over the LOG only + an
+    anti-join on the base."""
+    from pyspark.sql import Window
+
+    # Tiebreak equal _seq deterministically with _op ascending
+    # ('delete' < 'upsert' -> delete wins), exactly as the m8 oracle
+    # does — an arbitrary winner on seq conflicts would make the read
+    # nondeterministic run to run.
+    w = Window.partitionBy(*identity).orderBy(F.desc("_seq"), "_op")
+    latest = (
+        log.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    survivors = base.join(latest.select(*identity), identity, "left_anti")
+    upserts = latest.filter(F.col("_op") == "upsert").drop("_op", "_seq")
+    return survivors.unionByName(upserts)
 
 
 def read_merge_on_read(
@@ -959,10 +981,9 @@ def compact_change_log(
     """Fold the change log into the base in ONE conflict-checked
     commit: log segments + the base segments of partitions the log
     touches are replaced by fresh tagged segments holding the overlay
-    result. Untouched partitions never appear in the commit. This is
-    the transactional replacement for parquet_io.compact_change_log's
-    marker fence: a concurrent compactor loses the CAS and re-plans or
-    aborts with :class:`CommitConflictError`; change segments appended
+    result. Untouched partitions never appear in the commit. No marker
+    fence is needed: a concurrent compactor loses the CAS and re-plans
+    or aborts with :class:`CommitConflictError`; change segments appended
     MID-compaction survive because they are not in the remove set (the
     next compaction folds them); a compactor dying at ANY point leaves
     only invisible staged segments for vacuum — never a torn table."""

@@ -794,91 +794,6 @@ def test_semdedup_partitioning_invariant(spark):
     assert a == b and a
 
 
-def test_prefix_filter_jaccard_equivalence_fixture(spark, sf_dir):
-    """Prefix-filtered candidate generation must reproduce the full
-    inverted-index jaccard_pairs frame exactly on the corpus fixture
-    (same capped-set semantics, same rounding, same threshold)."""
-    from conversation_with_vector_db_spark import fixtures, session
-    from conversation_with_vector_db_spark.operators.dedup import (
-        jaccard_pairs,
-        jaccard_pairs_prefix,
-    )
-    from conversation_with_vector_db_spark.plans.dedup import _docs_bytes
-
-    session.load_tables(spark, sf_dir)
-    fixtures.register_derived_views(spark)
-    corpus = spark.table("corpus")
-    old = {
-        tuple(r)
-        for r in jaccard_pairs(
-            corpus, threshold=0.5, max_df=64, src_bytes=_docs_bytes(sf_dir)
-        ).collect()
-    }
-    new = {
-        tuple(r)
-        for r in jaccard_pairs_prefix(
-            corpus, threshold=0.5, max_df=64
-        ).collect()
-    }
-    assert old == new and old
-
-
-def test_prefix_filter_jaccard_brute_force_random(spark):
-    """Randomized lossless-ness proof beyond the fixture: tiny-vocab
-    random docs (worst case for prefix pruning), brute-force all-pairs
-    Jaccard in Python as the reference — at thresholds 0.5 and 0.8."""
-    import random
-    import re
-    import hashlib
-
-    from conversation_with_vector_db_spark.operators.dedup import (
-        jaccard_pairs_prefix,
-    )
-
-    rng = random.Random(17)
-    vocab = [f"w{i}" for i in range(12)]
-    docs = [
-        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 30))))
-        for i in range(120)
-    ]
-    # Planted near-dup: doc 200 = doc 0 plus a tail.
-    docs.append((200, docs[0][1] + " w0 w1"))
-
-    def shingle_set(text):
-        toks = re.findall("[a-z0-9]+", " ".join(text.lower().split()))
-        return {
-            tuple(toks[i : i + 3]) for i in range(max(len(toks) - 2, 0))
-        } if len(toks) >= 3 else {
-            tuple(toks)
-        } if toks else set()
-
-    # Mirror exploded_shingles: 3-gram windows, but size >= 1 guard
-    # means short docs contribute one short window; replicate via the
-    # operator itself for sizes -- instead compare only against the
-    # OPERATOR's own full-index twin, which is the contract.
-    from conversation_with_vector_db_spark.operators.dedup import (
-        jaccard_pairs,
-    )
-
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    for t in (0.5, 0.8):
-        full = {
-            tuple(r)
-            for r in jaccard_pairs(
-                df, threshold=t, max_df=64, src_bytes=1
-            ).collect()
-        }
-        pfx = {
-            tuple(r)
-            for r in jaccard_pairs_prefix(
-                df, threshold=t, max_df=64
-            ).collect()
-        }
-        assert full == pfx, t
-        if t == 0.5:
-            assert any(a == 0 and b == 200 for a, b, _ in full)
-
-
 def test_cms_never_undercounts_and_counters_merge(spark):
     """Count-min sketch hard guarantees on a Zipf stream whose
     distinct count dwarfs the 4x512 grid: (a) every point estimate

@@ -1,5 +1,5 @@
-"""Physical parquet maintenance (S5-S9), text source (S2/S4),
-multimodal plumbing, and the governed UDF surface (D1-D8)."""
+"""Text source (S2/S4), multimodal plumbing, and the governed UDF
+surface (D1-D8)."""
 
 from __future__ import annotations
 
@@ -20,357 +20,19 @@ from conversation_with_vector_db_spark.operators.multimodal import (
 )
 from conversation_with_vector_db_spark.session import load_tables
 from conversation_with_vector_db_spark.sources.parquet_io import (
-    append_rows,
-    delete_by_key,
-    drop_partition,
     read_text_documents,
-    upsert_by_key,
-    write_partitioned,
 )
 
 
-@pytest.fixture()
-def vector_store(spark, sf_dir, tmp_path):
-    """A namespace-partitioned parquet vector store from embeddings."""
-    load_tables(spark, sf_dir)
-    emb = spark.table("embeddings").select(
-        "vec_id", "label", (F.col("label") % 3).alias("namespace")
-    )
-    path = str(tmp_path / "store")
-    write_partitioned(emb, path, ("namespace",))
-    return path
-
-
-class TestParquetMaintenance:
-    def test_upsert_by_key(self, spark, vector_store):
-        # Identity is (namespace, key): update two rows IN their actual
-        # namespaces, insert one brand-new identity.
-        cur = {
-            r.vec_id: r.namespace
-            for r in spark.read.parquet(vector_store)
-            .filter(F.col("vec_id").isin(0, 1))
-            .collect()
-        }
-        updates = spark.createDataFrame(
-            [(0, 999, cur[0]), (1, 999, cur[1]), (424242, 999, 2)],
-            ["vec_id", "label", "namespace"],
-        )
-        before = spark.read.parquet(vector_store).count()
-        upsert_by_key(spark, vector_store, updates, key="vec_id")
-        after = spark.read.parquet(vector_store)
-        assert after.count() == before + 1  # 2 replaced, 1 inserted
-        assert (
-            after.filter(F.col("vec_id").isin(0, 1, 424242))
-            .filter(F.col("label") == 999)
-            .count()
-            == 3
-        )
-
-    def test_upsert_is_namespace_scoped(self, spark, vector_store):
-        # The same key in a DIFFERENT namespace is a different identity
-        # (Pinecone semantics): updating (ns_a, k) must not clobber
-        # (ns_b, k) even when ns_b is also touched by the batch.
-        store = spark.read.parquet(vector_store)
-        k = store.filter(F.col("namespace") == 0).first().vec_id
-        # Match the store's physical types (label is int32 here) or the
-        # mixed-type partition files become unreadable.
-        updates = spark.createDataFrame(
-            [(k, 999, 0), (987654, 999, 1)], schema=store.schema
-        )
-        # Plant the same key in namespace 1, then touch ns 1 via the
-        # unrelated insert above.
-        upsert_by_key(
-            spark,
-            vector_store,
-            spark.createDataFrame([(k, 111, 1)], schema=store.schema),
-            key="vec_id",
-        )
-        upsert_by_key(spark, vector_store, updates, key="vec_id")
-        after = spark.read.parquet(vector_store)
-        ns1_row = after.filter(
-            (F.col("vec_id") == k) & (F.col("namespace") == 1)
-        ).collect()
-        assert len(ns1_row) == 1 and ns1_row[0].label == 111
-        ns0_row = after.filter(
-            (F.col("vec_id") == k) & (F.col("namespace") == 0)
-        ).collect()
-        assert len(ns0_row) == 1 and ns0_row[0].label == 999
-
-    def test_delete_by_key(self, spark, vector_store):
-        ids = spark.createDataFrame([(5,), (6,)], ["vec_id"])
-        before = spark.read.parquet(vector_store).count()
-        delete_by_key(spark, vector_store, ids, key="vec_id")
-        after = spark.read.parquet(vector_store)
-        assert after.count() == before - 2
-        assert after.filter(F.col("vec_id").isin(5, 6)).count() == 0
-
-    def test_delete_emptying_a_partition_stays_deleted(
-        self, spark, tmp_path
-    ):
-        """Deleting every row of a partition must not resurrect them:
-        dynamic overwrite writes nothing for a zero-row partition, so
-        the emptied directory has to be dropped explicitly (the
-        compact_change_log hazard, verified live in review)."""
-        store = str(tmp_path / "tiny_store")
-        spark.createDataFrame(
-            [(1, 0), (2, 0), (3, 1)], "vec_id long, namespace int"
-        ).write.partitionBy("namespace").parquet(store)
-        delete_by_key(
-            spark,
-            store,
-            spark.createDataFrame([(1,), (2,)], ["vec_id"]),
-            key="vec_id",
-        )
-        rows = sorted(
-            (r.vec_id, r.namespace)
-            for r in spark.read.parquet(store).collect()
-        )
-        assert rows == [(3, 1)]
-
-    def test_delete_by_key_is_namespace_scoped_when_ids_carry_it(
-        self, spark, tmp_path
-    ):
-        """ids carrying the partition column delete ONLY that identity
-        — the same key in another namespace survives (upsert_by_key's
-        (namespace, key) identity; Pinecone deletes are
-        namespace-scoped)."""
-        store = str(tmp_path / "ns_store")
-        spark.createDataFrame(
-            [(7, 0), (7, 1), (8, 0)], "vec_id long, namespace int"
-        ).write.partitionBy("namespace").parquet(store)
-        delete_by_key(
-            spark,
-            store,
-            spark.createDataFrame([(7, 1)], "vec_id long, namespace int"),
-            key="vec_id",
-        )
-        rows = sorted(
-            (r.vec_id, r.namespace)
-            for r in spark.read.parquet(store).collect()
-        )
-        assert rows == [(7, 0), (8, 0)]
-
-    def test_merge_on_read_overlay_and_compaction(
-        self, spark, vector_store, tmp_path
-    ):
-        # MOR: mutations append to a side log; reads overlay latest-wins;
-        # compaction folds the log into only the touched partitions.
-        from conversation_with_vector_db_spark.sources.parquet_io import (
-            append_change_log,
-            compact_change_log,
-            read_merge_on_read,
-        )
-
-        log = str(tmp_path / "log")
-        store = spark.read.parquet(vector_store)
-        schema = store.schema
-        k0 = store.filter(F.col("namespace") == 0).first().vec_id
-        k1 = store.filter(F.col("namespace") == 1).first().vec_id
-        before = store.count()
-
-        # seq 1: patch k0 in ns0; seq 2: delete k1 in ns1 + insert new;
-        # seq 3: re-patch k0 (later seq must win).
-        append_change_log(
-            spark.createDataFrame([(k0, 500, 0)], schema=schema), log,
-            "upsert", 1,
-        )
-        append_change_log(
-            spark.createDataFrame([(k1, 0, 1)], schema=schema), log,
-            "delete", 2,
-        )
-        append_change_log(
-            spark.createDataFrame([(777777, 600, 2)], schema=schema), log,
-            "upsert", 2,
-        )
-        append_change_log(
-            spark.createDataFrame([(k0, 501, 0)], schema=schema), log,
-            "upsert", 3,
-        )
-
-        def check(df):
-            assert df.count() == before  # +1 insert, -1 delete
-            assert (
-                df.filter((F.col("vec_id") == k0) & (F.col("namespace") == 0))
-                .first().label == 501
-            )  # latest seq wins
-            assert (
-                df.filter((F.col("vec_id") == k1) & (F.col("namespace") == 1))
-                .count() == 0
-            )
-            assert df.filter(F.col("vec_id") == 777777).count() == 1
-
-        check(read_merge_on_read(spark, vector_store, log, key="vec_id"))
-        compact_change_log(spark, vector_store, log, key="vec_id")
-        # After compaction the base alone holds the merged state and the
-        # log is gone.
-        check(spark.read.parquet(vector_store))
-        check(read_merge_on_read(spark, vector_store, log, key="vec_id"))
-
-    def test_mor_readers_consistent_across_failed_compaction(
-        self, spark, vector_store, tmp_path
-    ):
-        """VERDICT r2 #6: simulate a writer dying at each compaction
-        step boundary; readers must see the same rows throughout
-        (overlay idempotence), a concurrent append during the dead
-        window must survive, and a re-run must complete the fold and
-        clear the marker."""
-        import pytest
-
-        from conversation_with_vector_db_spark.sources.parquet_io import (
-            SimulatedCrash,
-            append_change_log,
-            compact_change_log,
-            compaction_in_progress,
-            read_merge_on_read,
-        )
-
-        log = str(tmp_path / "log")
-        store = spark.read.parquet(vector_store)
-        schema = store.schema
-        k0 = store.filter(F.col("namespace") == 0).first().vec_id
-        k1 = store.filter(F.col("namespace") == 1).first().vec_id
-        append_change_log(
-            spark.createDataFrame([(k0, 500, 0)], schema=schema), log,
-            "upsert", 1,
-        )
-        append_change_log(
-            spark.createDataFrame([(k1, 0, 1)], schema=schema), log,
-            "delete", 2,
-        )
-
-        def rows(df):
-            # Partitioned read-back appends the partition column last;
-            # normalize column order before comparing.
-            return sorted(
-                tuple(r)
-                for r in df.select("vec_id", "label", "namespace").collect()
-            )
-
-        want = rows(read_merge_on_read(spark, vector_store, log, "vec_id"))
-
-        # Die with the marker written but the base untouched.
-        with pytest.raises(SimulatedCrash):
-            compact_change_log(
-                spark, vector_store, log, "vec_id",
-                failpoint="after_marker",
-            )
-        assert compaction_in_progress(spark, vector_store)
-        assert rows(
-            read_merge_on_read(spark, vector_store, log, "vec_id")
-        ) == want
-
-        # A SECOND compactor arriving while the marker lingers is
-        # fenced out (create-exclusive) — two live compactors could
-        # persist a torn mid-swap read; only an explicit takeover (the
-        # caller asserting the holder is dead) may proceed.
-        from conversation_with_vector_db_spark.sources.parquet_io import (
-            CompactionInProgressError,
-        )
-
-        with pytest.raises(CompactionInProgressError):
-            compact_change_log(spark, vector_store, log, "vec_id")
-        assert rows(
-            read_merge_on_read(spark, vector_store, log, "vec_id")
-        ) == want
-
-        # Die with the base fully compacted but the log not truncated:
-        # readers re-apply the folded entries — idempotent, same rows.
-        with pytest.raises(SimulatedCrash):
-            compact_change_log(
-                spark, vector_store, log, "vec_id",
-                failpoint="after_overwrite", takeover=True,
-            )
-        assert compaction_in_progress(spark, vector_store)
-        assert rows(
-            read_merge_on_read(spark, vector_store, log, "vec_id")
-        ) == want
-
-        # A writer appends while the dead compaction's log lingers —
-        # blind log deletion would lose this batch.
-        append_change_log(
-            spark.createDataFrame([(888888, 600, 2)], schema=schema), log,
-            "upsert", 9,
-        )
-
-        # Recovery is a takeover re-run: folds everything, clears the
-        # marker; after that the fence is open again.
-        compact_change_log(
-            spark, vector_store, log, "vec_id", takeover=True
-        )
-        assert not compaction_in_progress(spark, vector_store)
-        got = rows(spark.read.parquet(vector_store))
-        assert got == sorted(want + [(888888, 600, 2)])
-        # Log fully truncated (nothing newer than the fold).
-        with pytest.raises(Exception):
-            spark.read.parquet(log).collect()
-
-    def test_mor_compaction_drops_fully_deleted_partition(
-        self, spark, vector_store, tmp_path
-    ):
-        """Deletes that empty an entire partition must NOT resurrect
-        after compaction: dynamic overwrite writes nothing for a
-        zero-row partition, so compaction must drop the emptied
-        partition directory explicitly before discarding the folded
-        delete entries."""
-        from conversation_with_vector_db_spark.sources.parquet_io import (
-            append_change_log,
-            compact_change_log,
-            read_merge_on_read,
-        )
-
-        log = str(tmp_path / "log")
-        store = spark.read.parquet(vector_store)
-        schema = store.schema
-        ns1 = store.filter(F.col("namespace") == 1).select(
-            "vec_id", "label", "namespace"
-        )
-        assert ns1.count() > 0
-        append_change_log(ns1.select("vec_id", "label", "namespace")
-                          .selectExpr(*schema.fieldNames()), log,
-                          "delete", 1)
-        # Overlay read already hides the namespace.
-        assert (
-            read_merge_on_read(spark, vector_store, log, "vec_id")
-            .filter(F.col("namespace") == 1).count() == 0
-        )
-        compact_change_log(spark, vector_store, log, "vec_id")
-        # After compaction + log truncation the rows must STAY deleted.
-        assert (
-            spark.read.parquet(vector_store)
-            .filter(F.col("namespace") == 1).count() == 0
-        )
-        assert (
-            read_merge_on_read(spark, vector_store, log, "vec_id")
-            .filter(F.col("namespace") == 1).count() == 0
-        )
-        # Untouched partitions survive.
-        assert (
-            spark.read.parquet(vector_store)
-            .filter(F.col("namespace") == 0).count() > 0
-        )
-
-    def test_drop_partition(self, spark, vector_store):
-        drop_partition(spark, vector_store, "namespace", 1)
-        after = spark.read.parquet(vector_store)
-        assert after.filter(F.col("namespace") == 1).count() == 0
-        assert after.filter(F.col("namespace") == 0).count() > 0
-
-    def test_append_rows(self, spark, tmp_path):
-        path = str(tmp_path / "log")
-        df = spark.range(10).select(F.col("id").alias("event_id"))
-        append_rows(df, path)
-        append_rows(df, path)
-        assert spark.read.parquet(path).count() == 20
-
-    def test_read_text_documents(self, spark, tmp_path):
-        p = tmp_path / "docs"
-        p.mkdir()
-        (p / "a.txt").write_text("hello spark engine")
-        (p / "b.txt").write_text("second document\nwith two lines")
-        df = read_text_documents(spark, str(p))
-        rows = {r.source_path.split("/")[-1]: r.text for r in df.collect()}
-        assert rows["a.txt"] == "hello spark engine"
-        assert "two lines" in rows["b.txt"]
+def test_read_text_documents(spark, tmp_path):
+    p = tmp_path / "docs"
+    p.mkdir()
+    (p / "a.txt").write_text("hello spark engine")
+    (p / "b.txt").write_text("second document\nwith two lines")
+    df = read_text_documents(spark, str(p))
+    rows = {r.source_path.split("/")[-1]: r.text for r in df.collect()}
+    assert rows["a.txt"] == "hello spark engine"
+    assert "two lines" in rows["b.txt"]
 
 
 class TestMultimodalPlumbing:

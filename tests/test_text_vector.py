@@ -230,8 +230,11 @@ class TestIvfIndexed:
     def test_upsert_rejects_vectors_it_cannot_score(self, spark, tmp_path):
         """A vector whose size differs from the index's (or a NULL one)
         could never be scored: the upsert must raise and commit
-        nothing, instead of landing it in cell 0 with a NULL sim."""
+        nothing, instead of landing it in cell 0 with a NULL sim. A
+        version whose manifest meta has no centroid pointer (the empty
+        create at v0) raises naming the table and the version."""
         from conversation_with_vector_db_spark.operators.ann import (
+            _load_centroids,
             ivf_table_create,
             ivf_table_upsert,
         )
@@ -243,6 +246,9 @@ class TestIvfIndexed:
                                         per_cluster=10, dim=4)
         t = str(tmp_path / "ivf_dims")
         ivf_table_create(spark, corpus, t, nlist=4)
+        with pytest.raises(ValueError) as no_model:
+            _load_centroids(spark, t, 0)
+        assert t in str(no_model.value) and "v0" in str(no_model.value)
         v0 = latest_version(t)
         for bad in ([1.0, 2.0, 3.0], None):
             updates = spark.createDataFrame(

@@ -1,7 +1,7 @@
 """Snapshot-log-backed maintenance (sources/transactional.py): the
-unified S5-S7 + merge-on-read write path — keyed upserts/deletes,
-manifest-only partition drops, transactional log compaction, and the
-multi-writer races the marker-fenced bare-parquet path cannot win."""
+engine's only table writer — keyed upserts/deletes, manifest-only
+partition drops, transactional log compaction (including a compactor
+that dies before its commit), and multi-writer races."""
 
 from __future__ import annotations
 
@@ -257,6 +257,85 @@ class TestMergeOnRead:
         assert _rows(read_merge_on_read(spark, store, key="vec_id")) == (
             overlay
         )
+
+    def test_compactor_dying_before_commit_changes_nothing(
+        self, spark, store, monkeypatch
+    ):
+        """A compactor that dies between staging its folded segments and
+        its manifest commit leaves readers on the same rows and the head
+        on the same version; an unpatched re-run folds the log, and
+        vacuum reaps the dead run's staged segments."""
+        from conversation_with_vector_db_spark.sources import (
+            transactional as tx,
+        )
+
+        append_change_segment(
+            spark,
+            spark.createDataFrame(
+                [(0, 1000, 0), (33, 1000, 0)],
+                "vec_id long, label int, namespace int",
+            ),
+            store,
+            op="upsert",
+            seq=1,
+        )
+        append_change_segment(
+            spark,
+            spark.createDataFrame(
+                [(1, 0, 1)], "vec_id long, label int, namespace int"
+            ),
+            store,
+            op="delete",
+            seq=2,
+        )
+        want = _rows(read_merge_on_read(spark, store, key="vec_id"))
+        head = latest_version(store)
+        data = os.path.join(store, "data")
+        before = set(os.listdir(data))
+
+        def die(*a, **kw):
+            raise RuntimeError("compactor died before its commit")
+
+        monkeypatch.setattr(tx, "commit_segments", die)
+        with pytest.raises(RuntimeError, match="died"):
+            compact_change_log(spark, store, key="vec_id")
+        monkeypatch.undo()
+        staged = set(os.listdir(data)) - before
+        assert staged
+        assert latest_version(store) == head
+        assert _rows(read_merge_on_read(spark, store, key="vec_id")) == want
+
+        compact_change_log(spark, store, key="vec_id")
+        assert latest_version(store) == head + 1
+        assert [s for s in live_segments(store) if "log-" in s] == []
+        assert _rows(read_table(spark, store)) == want
+
+        deleted = vacuum(store, keep_versions=1, orphan_min_age_sec=0.0)
+        assert {os.path.join("data", n) for n in staged} <= set(deleted)
+        assert not staged & set(os.listdir(data))
+        assert _rows(read_table(spark, store)) == want
+
+    def test_delete_log_emptying_a_namespace_stays_deleted(
+        self, spark, store
+    ):
+        """A delete log naming every row of namespace 1: after
+        compaction the rows stay deleted and no live segment carries the
+        namespace-1 tag, while the other namespaces are untouched."""
+        ns1 = read_table(spark, store).filter(F.col("namespace") == 1)
+        assert ns1.count() == 10
+        append_change_segment(spark, ns1, store, op="delete", seq=1)
+        assert (
+            read_merge_on_read(spark, store, key="vec_id")
+            .filter(F.col("namespace") == 1)
+            .count()
+            == 0
+        )
+        compact_change_log(spark, store, key="vec_id")
+        assert [s for s in live_segments(store) if "namespace=1" in s] == []
+        assert [s for s in live_segments(store) if "log-" in s] == []
+        after = read_merge_on_read(spark, store, key="vec_id")
+        assert after.filter(F.col("namespace") == 1).count() == 0
+        assert after.count() == 20
 
     def test_compaction_folds_only_touched_partitions(self, spark, store):
         untouched = {
