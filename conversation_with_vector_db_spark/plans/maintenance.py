@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import query
+from .registry import query, scratch_dir
 
 
 @query(
@@ -519,19 +519,10 @@ SELECT (SELECT count(*) FROM after_drop) AS n_rows,
 """,
 )
 def s14_snapshot_log_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.snapshot_log import latest_version
 
-    # Fresh deterministic store per call; the previous call's dir is
-    # reaped first so repeated parity/bench runs don't accumulate junk.
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_snaplog_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("snaplog")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -596,11 +587,6 @@ SELECT (SELECT count(*) FROM fin) AS n_final,
 """,
 )
 def s15_branch_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import branching as br
     from ..sources.snapshot_log import (
         append_snapshot,
@@ -609,9 +595,7 @@ def s15_branch_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_branch_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("branch")
 
     docs = spark.table("documents").select("doc_id", "n_chars")
     create_table(t)
@@ -669,17 +653,10 @@ SELECT (SELECT count(*) FROM v1) AS n_v1,
 """,
 )
 def s16_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources.datasource import register
     from ..sources.snapshot_log import append_snapshot, create_table
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_datasource_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("datasource")
 
     docs = spark.table("documents").select("doc_id", "n_chars")
     create_table(t)
@@ -874,11 +851,6 @@ ORDER BY bucket
 """,
 )
 def a16_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources.rollup import rollup_refresh, rollup_read
     from ..sources.snapshot_log import (
         append_snapshot,
@@ -886,10 +858,8 @@ def a16_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         create_table,
     )
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_rollup_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    src = os.path.join(parent, uuid.uuid4().hex + "-src")
-    rup = os.path.join(parent, uuid.uuid4().hex + "-rollup")
+    src = scratch_dir("rollup")
+    rup = src + "-rollup"
 
     ev = spark.table("events").select("event_id", "ts", "value")
     create_table(src)
@@ -965,18 +935,11 @@ FROM fin GROUP BY 1 ORDER BY grp
 def a25_ivm_group_aggregate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.rollup import ivm_read, ivm_refresh
     from ..sources.snapshot_log import compact_snapshots
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_ivm_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    src = os.path.join(parent, uuid.uuid4().hex)
+    src = scratch_dir("ivm")
     view = src + "-view"
 
     base = spark.table("embeddings").select(
@@ -1186,16 +1149,9 @@ FROM fin
 def m13_merge_into_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_merge_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("merge")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1275,16 +1231,9 @@ SELECT (SELECT count(*) FROM head) AS n_rows,
 def s17_schema_evolution_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import evolution as ev
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_evo_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("evo")
 
     docs = spark.table("documents")
     v1 = ev.create_evolved_table(
@@ -1348,17 +1297,10 @@ SELECT (SELECT count(*) FROM kept) AS n_rows,
 def m14_delete_where_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.snapshot_log import latest_version
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_delw_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("delw")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1403,17 +1345,10 @@ ORDER BY version
 """,
 )
 def m15_table_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.snapshot_log import table_history
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_hist_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("hist")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1475,17 +1410,10 @@ SELECT
 """,
 )
 def m16_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.snapshot_log import latest_version
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_cdf_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("cdf")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1576,11 +1504,6 @@ FROM fin
 def m18_restore_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.snapshot_log import (
         latest_version,
@@ -1588,9 +1511,7 @@ def m18_restore_lifecycle(
         table_history,
     )
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_restore_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("restore")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1682,17 +1603,10 @@ FROM fin GROUP BY 1 ORDER BY grp
 def a26_ivm_minmax_aggregate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
     from ..sources.rollup import ivm_read_minmax, ivm_refresh_minmax
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_ivmm_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    src = os.path.join(parent, uuid.uuid4().hex)
+    src = scratch_dir("ivmm")
     view = src + "-view"
 
     base = spark.table("embeddings").select(
@@ -1776,16 +1690,9 @@ FROM fin
 def m20_foreign_key_lifecycle(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
 
-    parent_dir = os.path.join(tempfile.gettempdir(), "cvdb_fk_query")
-    shutil.rmtree(parent_dir, ignore_errors=True)
-    t = os.path.join(parent_dir, uuid.uuid4().hex)
+    t = scratch_dir("fk")
     p = t + "-parent"
 
     base = spark.table("embeddings").select(
@@ -1872,16 +1779,9 @@ FROM fin GROUP BY 1 ORDER BY namespace
 def m19_merge_sync_by_source(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_sync_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("sync")
 
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1967,16 +1867,9 @@ FROM fin
 def m17_check_constraints(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..sources import transactional as tx
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_check_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    t = os.path.join(parent, uuid.uuid4().hex)
+    t = scratch_dir("check")
 
     base = spark.table("embeddings").select(
         "vec_id",

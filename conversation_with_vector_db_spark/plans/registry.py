@@ -11,6 +11,11 @@ genuinely non-SQL-expressible operators omit it).
 from __future__ import annotations
 
 import functools
+import glob
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -92,6 +97,34 @@ def query(
         return wrapped
 
     return deco
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive, owned by another user
+    return True
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh directory for a query's scratch table, under the
+    per-process parent ``<tmp>/cvdb_<tag>_query_<pid>``. This
+    process's earlier scratch tables for ``tag``, and those of exited
+    processes, are reaped first, so repeated runs do not pile up. A
+    query's frame is lazy, so its table must outlive the call: a
+    parent shared across processes would let a second process running
+    the same query delete it before the first frame is read."""
+    prefix = os.path.join(tempfile.gettempdir(), f"cvdb_{tag}_query_")
+    for stale in glob.glob(prefix + "*"):
+        pid = stale[len(prefix):]
+        if pid.isdigit() and not _pid_alive(int(pid)):
+            shutil.rmtree(stale, ignore_errors=True)
+    parent = f"{prefix}{os.getpid()}"
+    shutil.rmtree(parent, ignore_errors=True)
+    return os.path.join(parent, uuid.uuid4().hex)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .registry import query
+from .registry import query, scratch_dir
 
 #: Fixed query terms for the lexical half — present at mid-range
 #: document frequency in the fixture vocabulary, so idf is
@@ -302,10 +302,6 @@ ORDER BY invariant
 """,
 )
 def text_bm25_indexed_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-    import uuid
     import zlib
 
     from ..operators.retrieval import (
@@ -315,9 +311,7 @@ def text_bm25_indexed_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_write_index,
     )
 
-    parent = os.path.join(tempfile.gettempdir(), "cvdb_lexidx_query")
-    shutil.rmtree(parent, ignore_errors=True)
-    path = os.path.join(parent, uuid.uuid4().hex)
+    path = scratch_dir("lexidx")
 
     docs = spark.table("documents")
     bm25_write_index(docs, path)

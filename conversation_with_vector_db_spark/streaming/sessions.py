@@ -20,14 +20,21 @@ TTL session state. The Spark-native equivalents:
   on activity, expires when the watermark passes last-activity + TTL,
   and the expired session is emitted exactly once (the final answer
   emit).
-* :func:`append_sink_query` — X8/S9/S11: foreachBatch writer appending
-  finalized rows to a parquet table idempotently (batch id recorded —
-  reruns of a batch overwrite instead of duplicating).
+* :func:`snapshot_append_sink_query` — X8/S9/S11: foreachBatch writer
+  committing each micro-batch to a snapshot-log table exactly once.
 * :func:`streaming_minhash_dedup_sink` — ingest-time NEAR-dup gate:
   each micro-batch is checked against the accepted corpus through a
-  persistent MinHash band index (parquet store, not stream state —
-  the index grows with the corpus, not a watermark horizon), with
-  batch-id-scoped writes for exactly-once replay.
+  persistent MinHash band index (snapshot-log stores, not stream state
+  — the index grows with the corpus, not a watermark horizon).
+
+Exactly-once: every foreachBatch sink here writes a micro-batch through
+ONE commit, :func:`_commit_batch` (the snapshot log's txn append with
+the sink as the app id and the micro-batch id as the txn version), and
+the dedup gates read their stores through :func:`_read_store` (rows of
+earlier batches only). The exceptions are :func:`streaming_ivm_sink`,
+which skips the segment of a batch that nets to zero, and
+:func:`streaming_index_upsert_sink`, which commits through
+``ivf_table_upsert``.
 
 tests/test_streaming.py drives each against the batch equivalents in
 plans/streaming_batch.py.
@@ -213,12 +220,68 @@ def session_accumulator(
     )
 
 
-def _write_batch_dir(df: DataFrame, root: str, batch_id: int) -> None:
-    """THE idempotent-replay write convention, defined once: every
-    foreachBatch sink in this module lands each micro-batch in a
-    ``batch_id=N`` subdirectory with overwrite, so a replayed batch
-    rewrites its own directory instead of double-appending."""
-    df.write.mode("overwrite").parquet(f"{root}/batch_id={batch_id}")
+def _commit_batch(
+    df: DataFrame,
+    table_dir: str,
+    app: str,
+    batch_id: int,
+    stamps: dict | None = None,
+) -> None:
+    """THE exactly-once micro-batch commit: create the snapshot-log
+    table if absent, stamp ``batch_id`` (then any ``stamps``) as
+    columns, and append with the txn protocol — app id = the sink,
+    txn version = the batch id.
+
+    * Replay: a batch whose txn already committed (crash after this
+      commit, before the stream checkpoint advanced) is skipped. It is
+      still drained through a no-op write, because Spark fails a batch
+      whose stateful upstream's state stores did not commit.
+    * Crash between the segment write and the manifest commit: only an
+      invisible age-gated orphan is left.
+    * Ownership: a batch id below the stored txn means a FRESH
+      checkpoint restarted ids at 0 against an existing store. Its
+      batches would be skipped as replays (and a gate's before-batch
+      reads would hide the stored corpus), so it raises. A crash
+      replay re-runs only the last batch (``batch_id == stored``).
+
+    ``append_snapshot_txn`` is looked up on the module at call time,
+    so a test can intercept it."""
+    from ..sources import snapshot_log as sl
+
+    if not sl.versions(table_dir):
+        sl.create_table(table_dir)
+    stored = sl.last_txn_version(table_dir, app)
+    if stored is not None and batch_id < stored:
+        raise ValueError(
+            f"{app}: batch_id {batch_id} < stored txn {stored} — this "
+            f"checkpoint does not own store {table_dir!r}; reuse the "
+            f"original checkpoint dir or start a fresh store"
+        )
+    stamped = df.withColumns(
+        {"batch_id": F.lit(batch_id).cast("long"), **(stamps or {})}
+    )
+    if sl.append_snapshot_txn(
+        stamped, table_dir, app=app, txn_version=batch_id
+    ) is None:
+        df.write.format("noop").mode("overwrite").save()
+
+
+def _read_store(
+    spark: SparkSession, table_dir: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """A store's rows committed by batches before ``before_batch`` (all
+    rows when None), or None while it has no committed segment. The
+    filter keeps a replayed batch from reading its own output, so its
+    recompute matches the original run."""
+    from ..sources.snapshot_log import read_snapshot
+
+    try:
+        df = read_snapshot(spark, table_dir)
+    except (FileNotFoundError, ValueError):
+        return None  # table absent or no committed segments yet
+    if before_batch is None:
+        return df
+    return df.filter(F.col("batch_id") < before_batch)
 
 
 CONTINUATION_SCHEMA = StructType(
@@ -248,10 +311,12 @@ def continuation_sink(
     it, plus the next ``tool_call`` while rounds remain, back into the
     SOURCE directory — the stream consumes its own continuations until
     every run reaches its depth and the loop drains. Token-bearing
-    chunks land in ``out_dir`` under a batch-id subdirectory (the X8
-    exactly-once append); the feedback append is at-least-once on
-    crash-replay, deduplicable downstream by the (run_id, kind, round)
-    natural key.
+    chunks commit to the snapshot-log table ``out_dir`` exactly once
+    (:func:`_commit_batch`, app id ``continuation``). The feedback
+    append into the source directory is plain parquet, because that
+    directory is the file-source input, not a table: it is
+    at-least-once on crash-replay (a replayed batch appends again),
+    deduplicable downstream by the (run_id, kind, round) natural key.
     """
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -281,9 +346,10 @@ def continuation_sink(
             "depth",
         )
         try:
-            _write_batch_dir(
+            _commit_batch(
                 batch_df.filter(F.col("kind") != "tool_call"),
                 out_dir,
+                "continuation",
                 batch_id,
             )
             feedback = results.unionByName(next_calls)
@@ -299,37 +365,6 @@ def continuation_sink(
     )
 
 
-def append_sink_query(
-    result_stream: DataFrame,
-    target_dir: str,
-    checkpoint_dir: str,
-    output_mode: str = "update",
-):
-    """X8/S9: idempotent sink via foreachBatch — each micro-batch
-    writes to a batch-id subdirectory with overwrite, so a replayed
-    batch after failure cannot double-append (the engine's answer to
-    the reference's non-transactional Mongo double-write).
-
-    With the default ``output_mode="update"`` over an AGGREGATING
-    upstream, the target is a table VERSIONED BY BATCH, not an append
-    log: every updating batch lands its current per-key values in its
-    own ``batch_id=N`` directory, and a reader wanting latest state
-    must take each key's row from its max batch_id (the convention
-    tests/test_streaming.py uses). Pass ``output_mode="append"`` for
-    finalized-rows upstreams (watermark-expired windows, append-only
-    streams), where the directories together form a true append log.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch_dir(batch_df, target_dir, batch_id)
-
-    return (
-        result_stream.writeStream.outputMode(output_mode)
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def snapshot_append_sink_query(
     result_stream: DataFrame,
     table_dir: str,
@@ -337,37 +372,21 @@ def snapshot_append_sink_query(
     output_mode: str = "update",
     app_id: str = "stream-sink",
 ):
-    """X8/S9 through the ONE transactional write path: each micro-batch
-    commits to a snapshot-log table via :func:`append_snapshot_txn`
-    with the stream's batch id as the transaction version, so batch
-    writes share atomicity/time-travel/vacuum with the CoW and MOR
-    paths instead of the bare-parquet ``batch_id=N`` convention.
+    """X8/S9: each micro-batch commits to the snapshot-log table
+    ``table_dir`` exactly once through :func:`_commit_batch`, so batch
+    writes share atomicity, time travel and vacuum with the CoW and
+    MOR paths.
 
-    Exactly-once without overwrite: a replayed batch (crash between
-    the data write and the stream-checkpoint advance) is detected by
-    the committed txn version and SKIPPED; a crash between the segment
-    write and the manifest commit leaves an invisible orphan the
-    age-gated vacuum reaps — a torn batch is unobservable by
-    construction. The ``batch_id`` rides as a COLUMN (segments are
-    immutable; no directory keying), so the ``update``-mode
-    latest-state read stays the familiar max-batch_id window."""
-    from ..sources.snapshot_log import (
-        append_snapshot_txn,
-        create_table,
-        versions,
-    )
+    ``batch_id`` rides as a COLUMN. With the default
+    ``output_mode="update"`` over an AGGREGATING upstream, the table
+    is versioned by batch, not an append log: each batch commits its
+    current per-key values, and the latest state of a key is its row
+    with the max ``batch_id``. Pass ``output_mode="append"`` for
+    finalized-rows upstreams (watermark-expired windows, append-only
+    streams), where the batches together form a true append log."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not versions(table_dir):
-            create_table(table_dir)
-        append_snapshot_txn(
-            batch_df.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ),
-            table_dir,
-            app=app_id,
-            txn_version=batch_id,
-        )
+        _commit_batch(batch_df, table_dir, app_id, batch_id)
 
     return (
         result_stream.writeStream.outputMode(output_mode)
@@ -429,7 +448,7 @@ def streaming_minhash_dedup_sink(
     The exact-dup gate (:func:`streaming_exact_dedup`) keys stream
     state by content hash; near-dup state cannot live in stream state
     (the index grows with the corpus, not a watermark horizon), so the
-    index is an external parquet store — the same
+    index is an external store — the same
     persisted-signature-index design as the batch
     ``dedup_incremental_minhash`` query, fed incrementally:
 
@@ -437,16 +456,10 @@ def streaming_minhash_dedup_sink(
     * ``store_dir/accepted``  — (doc_id, text) of accepted docs
     * ``store_dir/decisions`` — per-doc verdicts with provenance
 
-    Each store is a SNAPSHOT-LOG TABLE: batches commit through
-    :func:`..sources.snapshot_log.append_snapshot_txn` with the stream
-    batch id as the transaction version, so the streaming gate shares
-    the ONE transactional write path (atomic CAS manifests,
-    time travel, vacuum) with the CoW/MOR batch paths. ``batch_id``
-    rides as a column; store reads filter to ``batch_id < N`` so a
-    replaying batch never sees its own partial output, a replayed
-    store commit is detected by its txn version and skipped, and a
-    crash between a segment write and its manifest commit leaves an
-    invisible age-gated orphan — never a torn or doubled batch.
+    Each store is a snapshot-log table written by :func:`_commit_batch`
+    (app id ``minhash-gate``) and read by :func:`_read_store`, which
+    keeps a replaying batch from seeing its own partial output — never
+    a torn or doubled batch.
 
     Per batch: band keys of the new docs hash-join the stored index
     (directional — the store never self-pairs), candidates get exact
@@ -465,79 +478,15 @@ def streaming_minhash_dedup_sink(
         lsh_band_keys,
         minhash_signatures,
     )
-    from ..sources.snapshot_log import (
-        append_snapshot_txn,
-        create_table,
-        last_txn_version,
-        read_snapshot,
-        versions,
-    )
     from pyspark.sql import Window
-
-    _GATE_APP = "minhash-gate"
-
-    def _read_store_all(
-        spark: SparkSession, path: str
-    ) -> DataFrame | None:
-        try:
-            return read_snapshot(spark, path)
-        except (FileNotFoundError, ValueError):
-            return None  # table absent or no committed segments yet
-
-    def _read_store(
-        spark: SparkSession, path: str, before_batch: int
-    ) -> DataFrame | None:
-        df = _read_store_all(spark, path)
-        if df is None:
-            return None
-        return df.filter(F.col("batch_id") < before_batch)
-
-    def _commit_store(
-        df: DataFrame, path: str, batch_id: int
-    ) -> None:
-        if not versions(path):
-            create_table(path)
-        append_snapshot_txn(
-            df.withColumn("batch_id", F.lit(batch_id).cast("long")),
-            path,
-            app=_GATE_APP,
-            txn_version=batch_id,
-        )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = batch_df.select("doc_id", "text").dropDuplicates(
             ["doc_id"]
         )
-        accepted_dir = f"{store_dir}/accepted"
-        accepted_prev = None
-        # Checkpoint/store pairing guard: exactly-once replay couples
-        # the stream checkpoint to the store's batch-id numbering. A
-        # FRESH checkpoint pointed at an existing store restarts ids
-        # at 0, which would hide the accepted corpus (reads filter
-        # batch_id < N) — refuse loudly instead of silently
-        # corrupting corpus state. The committed TXN VERSION is the
-        # authoritative high-water mark (it can never be blinded by a
-        # filtered view). Legit crash-replay re-runs the LAST batch:
-        # batch_id == stored txn is fine (and skipped at commit).
-        stored_txn = (
-            last_txn_version(accepted_dir, _GATE_APP)
-            if versions(accepted_dir)
-            else None
-        )
-        if stored_txn is not None and batch_id < stored_txn:
-            raise ValueError(
-                f"streaming_minhash_dedup_sink: batch_id "
-                f"{batch_id} < stored txn {stored_txn} — this "
-                f"checkpoint does not own store {store_dir!r}; "
-                f"reuse the original checkpoint dir or start a "
-                f"fresh store"
-            )
-        accepted_all = _read_store_all(spark, accepted_dir)
-        if accepted_all is not None:
-            accepted_prev = accepted_all.filter(
-                F.col("batch_id") < batch_id
-            )
+        accepted_prev = _read_store(spark, f"{store_dir}/accepted", batch_id)
+        if accepted_prev is not None:
             # At-least-once re-delivery guard: a doc_id already in the
             # accepted corpus is a no-op — without this, its band keys
             # match its own stored keys and the degenerate self-pair
@@ -620,7 +569,9 @@ def streaming_minhash_dedup_sink(
             # committed, and lands only the missing ones — the
             # recompute is deterministic because every read above
             # filters batch_id < N.
-            _commit_store(df, f"{store_dir}/{name}", batch_id)
+            _commit_batch(
+                df, f"{store_dir}/{name}", "minhash-gate", batch_id
+            )
         rejected.unpersist()
 
     return (
@@ -644,8 +595,9 @@ def streaming_semantic_dedup_sink(
     previously-accepted vector under a FROZEN centroid model, and only
     non-duplicates enter the corpus.
 
-    Stores (all snapshot-log tables, txn-tagged with the batch id —
-    replays skip, crashes leave invisible orphans):
+    Stores (all snapshot-log tables written by :func:`_commit_batch`,
+    app id ``semantic-gate`` — replays skip, crashes leave invisible
+    orphans):
 
     * ``store_dir/model``     — the centroid model (cluster, q), fitted
       ONCE on the first non-empty batch (`quantized_lloyd_fit`) and
@@ -674,53 +626,14 @@ def streaming_semantic_dedup_sink(
         quantized_lloyd_fit,
     )
     from ..operators.vector import rescore_candidates
-    from ..sources.snapshot_log import (
-        append_snapshot_txn,
-        create_table,
-        last_txn_version,
-        read_snapshot,
-        versions,
-    )
     from pyspark.sql import Window
-
-    _GATE_APP = "semantic-gate"
-
-    def _read_store(spark, path, before_batch):
-        try:
-            df = read_snapshot(spark, path)
-        except (FileNotFoundError, ValueError):
-            return None
-        return df.filter(F.col("batch_id") < before_batch)
-
-    def _commit_store(df, path, batch_id):
-        if not versions(path):
-            create_table(path)
-        append_snapshot_txn(
-            df.withColumn("batch_id", F.lit(batch_id).cast("long")),
-            path,
-            app=_GATE_APP,
-            txn_version=batch_id,
-        )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = batch_df.select("vec_id", "embedding").dropDuplicates(
             ["vec_id"]
         )
-        accepted_dir = f"{store_dir}/accepted"
-        stored_txn = (
-            last_txn_version(accepted_dir, _GATE_APP)
-            if versions(accepted_dir)
-            else None
-        )
-        if stored_txn is not None and batch_id < stored_txn:
-            raise ValueError(
-                f"streaming_semantic_dedup_sink: batch_id {batch_id} < "
-                f"stored txn {stored_txn} — this checkpoint does not "
-                f"own store {store_dir!r}; reuse the original "
-                f"checkpoint dir or start a fresh store"
-            )
-        accepted_prev = _read_store(spark, accepted_dir, batch_id)
+        accepted_prev = _read_store(spark, f"{store_dir}/accepted", batch_id)
         if accepted_prev is not None:
             docs = docs.join(
                 accepted_prev.select("vec_id"), "vec_id", "left_anti"
@@ -730,24 +643,21 @@ def streaming_semantic_dedup_sink(
         # first non-empty batch. The replayed fit commit is skipped by
         # its txn version; the model READ always comes from the store,
         # so a replay classifies under the exact same centroids.
-        model_dir = f"{store_dir}/model"
-        model_rows = None
-        try:
-            model_rows = read_snapshot(spark, model_dir).collect()
-        except (FileNotFoundError, ValueError):
-            pass
+        model = _read_store(spark, f"{store_dir}/model")
+        model_rows = [] if model is None else model.collect()
         if not model_rows:
             if docs.isEmpty():
                 return
             centroids, dim = quantized_lloyd_fit(
                 docs, k=k, iters=iters
             )
-            _commit_store(
+            _commit_batch(
                 spark.createDataFrame(
                     [(c, list(q)) for c, q in centroids],
                     "cluster int, q array<bigint>",
                 ).withColumn("dim", F.lit(dim).cast("int")),
-                model_dir,
+                f"{store_dir}/model",
+                "semantic-gate",
                 batch_id,
             )
         else:
@@ -817,7 +727,9 @@ def streaming_semantic_dedup_sink(
         ):
             # Sequential per-store txn commits — crash mid-sequence
             # replays deterministically (reads filter batch_id < N).
-            _commit_store(df, f"{store_dir}/{name}", batch_id)
+            _commit_batch(
+                df, f"{store_dir}/{name}", "semantic-gate", batch_id
+            )
         rejected.unpersist()
         docs.unpersist()
 
@@ -869,21 +781,13 @@ def streaming_cms_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.sketch import cms_counters
-        from ..sources.snapshot_log import (
-            append_snapshot_txn,
-            create_table,
-            versions,
-        )
 
-        if not versions(store_dir):
-            create_table(store_dir)
-        sk = cms_counters(batch_df, col, depth, width)
-        append_snapshot_txn(
-            sk.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .withColumn("lane_scheme", F.lit(CMS_LANE_SCHEME)),
+        _commit_batch(
+            cms_counters(batch_df, col, depth, width),
             store_dir,
-            app=app_id,
-            txn_version=batch_id,
+            app_id,
+            batch_id,
+            stamps={"lane_scheme": F.lit(CMS_LANE_SCHEME)},
         )
 
     return (
@@ -917,11 +821,7 @@ def streaming_ivm_sink(
     inserts, so no separate full build exists to race the stream."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.snapshot_log import (
-            append_snapshot_txn,
-            create_table,
-            versions,
-        )
+        from ..sources.snapshot_log import create_table, versions
 
         if not versions(view_dir):
             create_table(view_dir)
@@ -946,7 +846,9 @@ def streaming_ivm_sink(
         # Stage + footer-probe (the ivm_refresh shape): a batch whose
         # changes net to zero commits its txn WITHOUT a zero-row
         # segment, so quiet stretches don't inflate the view's
-        # segment list.
+        # segment list. This is why the sink commits through
+        # commit_segments itself rather than _commit_batch, which
+        # always publishes the batch's segment.
         from ..sources.rollup import _segment_rows
         from ..sources.snapshot_log import (
             _write_segment,
@@ -1059,20 +961,9 @@ def streaming_expectations_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.expectations import expectation_report
-        from ..sources.snapshot_log import (
-            append_snapshot_txn,
-            create_table,
-            versions,
-        )
 
-        if not versions(store_dir):
-            create_table(store_dir)
-        rep = expectation_report(batch_df, specs)
-        append_snapshot_txn(
-            rep.withColumn("batch_id", F.lit(batch_id).cast("long")),
-            store_dir,
-            app=app_id,
-            txn_version=batch_id,
+        _commit_batch(
+            expectation_report(batch_df, specs), store_dir, app_id, batch_id
         )
 
     return (

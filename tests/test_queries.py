@@ -137,6 +137,26 @@ def test_scoped_broadcast_released_after_two_generations(spark):
     assert not any(b is bc for _, b in cache._LIVE_BC)
 
 
+def test_query_scratch_tables_are_per_process(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A registered query's lazy frame reads a scratch table it wrote
+    under the temp dir. Another process running the same query must
+    not delete that table before the first frame is collected."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fn = registry.REGISTRY["s14_snapshot_log_lifecycle"].fn
+    pid = [os.getpid()]  # then the parent's: two live processes
+    monkeypatch.setattr(os, "getpid", lambda: pid[0])
+    first = fn(spark, sf_dir)
+    pid[0] = os.getppid()
+    fn(spark, sf_dir)
+    monkeypatch.undo()
+    assert first.collect()[0]["n_rows"] > 0
+
+
 def test_bench_headline_contract():
     """Every bench headline query must exist in the registry WITH an
     oracle — a demotion or rename must fail here, not in the driver's

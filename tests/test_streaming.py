@@ -14,7 +14,6 @@ from conversation_with_vector_db_spark.plans import load_all, registry
 from conversation_with_vector_db_spark.session import load_tables
 from conversation_with_vector_db_spark.streaming.sessions import (
     CONVERSATION_SCHEMA,
-    append_sink_query,
     running_counts,
     session_accumulator,
     stream_parquet_dir,
@@ -178,33 +177,6 @@ def test_session_accumulator_matches_islands(
     assert got_chunks == expected_chunks
 
 
-def test_append_sink_idempotent(spark, conv_stream_dir, tmp_path):
-    stream = stream_parquet_dir(spark, conv_stream_dir, CONVERSATION_SCHEMA)
-    counts = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy("conversation_id")
-        .agg(F.count("*").alias("n"))
-    )
-    out = tmp_path / "sink"
-    q = append_sink_query(
-        counts, str(out), str(tmp_path / "ckpt3")
-    ).start()
-    q.processAllAvailable()
-    q.stop()
-    written = spark.read.option("basePath", str(out)).parquet(
-        str(out) + "/batch_id=*"
-    )
-    # Last batch's state holds the converged totals.
-    last = written.agg(F.max("batch_id")).first()[0]
-    final = {
-        r.conversation_id: r.n
-        for r in written.filter(F.col("batch_id") == last).collect()
-    }
-    total_msgs = sum(final.values())
-    assert total_msgs > 0
-    assert set(final) == {"c5-0", "c5-1", "c9-2"}
-
-
 def test_snapshot_append_sink_exactly_once(
     spark, conv_stream_dir, tmp_path
 ):
@@ -262,6 +234,122 @@ def test_snapshot_append_sink_exactly_once(
 
 def _collect_sorted(df):
     return sorted(map(tuple, df.collect()))
+
+
+_REPLAY_DOCS = [
+    [
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2, "one two three four five six seven eight nine"),
+    ],
+    [
+        (3, "alpha beta gamma delta epsilon zeta eta theta"),
+        (4, "spark streams replay batches through the sink exactly once"),
+    ],
+    [
+        (5, "one two three four five six seven eight nine"),
+        (6, "a fresh document about vector stores and retrieval here"),
+    ],
+]
+
+
+@pytest.mark.parametrize(
+    "sink", ["snapshot_append", "cms", "expectations", "minhash_gate"]
+)
+def test_sink_replayed_batch_changes_nothing(
+    spark, conv_stream_dir, tmp_path, sink
+):
+    """A true replay: the last micro-batch's commit marker is lost (a
+    crash after the sink wrote but before the checkpoint commit), so
+    the restart re-runs that batch id with the same offsets. Every
+    store must keep the clean run's versions and rows: the batch's txn
+    is already committed, so the sink publishes nothing."""
+    import os
+
+    from pyspark.sql.types import (
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from conversation_with_vector_db_spark.functions.embedding import (
+        tokens_expr,
+    )
+    from conversation_with_vector_db_spark.sources.snapshot_log import (
+        read_snapshot,
+        versions,
+    )
+    from conversation_with_vector_db_spark.streaming import sessions as ss
+
+    docs_schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    src = tmp_path / "src"
+    _flat_parquet_files(spark, src, _REPLAY_DOCS, docs_schema)
+    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    stores = [store]
+
+    def docs():
+        return stream_parquet_dir(spark, str(src), docs_schema)
+
+    if sink == "snapshot_append":
+
+        def start():
+            counts = (
+                stream_parquet_dir(
+                    spark, conv_stream_dir, CONVERSATION_SCHEMA
+                )
+                .withWatermark("ts", "30 minutes")
+                .groupBy("conversation_id")
+                .agg(F.count("*").alias("n"))
+            )
+            return ss.snapshot_append_sink_query(counts, store, ckpt)
+
+    elif sink == "cms":
+
+        def start():
+            tokens = docs().select(
+                F.explode(tokens_expr(F.col("text"))).alias("token")
+            )
+            return ss.streaming_cms_sink(tokens, store, ckpt)
+
+    elif sink == "expectations":
+        specs = [("not_null", "text"), ("min_at_least", "doc_id", 2)]
+
+        def start():
+            return ss.streaming_expectations_sink(docs(), store, ckpt, specs)
+
+    else:
+        stores = [f"{store}/{n}" for n in ("accepted", "bands", "decisions")]
+
+        def start():
+            return ss.streaming_minhash_dedup_sink(docs(), store, ckpt)
+
+    def run() -> list[int]:
+        q = start().start()
+        try:
+            q.processAllAvailable()
+            return [p["batchId"] for p in q.recentProgress]
+        finally:
+            q.stop()
+
+    def state():
+        return [
+            (versions(s), sorted(map(repr, read_snapshot(spark, s).collect())))
+            for s in stores
+        ]
+
+    run()
+    clean = state()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert last >= 1  # a multi-batch stream, so the replay reads a store
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    assert last in run()  # Spark re-ran the uncommitted batch id
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert state() == clean
 
 
 def test_streaming_index_upsert_exactly_once(spark, tmp_path):
@@ -517,6 +605,9 @@ def test_continuation_loop_converges_to_batch_fixpoint(
     own source must converge to exactly the x5_stream_continuation
     batch fixpoint (re-entrant assistant runs,
     sockets/assistants/assistantHandler.js:89-137)."""
+    from conversation_with_vector_db_spark.sources.snapshot_log import (
+        read_snapshot,
+    )
     from conversation_with_vector_db_spark.streaming.sessions import (
         CONTINUATION_SCHEMA,
         continuation_sink,
@@ -566,17 +657,14 @@ def test_continuation_loop_converges_to_batch_fixpoint(
     prev = -1
     for _ in range(20):
         q.processAllAvailable()
-        n = spark.read.option("basePath", out_dir).parquet(
-            out_dir + "/batch_id=*"
-        ).count()
+        n = read_snapshot(spark, out_dir).count()
         if n == prev:
             break
         prev = n
     q.stop()
 
     streamed = (
-        spark.read.option("basePath", out_dir)
-        .parquet(out_dir + "/batch_id=*")
+        read_snapshot(spark, out_dir)
         .groupBy("run_id")
         .agg(
             F.sum("tokens").alias("total_tokens"),
