@@ -9,11 +9,13 @@ fits a data-parallel engine; the Spark-native strategies are:
   expressions over plane literals (no shuffle, no UDF); candidates are
   an equality join on band keys; survivors are exactly rescored. The
   plane matrix is deterministic (md5-seeded), so results are stable.
-* :func:`ivf_topk` — inverted-file index: MLlib KMeans (fixed seed)
-  partitions the corpus into nlist cells; a query probes the nprobe
-  nearest centroids and rescans only those cells. This is the
-  partition-pruning pattern: at scale, write the corpus parquet
-  partitioned by cell id and the probe becomes a partition-pruned scan.
+* :func:`ivf_table_create` / :func:`ivf_table_topk` — inverted-file
+  index: MLlib KMeans (fixed seed) partitions the corpus into nlist
+  cells, written as a transactional snapshot-log table whose segments
+  are tagged by cell. A query probes the nprobe nearest centroids and
+  the scan opens only those cells' segments (pruned at the manifest's
+  segment list); :func:`_matmul_rescore_probed` scores them. The same
+  table takes upserts, deletes, rebalances and time-travel reads.
 
 Both are recall-measured against the exact brute force
 (:func:`..vector.brute_force_topk`) — an approximate operator without a
@@ -421,164 +423,11 @@ def ivf_probed_cells(
     ).select("qid", "_qvec", "cell")
 
 
-def _rescore_probed(
-    assigned: DataFrame,
-    probed: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    dim: int | None = None,
-) -> DataFrame:
-    """Shared IVF rescoring tail: candidates = probed cells' vectors,
-    cosine over precomputed norms (bit-identical to the HOF fold),
-    top-k via the WindowGroupLimit shape. Both the query-time and the
-    write-time index paths end here, so their scores are identical by
-    construction. ``dim`` is the fit's indexed dimension; when the
-    caller does not have it, :func:`..vector.majority_dim` of
-    ``assigned`` supplies it."""
-    if dim is None:
-        dim = majority_dim(assigned, vec_col)
-    cands = assigned.withColumn(
-        "_cn", l2_norm(F.col(vec_col))
-    ).join(F.broadcast(probed.withColumn("_qn", l2_norm("_qvec"))), "cell")
-    scored = cands.select(
-        "qid",
-        id_col,
-        F.round(
-            # The probe fan-out makes this the bulk-pair stage: the
-            # unrolled pair kernel. Bit-identical to the cell-aware
-            # numpy tail (_matmul_rescore_probed) on NULL/ragged/
-            # finite/inf-overflow rows (pinned); the one documented
-            # divergence is a genuine NaN ELEMENT inside a dim-length
-            # vector — folded here to sim=NaN (HOF-faithful, sorts
-            # above every real double in the descending top-k), NULL
-            # in the numpy tail (the Arrow boundary erases the
-            # NaN/NULL-element distinction; vector.score_batch).
-            cosine_with_norms(
-                F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn"),
-                dim,
-            ),
-            4,
-        ).alias("sim"),
-    )
-    return topk_per_query(scored, k, tiebreak_col=id_col)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-    fit_fraction: float | None = None,
-) -> DataFrame:
-    """IVF approximate top-k via seeded KMeans cells + centroid probing.
-
-    Query-time form: fits and assigns in the same plan. At production
-    scale use :func:`ivf_write_index` + :func:`ivf_topk_indexed`, where
-    the cell is a write-time partition column and probing becomes
-    partition pruning at the scan. ``fit_fraction`` samples the KMeans
-    training set (FAISS-style) — essential at high dimension where a
-    full-corpus fit dominates the query itself.
-    """
-    # Derive the indexed dimension ONCE here (the same majority-of-sizes
-    # rule ivf_fit_cells would apply) so the rescore tail can take the
-    # unrolled zero-Python scoring chain — the fit consumes the value
-    # instead of re-deriving it, so the job count is unchanged (r11).
-    dim = majority_dim(corpus, vec_col)
-    assigned, cent_df = ivf_fit_cells(
-        corpus, nlist, vec_col, seed, fit_fraction, dim=dim
-    )
-    probed = ivf_probed_cells(cent_df, queries, nprobe, id_col, vec_col)
-    return _rescore_probed(assigned, probed, k, id_col, vec_col, dim=dim)
-
-
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_fraction: float | None = None,
-    extra_cols: tuple[str, ...] = (),
-) -> None:
-    """Materialize an IVF index: corpus parquet PARTITIONED BY cell id
-    (``<path>/data/cell=<i>/``) plus an nlist-row centroid sidecar
-    (``<path>/centroids``).
-
-    This is the 100 TB read path the reference's remote HNSW
-    (controllers/conversationController.js:32-36) maps to in a
-    data-parallel engine: the expensive structure (centroid fit +
-    cell assignment) is paid ONCE at write time, and every query's
-    nprobe cell set becomes a partition-pruning predicate — the scan
-    opens nprobe/nlist of the files, no index server required.
-    """
-    assigned, cent_df = ivf_fit_cells(
-        corpus, nlist, vec_col, seed, fit_fraction
-    )
-    assigned.select(id_col, vec_col, *extra_cols, "cell").write.partitionBy(
-        "cell"
-    ).mode("overwrite").parquet(f"{path}/data")
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_topk_indexed(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k over a :func:`ivf_write_index` layout with the
-    probed cells pushed into the scan as PARTITION FILTERS.
-
-    The probe runs first (queries x nlist centroids — tiny) and its
-    cell ids are folded to plan literals, exactly like
-    :func:`..vector.collect_query_vectors` folds the query matrix: the
-    collect is bounded by n_queries x nprobe rows, never corpus-sized.
-    The data scan then carries ``cell IN (<literals>)`` on the
-    partition column, so file listing prunes to the probed
-    directories before a single row is read (asserted by the
-    plan-shape and inputFiles tests in tests/test_plan_shapes.py /
-    tests/test_text_vector.py).
-
-    The probe plan is evaluated exactly ONCE: its rows are collected
-    and the rescore's broadcast side is rebuilt from the collected
-    rows, so a nondeterministic query set (sample, unordered limit)
-    cannot make the partition filter and the join side disagree."""
-    cent_df = spark.read.parquet(f"{index_path}/centroids")
-    probed_plan = ivf_probed_cells(cent_df, queries, nprobe, id_col, vec_col)
-    probed_rows = probed_plan.collect()
-    scan = spark.read.parquet(f"{index_path}/data")
-    if not probed_rows:
-        # No queries -> no probed cells. Never scan the corpus just to
-        # join against an empty broadcast: return an empty top-k frame
-        # with the standard (qid, id, sim, rank) shape.
-        empty = _rescore_probed(
-            scan.filter(F.lit(False)),
-            probed_plan.filter(F.lit(False)),
-            k, id_col, vec_col,
-        )
-        return empty
-    _reject_null_query_probes(probed_rows)
-    cells = sorted({int(r["cell"]) for r in probed_rows})
-    scan = scan.filter(F.col("cell").isin(cells))
-    return _matmul_rescore_probed(scan, probed_rows, k, id_col, vec_col)
-
-
 def _reject_null_query_probes(probed_rows: list) -> None:
     """NULL query vectors are a caller bug surfaced at plan time —
     the same contract as :func:`..vector.collect_query_vectors`.
-    Without this, the two rescore paths would diverge on them (the
-    matmul path emits nothing for a null query, the pair-join path
-    emits null-sim rows), breaking the pruned==unpruned equality the
-    indexed suites assert."""
+    Without this, :func:`_matmul_rescore_probed` would silently return
+    no rows for such a query."""
     if any(r["_qvec"] is None for r in probed_rows):
         raise ValueError(
             "indexed top-k: NULL query embedding — filter or fix the "
@@ -593,16 +442,14 @@ def _matmul_rescore_probed(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Cell-aware numpy rescore for the write-time index: each Arrow
-    batch of the (partition-pruned) scan is scored ONLY against the
-    queries that probed its cell, one :func:`..vector.score_batch` call
-    per cell group — bit-identical values to the pair-join
-    `_rescore_probed` shape (asserted by the pruned==unpruned equality
-    in ann_ivf_indexed_suite), but the 1536-d embeddings never fan out
-    into per-pair rows: the candidate stream stays (qid, id, sim)
-    narrow. Probed rows are already collected (n_queries x nprobe —
-    tiny), so the per-cell query matrices fold into the closure like
-    matmul_topk's query matrix."""
+    """The one IVF rescore: each Arrow batch of the (cell-pruned) scan
+    is scored ONLY against the queries that probed its cell, one
+    :func:`..vector.score_batch` call per cell group, so the 1536-d
+    embeddings never fan out into per-pair rows: the candidate stream
+    stays (qid, id, sim) narrow. Probed rows are already collected
+    (n_queries x nprobe — tiny), so the per-cell query matrices fold
+    into the closure like matmul_topk's query matrix. No probed rows
+    means no scores: the result is an empty top-k frame."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -666,11 +513,11 @@ def ivf_table_create(
 ) -> int:
     """The IVF index as a TRANSACTIONAL snapshot-log table: cell-tagged
     segments (partition purity via sources/transactional.py) + an
-    nlist-row centroid sidecar. Unlike :func:`ivf_write_index`'s bare
-    parquet layout, this index supports atomic upserts/deletes with
-    snapshot isolation and time travel — the engine's Pinecone-upsert
-    lifecycle (models/embeddingmodel.js:4-12) ON the serving index,
-    not beside it. Per-segment ``id`` min/max stats are recorded at
+    nlist-row centroid sidecar. The engine's only IVF index: it
+    supports atomic upserts/deletes with snapshot isolation and time
+    travel — the engine's Pinecone-upsert lifecycle
+    (models/embeddingmodel.js:4-12) ON the serving index, not beside
+    it. Per-segment ``id`` min/max stats are recorded at
     every commit, so keyed mutations prune inside probed cells too.
     ``extra_cols`` ride along as metadata for filtered queries
     (:func:`ivf_table_topk`'s ``where``)."""
@@ -1022,11 +869,11 @@ def ivf_table_topk(
     probed_plan = ivf_probed_cells(cent_df, queries, nprobe, id_col, vec_col)
     probed_rows = probed_plan.collect()
     if not probed_rows:
-        scan = read_table(spark, table_dir, version=version).filter(
-            F.lit(False)
-        )
-        return _rescore_probed(
-            scan, probed_plan.filter(F.lit(False)), k, id_col, vec_col
+        # No queries -> no probed cells: an empty top-k frame. The
+        # false filter folds the scan away, so no query reads a row.
+        scan = read_table(spark, table_dir, version=version)
+        return _matmul_rescore_probed(
+            scan.filter(F.lit(False)), [], k, id_col, vec_col
         )
     _reject_null_query_probes(probed_rows)
     cells = {str(int(r["cell"])) for r in probed_rows}

@@ -298,8 +298,9 @@ def pq_adc_pair_scores(
     query_vectors: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(qid, id, ascore) for an EXPLICIT (qid, id, code) pair table —
-    the cell-pruned form of :func:`pq_adc_scores`: the caller joins
+    """(qid, id, ascore) for an EXPLICIT (qid, id, code, _bias) pair
+    table (``_bias`` = q . coarse centroid of the pair's cell) — the
+    cell-pruned form of :func:`pq_adc_scores`: the caller joins
     codes to each query's probed cells first, so only probed pairs are
     ever scored. Batches hold mixed qids; the lookup stays fully
     vectorized via fancy indexing (qid -> table row, code -> column)."""
@@ -323,8 +324,6 @@ def pq_adc_pair_scores(
         pairs.sparkSession.sparkContext.broadcast((qids, luts))
     )
 
-    has_bias = "_bias" in pairs.columns
-
     def score(batches):
         q_sorted, tables = bc.value
         for pdf in batches:
@@ -337,11 +336,10 @@ def pq_adc_pair_scores(
             acc = np.zeros(len(cm), dtype=np.float64)
             for j in range(cm.shape[1]):
                 acc += tables[qi, j, cm[:, j]]
-            if "_bias" in pdf.columns:
-                # Residual encoding (IVFADC): score = q . coarse[cell]
-                # + q . (residual reconstruction); the first term rides
-                # in as a per-(qid, cell) column.
-                acc += pdf["_bias"].to_numpy(dtype=np.float64)
+            # Residual encoding (IVFADC): score = q . coarse[cell]
+            # + q . (residual reconstruction); the first term rides
+            # in as a per-(qid, cell) column.
+            acc += pdf["_bias"].to_numpy(dtype=np.float64)
             yield pd.DataFrame(
                 {
                     "qid": pdf["qid"].values,
@@ -350,8 +348,7 @@ def pq_adc_pair_scores(
                 }
             )
 
-    cols = ["qid", id_col, "code"] + (["_bias"] if has_bias else [])
-    return pairs.select(*cols).mapInPandas(
+    return pairs.select("qid", id_col, "code", "_bias").mapInPandas(
         score, f"qid long, {id_col} long, ascore double"
     )
 
@@ -369,7 +366,6 @@ def ivf_pq_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     fit_fraction: float | None = None,
-    residual: bool = True,
 ) -> DataFrame:
     """IVF-PQ: the composed 100 TB serving architecture (the
     public FAISS IVFPQ design). IVF bounds what a query READS — only
@@ -378,37 +374,27 @@ def ivf_pq_topk(
     not raw vectors; the exact-cosine refine touches raw vectors for
     only ~refine candidates per query. One code table partitioned by
     cell serves everything; the raw arrays stay cold until refine.
-
-    ``residual=False`` encodes RAW vectors instead of cell residuals
-    (pre-IVFADC form). It exists to MEASURE why residual is the
-    default — see BENCH_ANN_1536D.json's pq A/B — not for serving."""
+    Codes encode cell RESIDUALS (IVFADC; see :func:`_with_residual`)."""
     from .ann import ivf_fit_cells, ivf_probed_cells
     from .vector import collect_query_vectors, matmul_topk, topk_per_query
 
     assigned, cent = ivf_fit_cells(
         corpus, nlist, vec_col, seed, fit_fraction
     )
-    enc_src, enc_col = (
-        (_with_residual(assigned, cent, vec_col), "_resid")
-        if residual
-        else (assigned, vec_col)
-    )
+    resid = _with_residual(assigned, cent, vec_col)
     books = pq_fit(
-        enc_src, enc_col, m=m, k=ksub, seed=seed,
+        resid, "_resid", m=m, k=ksub, seed=seed,
         sample_fraction=fit_fraction,
     )
-    codes = pq_encode(
-        enc_src, books, enc_col, id_col, keep_cols=("cell",)
-    )
+    codes = pq_encode(resid, books, "_resid", id_col, keep_cols=("cell",))
     qvecs = collect_query_vectors(queries, id_col, vec_col)
-    probed = ivf_probed_cells(cent, queries, nprobe, id_col, vec_col)
     probed = (
-        probed.join(F.broadcast(cent), "cell").select(
+        ivf_probed_cells(cent, queries, nprobe, id_col, vec_col)
+        .join(F.broadcast(cent), "cell")
+        .select(
             "qid", "cell",
             _dot(F.col("_qvec"), F.col("centroid")).alias("_bias"),
         )
-        if residual
-        else probed.select("qid", "cell")
     )
     pairs = codes.join(F.broadcast(probed), "cell")
     cands = topk_per_query(
@@ -472,8 +458,8 @@ def pq_write_index(
 ) -> None:
     """Materialize an IVF-PQ index next to the raw vectors:
 
-    * ``<path>/data/cell=<i>/``  — raw vectors, cell-partitioned (the
-      :func:`..ann.ivf_write_index` layout; refine reads live here);
+    * ``<path>/data/cell=<i>/``  — raw vectors, partitioned by IVF cell
+      (refine reads live here);
     * ``<path>/codes/cell=<i>/`` — the m-byte PQ codes of the CELL
       RESIDUALS (IVFADC; see :func:`_with_residual`), SAME
       partitioning (the scan path — ~dim*8/m times smaller);
@@ -545,9 +531,9 @@ def pq_topk_indexed(
     files AND ~dim*8/m smaller ones), qid-aware ADC scores the pruned
     pairs, and the exact refine reads raw vectors only from the probed
     cells' data partitions, semi-joined to the ~refine candidates per
-    query. Same one-probe-evaluation discipline as ivf_topk_indexed:
-    partition filter and pair join are rebuilt from ONE collected
-    probe row set."""
+    query. Same one-probe-evaluation discipline as
+    :func:`..ann.ivf_table_topk`: partition filter and pair join are
+    rebuilt from ONE collected probe row set."""
     from .ann import ivf_probed_cells
     from .vector import matmul_topk, topk_per_query
 

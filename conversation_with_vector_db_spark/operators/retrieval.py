@@ -148,8 +148,9 @@ def bm25_write_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Write-time inverted index — the lexical counterpart of
-    ``ivf_write_index``:
+    """Write-time inverted index, paid once so that each query's scan
+    prunes to its own terms (the IVF table's read discipline applied
+    to text):
 
     * ``<path>/postings/bucket=<b>/`` — (term, id, tf, dl) posting
       rows, partitioned by term hash bucket: a query reads ONLY its

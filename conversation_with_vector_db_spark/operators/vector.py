@@ -4,8 +4,8 @@ controllers/conversationController.js:32-45, Pinecone cosine ANN).
 Two scoring kernels, one per shape; every scorer in the package uses
 the one its shape calls for:
 
-* **Pair lists** (candidate (a, b) pairs: LSH/BQ/SQ8/RP refines, IVF
-  pair tail, SemDeDup and dedup rescoring): :func:`dot_unrolled`, the
+* **Pair lists** (candidate (a, b) pairs: LSH/BQ/SQ8/RP refines,
+  SemDeDup and dedup rescoring): :func:`dot_unrolled`, the
   fold unrolled to the plan-build-time dimension — whole-stage codegen
   multiply-adds in the JVM, no Python worker in the stage, and the
   pair-duplicated vectors never cross a process boundary.

@@ -14,7 +14,9 @@ prune far better):
 
 * hyperplane LSH 24 bits / 6 bands + 1-bit multi-probe: recall 0.98
   (0.60 before multi-probe), candidate fraction 0.88.
-* IVF KMeans 16 cells / nprobe 6: recall 0.82, scans 6/16 of corpus.
+* IVF KMeans 16 cells / nprobe 6 (the transactional IVF table,
+  :func:`..operators.ann.ivf_table_topk`): recall 0.82, scans 6/16 of
+  the corpus.
 * MLlib BRP-LSH 4 tables: recall 0.98 (stock-library scale path).
 """
 
@@ -26,14 +28,12 @@ from pyspark.sql import functions as F
 from ..operators.ann import (
     exact_baseline,
     hyperplane_lsh_topk,
-    ivf_probed_cells,
-    ivf_topk,
-    ivf_topk_indexed,
-    ivf_write_index,
+    ivf_table_create,
+    ivf_table_topk,
     recall_at_k,
 )
 from ..operators.vector import majority_dim
-from .registry import query
+from .registry import query, scratch_dir
 
 K = 10
 
@@ -74,10 +74,14 @@ def lsh_recall_report(
 def ivf_recall_report(
     spark: SparkSession, exact: DataFrame | None = None
 ) -> DataFrame:
-    """IVF (seeded KMeans cells, centroid probing) vs exact."""
+    """IVF (seeded KMeans cells, centroid probing) vs exact: the index
+    is an IVF table in a per-process scratch dir (the returned frame
+    reads it lazily)."""
     emb = spark.table("embeddings")
     q = _queries(emb)
-    approx = ivf_topk(emb, q, k=K, nlist=16, nprobe=6)
+    table = scratch_dir("ivfrecall")
+    ivf_table_create(spark, emb, table, nlist=16)
+    approx = ivf_table_topk(spark, table, q, k=K, nprobe=6)
     if exact is None:
         exact = exact_baseline(emb, q, k=K)
     return recall_at_k(approx, exact, k=K).withColumn(
@@ -251,7 +255,7 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ann_ivf_indexed_suite config: 2 queries x nprobe 6 probes at most 12
 #: of the 16 cells, so `partitions_pruned` is TRUE by construction at
 #: every fixture scale (and the per-query economics match the
-#: query-time `ivf_kmeans_16c6probe` family). Recall floor from
+#: `ivf_kmeans_16c6probe` recall family). Recall floor from
 #: measurement on the uniform fixtures — the ANN-hardest case —
 #: sf0.001: 0.50, sf0.01: 0.95; floor = smallest-fixture value minus
 #: a 0.10 margin for KMeans-init sensitivity to input partitioning.
@@ -266,19 +270,18 @@ IDX_NLIST, IDX_NPROBE, IDX_FLOOR = 16, 6, 0.40
     # indexed probe), ann_recall_suite, ann_pq_recall_suite and
     # ann_bq_hamming_topk.
     driver=False,
-    doc="""Write-time IVF index + partition-pruned probe — the 100 TB
-    read path (VERDICT r4 #3). Builds the ``ivf_write_index`` layout
-    (corpus parquet partitioned by KMeans cell id + centroid sidecar)
-    in a scratch dir, then self-certifies three invariants as booleans
-    the VALUES oracle pins: (a) recall@10 of the pruned probe vs exact
-    brute force meets the floor, (b) the pruned scan returns EXACTLY
-    the rows an unpruned scan of the same index rescoring the same
-    probe set returns (pruning loses nothing), and (c) the probe
-    touched strictly fewer partitions than nlist (pruning happened;
-    2 queries x nprobe 6 <= 12 < 16 cells by construction). The
-    sublinear stand-in for Pinecone's serving index
+    doc="""IVF index + cell-pruned probe — the 100 TB read path
+    (VERDICT r4 #3). Builds the IVF table (cell-tagged snapshot-log
+    segments + centroid sidecar) in a scratch dir, then self-certifies
+    three invariants as booleans the VALUES oracle pins: (a) recall@10
+    of the pruned probe vs exact brute force meets the floor, (b) the
+    pruned scan returns EXACTLY the rows an unpruned scan of the same
+    index rescoring the same probe set returns (pruning loses nothing),
+    and (c) the probe touched strictly fewer cells than nlist (pruning
+    happened; 2 queries x nprobe 6 <= 12 < 16 cells by construction).
+    The sublinear stand-in for Pinecone's serving index
     (controllers/conversationController.js:32-36) with the index
-    server replaced by parquet partition layout.""",
+    server replaced by the table's cell-tagged segment list.""",
     oracle="""
 SELECT 'ivf_indexed_16c6probe' AS method, TRUE AS meets_floor,
        TRUE AS pruned_matches_full, TRUE AS partitions_pruned
@@ -288,44 +291,46 @@ def ann_ivf_indexed_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from ..operators.ann import (
+        _load_centroids,
+        _matmul_rescore_probed,
+        ivf_probed_cells,
+    )
+    from ..sources.transactional import read_table
+
     emb = spark.table("embeddings")
     q = emb.filter(F.col("vec_id") < 2)
     # Per-invocation scratch dir: concurrent runs on the same fixture
-    # (pytest-xdist, parallel parity + bench) must never race an
-    # overwrite-delete against another run's scan.
+    # (pytest-xdist, parallel parity + bench) must never race a
+    # delete against another run's scan.
     path = tempfile.mkdtemp(prefix="cvdb_ivf_index_")
     try:
-        ivf_write_index(emb, path, nlist=IDX_NLIST)
+        ivf_table_create(spark, emb, path, nlist=IDX_NLIST)
 
-        pruned = ivf_topk_indexed(spark, path, q, k=K, nprobe=IDX_NPROBE)
-        # Unpruned control: same written index, same probe set, no
-        # partition filter — identical rows prove pruning is lossless.
-        from ..operators.ann import _rescore_probed
-
-        cent = spark.read.parquet(f"{path}/centroids")
-        probed = ivf_probed_cells(cent, q, nprobe=IDX_NPROBE)
-        full = _rescore_probed(
-            spark.read.parquet(f"{path}/data"), probed, K,
-            "vec_id", "embedding", dim=EMB_DIM,
+        pruned = ivf_table_topk(spark, path, q, k=K, nprobe=IDX_NPROBE)
+        # Unpruned control: same index, same probe set, every cell's
+        # segments scanned — identical rows prove pruning is lossless.
+        probed_rows = ivf_probed_cells(
+            _load_centroids(spark, path), q, nprobe=IDX_NPROBE
+        ).collect()
+        full = _matmul_rescore_probed(
+            read_table(spark, path), probed_rows, K, "vec_id", "embedding"
         )
         n_diff = (
             full.exceptAll(pruned)
             .unionByName(pruned.exceptAll(full))
             .agg(F.count(F.lit(1)).alias("n_diff"))
         )
-        n_cells = probed.agg(
-            F.count_distinct("cell").alias("n_probed_cells")
-        )
+        n_probed_cells = len({r["cell"] for r in probed_rows})
         exact = exact_baseline(emb, q, k=K)
         report = recall_at_k(pruned, exact, k=K)
         rows = (
             report.crossJoin(n_diff)
-            .crossJoin(n_cells)
             .select(
                 F.lit("ivf_indexed_16c6probe").alias("method"),
                 (F.col("recall") >= IDX_FLOOR).alias("meets_floor"),
                 (F.col("n_diff") == 0).alias("pruned_matches_full"),
-                (F.col("n_probed_cells") < IDX_NLIST).alias(
+                F.lit(n_probed_cells < IDX_NLIST).alias(
                     "partitions_pruned"
                 ),
             )
@@ -366,11 +371,7 @@ def ann_ivf_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..operators.ann import (
-        ivf_table_create,
-        ivf_table_topk,
-        ivf_table_upsert,
-    )
+    from ..operators.ann import ivf_table_upsert
     from ..sources.snapshot_log import latest_version
     from ..sources.transactional import read_table
 
@@ -460,11 +461,7 @@ def ann_ivf_table_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections import Counter
 
     from ..functions.embedding import DEFAULT_DIM, featurize_dense
-    from ..operators.ann import (
-        ivf_table_create,
-        ivf_table_topk,
-        ivf_table_upsert,
-    )
+    from ..operators.ann import ivf_table_upsert
     from ..operators.vector import collect_query_vectors, matmul_topk
 
     docs = spark.table("documents").filter(F.col("doc_id") < 500)
@@ -528,8 +525,8 @@ def ann_ivf_table_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_ivf_recall",
     driver=False,
     doc="""IVF ANN (KMeans nlist=16 cells, nprobe=6, seed 42) vs exact:
-    returns recall@10. At scale the cell id is a parquet partition
-    column and probing = partition pruning.""",
+    returns recall@10. The index is the transactional IVF table, whose
+    segments are tagged by cell, so probing prunes the segment list.""",
     oracle=None,
 )
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

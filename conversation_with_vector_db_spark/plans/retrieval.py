@@ -286,7 +286,8 @@ def v9_hybrid_mmr_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/retrieval.bm25_write_index): posting lists partitioned
     by crc32 term bucket, so a q-term query PLAN-time-prunes the scan
     to at most q of the 64 bucket directories — the 100 TB lexical
-    read path (the ivf_write_index discipline applied to text).
+    read path (the IVF table's pay-once, probe-pruned discipline
+    applied to text).
     Self-certifies two invariants as booleans the VALUES oracle pins:
     (a) the indexed scores equal the inline bm25_scores on the same
     corpus (to 1e-9; the integer tf/df/dl are identical by

@@ -233,9 +233,8 @@ def _commit_batch(
     txn version = the batch id.
 
     * Replay: a batch whose txn already committed (crash after this
-      commit, before the stream checkpoint advanced) is skipped. It is
-      still drained through a no-op write, because Spark fails a batch
-      whose stateful upstream's state stores did not commit.
+      commit, before the stream checkpoint advanced) is skipped and
+      drained by :func:`_drain_replayed`.
     * Crash between the segment write and the manifest commit: only an
       invisible age-gated orphan is left.
     * Ownership: a batch id below the stored txn means a FRESH
@@ -263,7 +262,14 @@ def _commit_batch(
     if sl.append_snapshot_txn(
         stamped, table_dir, app=app, txn_version=batch_id
     ) is None:
-        df.write.format("noop").mode("overwrite").save()
+        _drain_replayed(df)
+
+
+def _drain_replayed(batch_df: DataFrame) -> None:
+    """Run a skipped replayed batch's plan through a no-op write:
+    publishing nothing is not enough, because Spark fails a batch
+    whose stateful upstream's state stores did not commit."""
+    batch_df.write.format("noop").mode("overwrite").save()
 
 
 def _read_store(
@@ -423,10 +429,11 @@ def streaming_index_upsert_sink(
         from ..operators.ann import ivf_table_upsert
 
         docs = batch_df.dropDuplicates(["vec_id"])
-        ivf_table_upsert(
+        if ivf_table_upsert(
             batch_df.sparkSession, table_dir, docs,
             txn=(app_id, batch_id),
-        )
+        ) is None:
+            _drain_replayed(batch_df)
 
     return (
         vec_stream.writeStream.outputMode("update")
@@ -858,7 +865,8 @@ def streaming_ivm_sink(
 
         prev = last_txn_version(view_dir, app_id)
         if prev is not None and prev >= batch_id:
-            return  # replay: publish nothing
+            _drain_replayed(batch_df)  # replay: publish nothing
+            return
         rel = _write_segment(part, view_dir)
         if _segment_rows(view_dir, rel) == 0:
             import shutil

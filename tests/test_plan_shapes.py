@@ -228,51 +228,6 @@ def test_perplexity_encoded_and_string_paths_agree(spark, sf_dir):
     assert fast == slow
 
 
-def test_ivf_indexed_probe_is_partition_pruned(spark, tmp_path):
-    """VERDICT r4 #3: the write-time IVF index's probe must carry the
-    probed cell ids as PARTITION filters on the scan — pruning at file
-    listing — not as post-scan row predicates. Pinned on the operator's
-    own DataFrame, pre-execution."""
-    import numpy as np
-
-    from conversation_with_vector_db_spark.operators.ann import (
-        ivf_topk_indexed,
-        ivf_write_index,
-    )
-
-    rng = np.random.default_rng(13)
-    cents = rng.normal(size=(8, 16))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    rows = [
-        (i, [float(x) for x in cents[i % 8] + 0.08 * rng.normal(size=16)])
-        for i in range(240)
-    ]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    path = str(tmp_path / "ivfidx")
-    ivf_write_index(corpus, path, nlist=8)
-
-    old = spark.conf.get("spark.sql.maxMetadataStringLength")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
-        df = ivf_topk_indexed(
-            spark, path, corpus.filter(F.col("vec_id") < 2), k=5, nprobe=3
-        )
-        plan = df._jdf.queryExecution().sparkPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", old)
-    import re
-
-    # The data scan prunes partitions on the probed cell literals
-    # (plus the free dynamicpruning subquery from the broadcast join).
-    assert re.search(
-        r"PartitionFilters: \[[^\]]*cell#\d+L? IN \([0-9,]+\)", plan
-    ), plan
-    # ...and no cell predicate leaks into the row-level pushed filters
-    # (cell is a partition column; a PushedFilters entry would mean the
-    # layout regressed to an unpartitioned write).
-    assert not re.search(r"PushedFilters: \[[^\]]*cell", plan), plan
-
-
 def test_ivf_table_probe_prunes_at_segment_list(spark, tmp_path):
     """The TRANSACTIONAL index's probe prunes at the MANIFEST segment
     list: the scan's inputFiles must live only under probed-cell

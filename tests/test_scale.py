@@ -106,36 +106,6 @@ def test_brp_lsh_recall_floor(spark, sf_dir):
     assert row.recall >= 0.9, row
 
 
-def test_ivf_partitioned_write_prunes_cells(spark, sf_dir, tmp_path):
-    """The IVF production path: persist the corpus parquet PARTITIONED
-    BY the KMeans cell id; a query probing nprobe cells then reads only
-    those partitions (partition pruning at the file listing level — the
-    scan never touches the other cells' files)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    load_tables(spark, sf_dir)
-    emb = spark.table("embeddings").select("vec_id", "embedding")
-    feats = emb.withColumn("features", array_to_vector("embedding"))
-    model = KMeans(k=8, seed=42, featuresCol="features").fit(feats)
-    cells = model.transform(feats).select(
-        "vec_id", "embedding", F.col("prediction").alias("cell")
-    )
-    path = str(tmp_path / "ivf_corpus")
-    cells.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-    probed = spark.read.parquet(path).filter(F.col("cell").isin(1, 3))
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    # Partition filters prune at listing time; no per-row cell filter
-    # survives into the data scan.
-    assert "PartitionFilters: [" in plan and "cell" in plan.split(
-        "PartitionFilters"
-    )[1][:80], plan
-    got = probed.count()
-    want = cells.filter(F.col("cell").isin(1, 3)).count()
-    assert got == want and 0 < got < cells.count()
-
-
 def test_domain_mixture_tracks_target_shares(spark, sf_dir):
     """The achieved mix must track the target permille shares within
     sampling noise, and per-domain keeps must respect the computed

@@ -252,8 +252,32 @@ _REPLAY_DOCS = [
 ]
 
 
+_REPLAY_CHANGES = [
+    [(1, "2026-01-01 00:00:00", "a", 5, "insert"),
+     (2, "2026-01-01 00:01:00", "b", 7, "insert")],
+    [(3, "2026-01-01 00:02:00", "a", 5, "delete"),
+     (1, "2026-01-01 00:02:30", "a", 5, "insert")],
+    [(4, "2026-01-01 00:03:00", "b", 2, "update_postimage"),
+     (5, "2026-01-01 00:04:00", "c", 1, "insert")],
+]
+
+
+def _replay_vectors(i: int, cell: int) -> list[float]:
+    """A 4-d vector near one of two fixed directions."""
+    base = [1.0, 0.0, 0.0, 0.0] if cell == 0 else [0.0, 0.0, 1.0, 0.0]
+    return [x + 0.01 * ((i * 7 + j) % 5) for j, x in enumerate(base)]
+
+
 @pytest.mark.parametrize(
-    "sink", ["snapshot_append", "cms", "expectations", "minhash_gate"]
+    "sink",
+    [
+        "snapshot_append",
+        "cms",
+        "expectations",
+        "minhash_gate",
+        "ivm",
+        "index_upsert",
+    ],
 )
 def test_sink_replayed_batch_changes_nothing(
     spark, conv_stream_dir, tmp_path, sink
@@ -262,7 +286,10 @@ def test_sink_replayed_batch_changes_nothing(
     crash after the sink wrote but before the checkpoint commit), so
     the restart re-runs that batch id with the same offsets. Every
     store must keep the clean run's versions and rows: the batch's txn
-    is already committed, so the sink publishes nothing."""
+    is already committed, so the sink publishes nothing. The ivm and
+    index_upsert cases read through a stateful upstream
+    (dropDuplicatesWithinWatermark), whose state stores only commit if
+    the skipped batch's plan still runs."""
     import os
 
     from pyspark.sql.types import (
@@ -319,11 +346,84 @@ def test_sink_replayed_batch_changes_nothing(
         def start():
             return ss.streaming_expectations_sink(docs(), store, ckpt, specs)
 
-    else:
+    elif sink == "minhash_gate":
         stores = [f"{store}/{n}" for n in ("accepted", "bands", "decisions")]
 
         def start():
             return ss.streaming_minhash_dedup_sink(docs(), store, ckpt)
+
+    elif sink == "ivm":
+        changes = tmp_path / "changes"
+        _flat_parquet_files(
+            spark, changes, _REPLAY_CHANGES,
+            "id long, ts string, namespace string, label long, "
+            "_change_type string",
+        )
+        changes_schema = StructType(
+            [
+                StructField("id", LongType()),
+                StructField("ts", StringType()),
+                StructField("namespace", StringType()),
+                StructField("label", LongType()),
+                StructField("_change_type", StringType()),
+            ]
+        )
+
+        def start():
+            stream = (
+                stream_parquet_dir(spark, str(changes), changes_schema)
+                .withColumn("ts", F.to_timestamp("ts"))
+                .withWatermark("ts", "1 hour")
+                .dropDuplicatesWithinWatermark(["id"])
+            )
+            return ss.streaming_ivm_sink(stream, store, ckpt)
+
+    else:
+        from pyspark.sql.types import ArrayType, DoubleType
+
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+        )
+
+        ivf_table_create(
+            spark,
+            spark.createDataFrame(
+                [(i, _replay_vectors(i, i % 2)) for i in range(20)],
+                "vec_id long, embedding array<double>",
+            ),
+            store,
+            nlist=2,
+        )
+        vecs = tmp_path / "vecs"
+        _flat_parquet_files(
+            spark,
+            vecs,
+            [
+                [(0, "2026-01-01 00:00:00", _replay_vectors(0, 1)),
+                 (100, "2026-01-01 00:01:00", _replay_vectors(100, 0))],
+                [(101, "2026-01-01 00:02:00", _replay_vectors(101, 1))],
+                [(3, "2026-01-01 00:03:00", _replay_vectors(3, 0)),
+                 (102, "2026-01-01 00:04:00", _replay_vectors(102, 1))],
+            ],
+            "vec_id long, ts string, embedding array<double>",
+        )
+        vecs_schema = StructType(
+            [
+                StructField("vec_id", LongType()),
+                StructField("ts", StringType()),
+                StructField("embedding", ArrayType(DoubleType())),
+            ]
+        )
+
+        def start():
+            stream = (
+                stream_parquet_dir(spark, str(vecs), vecs_schema)
+                .withColumn("ts", F.to_timestamp("ts"))
+                .withWatermark("ts", "1 hour")
+                .dropDuplicatesWithinWatermark(["vec_id"])
+                .select("vec_id", "embedding")
+            )
+            return ss.streaming_index_upsert_sink(stream, store, ckpt)
 
     def run() -> list[int]:
         q = start().start()

@@ -4,7 +4,6 @@ operators (the parts the SQL oracle can't certify)."""
 from __future__ import annotations
 
 import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -177,7 +176,8 @@ def _clustered_corpus(spark, n_clusters=8, per_cluster=40, dim=16):
 
 
 class TestIvfIndexed:
-    """Write-time IVF index (VERDICT r4 #3): partition-pruned probe."""
+    """The IVF table (VERDICT r4 #3): cell-pruned probe, transactional
+    maintenance."""
 
     _clustered_corpus = staticmethod(_clustered_corpus)
 
@@ -189,16 +189,14 @@ class TestIvfIndexed:
         assert row.pruned_matches_full, row
         assert row.partitions_pruned, row
 
-    def test_pair_and_numpy_tails_agree_on_inf_overflow(self, spark):
-        """The IVF pair tail (_rescore_probed, unrolled JVM dot) and the
-        cell-aware numpy tail (_matmul_rescore_probed, score_batch) must
-        return the same rows at repr level on an inf-overflow row: the
-        fold over FINITE inputs ``[1e308, 1e308, -1e308]`` reaches
-        ``inf + -inf`` = NaN, which must stay NaN (ranked first) on both
-        tails, not turn into NULL on the numpy one."""
+    def test_numpy_tail_ranks_inf_overflow_nan_first(self, spark):
+        """The IVF rescore (_matmul_rescore_probed, score_batch) on an
+        inf-overflow row: the dot over FINITE inputs
+        ``[1e308, 1e308, -1e308]`` reaches ``inf + -inf`` = NaN, which
+        stays NaN and ranks first, not NULL. NULL and ragged vectors
+        score NULL and rank last; a zero vector scores 0.0."""
         from conversation_with_vector_db_spark.operators.ann import (
             _matmul_rescore_probed,
-            _rescore_probed,
         )
 
         scan = spark.createDataFrame(
@@ -215,17 +213,18 @@ class TestIvfIndexed:
         probed = spark.createDataFrame(
             [(10, [2.0, 2.0, 2.0], 0), (11, [1.0, 0.0, 0.0], 0)],
             "qid long, _qvec array<double>, cell int",
-        )
-        by_rank = lambda df: repr(sorted(
-            map(tuple, df.collect()), key=lambda r: (r[0], r[3])
+        ).collect()
+        out = _matmul_rescore_probed(scan, probed, 6, "vec_id", "embedding")
+        got = repr(sorted(
+            map(tuple, out.collect()), key=lambda r: (r[0], r[3])
         ))
-        pair = _rescore_probed(scan, probed, 6, "vec_id", "embedding", 3)
-        numpy_tail = _matmul_rescore_probed(
-            scan, probed.collect(), 6, "vec_id", "embedding"
-        )
-        assert by_rank(pair) == by_rank(numpy_tail)
-        first = {r["qid"]: r for r in pair.filter("rank = 1").collect()}
-        assert first[10]["vec_id"] == 1 and math.isnan(first[10]["sim"])
+        nan = float("nan")
+        assert got == repr([
+            (10, 1, nan, 1), (10, 2, 0.8165, 2), (10, 0, 0.5774, 3),
+            (10, 3, 0.0, 4), (10, 4, None, 5), (10, 5, None, 6),
+            (11, 0, 1.0, 1), (11, 2, 0.7071, 2), (11, 1, 0.0, 3),
+            (11, 3, 0.0, 4), (11, 4, None, 5), (11, 5, None, 6),
+        ])
 
     def test_upsert_rejects_vectors_it_cannot_score(self, spark, tmp_path):
         """A vector whose size differs from the index's (or a NULL one)
@@ -266,81 +265,102 @@ class TestIvfIndexed:
         assert latest_version(t) > v0
 
     def test_indexed_pruning_reads_only_probed_files(self, spark, tmp_path):
-        """The probed-cell IN filter must prune at FILE LISTING, not as
+        """The probed-cell selection prunes at the SEGMENT LIST, not as
         a row filter: the executed scan's numFiles metric equals the
-        file count under the probed cell directories alone."""
-        import glob
+        file count of the probed cells' segments alone."""
         import os
 
         from conversation_with_vector_db_spark.operators.ann import (
+            _load_centroids,
             ivf_probed_cells,
-            ivf_write_index,
+            ivf_table_create,
+        )
+        from conversation_with_vector_db_spark.sources.snapshot_log import (
+            live_segments,
+            segment_path,
+        )
+        from conversation_with_vector_db_spark.sources.transactional import (
+            _partition_of,
+            read_table,
         )
 
         corpus = self._clustered_corpus(spark)
-        path = str(tmp_path / "ivfidx")
-        ivf_write_index(corpus, path, nlist=8)
+        t = str(tmp_path / "ivf_files")
+        ivf_table_create(spark, corpus, t, nlist=8)
         queries = corpus.filter(F.col("vec_id") < 2)
-        cent = spark.read.parquet(f"{path}/centroids")
-        probed = ivf_probed_cells(cent, queries, nprobe=3)
-        cells = sorted(
-            {int(r["cell"]) for r in probed.select("cell").collect()}
-        )
+        probed = ivf_probed_cells(_load_centroids(spark, t), queries, nprobe=3)
+        cells = {str(int(r["cell"])) for r in probed.collect()}
         assert 0 < len(cells) < 8
 
-        all_files = glob.glob(f"{path}/data/cell=*/*.parquet")
-        probed_files = [
-            f
-            for f in all_files
-            if int(os.path.basename(os.path.dirname(f)).split("=")[1])
-            in cells
-        ]
-        assert 0 < len(probed_files) < len(all_files)
+        def n_files(segs):
+            return sum(
+                f.endswith(".parquet")
+                for s in segs
+                for f in os.listdir(segment_path(t, s))
+            )
+
+        segs = live_segments(t)
+        want = n_files(s for s in segs if _partition_of(s, "cell") in cells)
+        assert 0 < want < n_files(segs)
 
         # AQE wraps scans in query stages whose leaves hide the scan
         # node; turn it off so the executed plan's single leaf IS the
         # FileSourceScan and its driver-side numFiles metric is
-        # directly readable. Restore the PRIOR value, not a hardcoded
-        # one, so sessions that had AQE off aren't clobbered.
+        # directly readable. Restore the PRIOR value.
         prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            pruned_scan = spark.read.parquet(f"{path}/data").filter(
-                F.col("cell").isin(cells)
+            scan = read_table(
+                spark, t, partitions=cells, partition_col="cell"
             )
-            pruned_scan.collect()
+            scan.collect()
             leaf = (
-                pruned_scan._jdf.queryExecution()
+                scan._jdf.queryExecution()
                 .executedPlan()
                 .collectLeaves()
                 .apply(0)
             )
             assert "FileSourceScan" in leaf.getClass().getSimpleName()
-            n_files_read = leaf.metrics().apply("numFiles").value()
+            n_read = leaf.metrics().apply("numFiles").value()
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
-        assert n_files_read == len(probed_files), (
-            n_files_read, len(probed_files), len(all_files)
-        )
+        assert n_read == want, (n_read, want)
 
     def test_indexed_empty_query_set_short_circuits(self, spark, tmp_path):
         """No queries -> empty result with the standard columns and an
-        executed plan containing NO file scan (the corpus filter folds
-        to an empty LocalTableScan — schema inference reads one footer,
-        data rows never)."""
+        executed plan containing NO file scan (the scan filter folds to
+        an empty LocalTableScan). Building the plan runs the same
+        queries as a non-empty probe's build — the probe collect only,
+        no dimension query over the table's scan."""
         from conversation_with_vector_db_spark.operators.ann import (
-            ivf_topk_indexed,
-            ivf_write_index,
+            ivf_table_create,
+            ivf_table_topk,
         )
 
         corpus = self._clustered_corpus(spark)
-        path = str(tmp_path / "ivfidx_empty")
-        ivf_write_index(corpus, path, nlist=4)
-        out = ivf_topk_indexed(
-            spark, path, corpus.filter(F.col("vec_id") < 0), k=5
-        )
+        t = str(tmp_path / "ivf_empty")
+        ivf_table_create(spark, corpus, t, nlist=4)
+        # SQL executions, not jobs: a query over the folded empty scan
+        # launches no job, but still executes.
+        # Execution ids, not the retained count: the UI store caps the
+        # count at spark.sql.ui.retainedExecutions.
+        bus = spark.sparkContext._jsc.sc().listenerBus()
+        store = spark._jsparkSession.sharedState().statusStore()
+
+        def last_execution_id():
+            bus.waitUntilEmpty()
+            return store.executionsList().last().executionId()
+
+        def build_executions(queries):
+            before = last_execution_id()
+            df = ivf_table_topk(spark, t, queries, k=5)
+            return df, last_execution_id() - before
+
+        out, n_empty = build_executions(corpus.filter(F.col("vec_id") < 0))
+        _, n_probe = build_executions(corpus.filter(F.col("vec_id") < 2))
+        assert n_empty == n_probe == 1, (n_empty, n_probe)
         assert out.count() == 0
-        assert set(out.columns) >= {"qid", "vec_id", "sim"}
+        assert out.columns == ["qid", "vec_id", "sim", "rank"]
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "FileScan" not in plan  # lit(False) folded the scan away
 
@@ -620,27 +640,6 @@ class TestIvfIndexed:
             ivf_table_topk(spark, t, probe, k=5, nprobe=4).collect()
         ) == 5
 
-    def test_indexed_topk_matches_query_time_ivf(self, spark, tmp_path):
-        """Same corpus, same seed, same nlist/nprobe: the write-time
-        index path must rank exactly what the query-time fit ranks
-        (both end in the shared _rescore_probed tail)."""
-        from conversation_with_vector_db_spark.operators.ann import (
-            ivf_topk,
-            ivf_topk_indexed,
-            ivf_write_index,
-        )
-
-        corpus = self._clustered_corpus(spark)
-        path = str(tmp_path / "ivfidx2")
-        ivf_write_index(corpus, path, nlist=8)
-        queries = corpus.filter(F.col("vec_id") < 3)
-        direct = ivf_topk(corpus, queries, k=5, nlist=8, nprobe=3)
-        indexed = ivf_topk_indexed(spark, path, queries, k=5, nprobe=3)
-        a = sorted(map(tuple, direct.collect()))
-        b = sorted(map(tuple, indexed.collect()))
-        assert a == b
-
-
     @pytest.mark.heavy
     def test_rebalance_sidecar_atomic_with_commit(
         self, spark, tmp_path, monkeypatch
@@ -778,28 +777,21 @@ class TestIvfIndexed:
         assert 9001 in {r["vec_id"] for r in top}
 
     def test_indexed_topk_rejects_null_query(self, spark, tmp_path):
-        """NULL query embeddings fail at plan time on BOTH indexed
-        paths (same contract as collect_query_vectors) — previously the
-        matmul rescore silently emitted nothing for such queries while
-        the pair-join rescore emitted null-sim rows."""
+        """NULL query embeddings fail at plan time (same contract as
+        collect_query_vectors) — without the check the matmul rescore
+        silently emits nothing for such queries."""
         from conversation_with_vector_db_spark.operators.ann import (
             ivf_table_create,
             ivf_table_topk,
-            ivf_topk_indexed,
-            ivf_write_index,
         )
 
         corpus = self._clustered_corpus(spark)
-        bare = str(tmp_path / "bare_idx")
-        ivf_write_index(corpus, bare, nlist=4)
         table = str(tmp_path / "table_idx")
         ivf_table_create(spark, corpus, table, nlist=4)
         queries = spark.createDataFrame(
             [(1, [float(i) for i in range(16)]), (2, None)],
             "vec_id long, embedding array<double>",
         )
-        with pytest.raises(ValueError, match="NULL query"):
-            ivf_topk_indexed(spark, bare, queries, k=3, nprobe=2)
         with pytest.raises(ValueError, match="NULL query"):
             ivf_table_topk(spark, table, queries, k=3, nprobe=2)
 
@@ -1134,12 +1126,6 @@ def test_ivf_mixed_dim_corpus_indexes_the_majority(spark, tmp_path):
     assert majority_dim(empties, "embedding") == 1
 
 
-def _ivf_topk_case(corpus, queries, tmp_path):
-    from conversation_with_vector_db_spark.operators.ann import ivf_topk
-
-    return ivf_topk(corpus, queries, k=5, nlist=8, nprobe=3)
-
-
 def _rescore_candidates_case(corpus, queries, tmp_path):
     from conversation_with_vector_db_spark.operators.vector import (
         rescore_candidates,
@@ -1151,18 +1137,6 @@ def _rescore_candidates_case(corpus, queries, tmp_path):
         .filter(F.col("a") < F.col("b"))
     )
     return rescore_candidates(cands, corpus)
-
-
-def _rescore_probed_case(corpus, queries, tmp_path):
-    from conversation_with_vector_db_spark.operators.ann import (
-        _rescore_probed,
-        ivf_fit_cells,
-        ivf_probed_cells,
-    )
-
-    assigned, cent = ivf_fit_cells(corpus, nlist=8)
-    probed = ivf_probed_cells(cent, queries, nprobe=3)
-    return _rescore_probed(assigned, probed, 5, "vec_id", "embedding")
 
 
 def _bq_topk_case(corpus, queries, tmp_path):
@@ -1191,9 +1165,7 @@ def _sq8_topk_case(corpus, queries, tmp_path):
 @pytest.mark.parametrize(
     "build",
     [
-        _ivf_topk_case,
         _rescore_candidates_case,
-        _rescore_probed_case,
         _bq_topk_case,
         _bq_topk_indexed_case,
         _sq8_topk_case,

@@ -19,13 +19,14 @@ controllers/conversationController.js:30) — per-pair cost is 24x the
 KMeans fit cost, and the LSH bit budget; pass ``--dim 64`` to
 reproduce the historical sweep.
 
-Measures six strategies per scale: exact Arrow matmul, hyperplane
-LSH (48b/6band/1-bit multi-probe), query-time IVF (fit+assign in the
-plan), the write-time IVF index (`ivf_write_index` + partition-pruned
-`ivf_topk_indexed`) including build cost and the probed-file fraction
-actually read, the write-time IVF-PQ index (residual ADC codes +
-refine, code-bytes fraction), and binary sign quantization (JVM
-bit_count(xor) Hamming cut at several oversample factors).
+Measures, per scale: exact Arrow matmul, hyperplane LSH
+(48b/6band/1-bit multi-probe), the IVF table (`ivf_table_create` +
+segment-pruned `ivf_table_topk`) including build cost and the fraction
+of the table's files the probed cells select (read from the
+manifest's live segments), the write-time IVF-PQ index (residual ADC
+codes + refine, code-bytes fraction), binary sign quantization (JVM
+bit_count(xor) Hamming cut at several oversample factors) and a
+random-projection sketch.
 
 Usage: python tools/ann_scale.py --n 100000 1000000 --dim 1536
 """
@@ -33,7 +34,6 @@ Usage: python tools/ann_scale.py --n 100000 1000000 --dim 1536
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import shutil
@@ -108,8 +108,8 @@ def gen_corpus(path: str, n: int, dim: int, n_clusters: int = 20,
     os.rename(tmp, path)
 
 
-ALL_METHODS = ("exact", "lsh", "ivf", "ivf_indexed", "pq_indexed",
-               "bq", "bq_indexed", "rp")
+ALL_METHODS = ("exact", "lsh", "ivf", "pq_indexed", "bq", "bq_indexed",
+               "rp")
 
 
 def _prepare_corpus(spark, n: int, dim: int, workdir: str,
@@ -147,6 +147,75 @@ def _prepare_corpus(spark, n: int, dim: int, workdir: str,
     return corpus, queries, queries.count()
 
 
+def _timed_noop(df, reps: int) -> float:
+    """Min-of-reps wall of one full execution of ``df``."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 3)
+
+
+def _ivf_table_build(spark, corpus, table: str, nlist: int, n: int) -> float:
+    """Build the IVF table, centroids fit on a FAISS-style sample (~40
+    pts per cell — a full-corpus KMeans at 10^6 x 1536-d is exactly the
+    cost ``fit_fraction`` exists to avoid). Returns build seconds."""
+    from conversation_with_vector_db_spark.operators.ann import (
+        ivf_table_create,
+    )
+
+    shutil.rmtree(table, ignore_errors=True)
+    t0 = time.perf_counter()
+    ivf_table_create(spark, corpus, table, nlist=nlist,
+                     fit_fraction=min(1.0, (40.0 * nlist) / n))
+    return round(time.perf_counter() - t0, 3)
+
+
+def _ivf_table_probe(spark, table: str, queries, exact, nprobe: int,
+                     reps: int) -> dict:
+    """One probe setting over a built IVF table: min-of-reps query
+    wall, recall@10 against ``exact``, and the fraction of the table's
+    files the probed cells select — counted over the manifest's live
+    segments, the list the probe's scan is pruned from."""
+    from conversation_with_vector_db_spark.operators.ann import (
+        _load_centroids,
+        ivf_probed_cells,
+        ivf_table_topk,
+        recall_at_k,
+    )
+    from conversation_with_vector_db_spark.sources.snapshot_log import (
+        live_segments,
+        segment_path,
+    )
+    from conversation_with_vector_db_spark.sources.transactional import (
+        _partition_of,
+    )
+
+    probe = ivf_table_topk(spark, table, queries, k=10, nprobe=nprobe)
+    cells = {
+        str(int(r["cell"]))
+        for r in ivf_probed_cells(
+            _load_centroids(spark, table), queries, nprobe=nprobe
+        ).select("cell").distinct().collect()
+    }
+    n_files = {
+        seg: sum(
+            f.endswith(".parquet")
+            for f in os.listdir(segment_path(table, seg))
+        )
+        for seg in live_segments(table)
+    }
+    probed = sum(
+        n for seg, n in n_files.items() if _partition_of(seg, "cell") in cells
+    )
+    return {
+        "query_sec": _timed_noop(probe, reps),
+        "recall": round(recall_at_k(probe, exact, k=10).first().recall, 4),
+        "file_fraction": round(probed / max(1, sum(n_files.values())), 4),
+    }
+
+
 def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
               lsh_bits: int = 48, lsh_bands: int = 6,
               methods: tuple = ALL_METHODS,
@@ -155,9 +224,6 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
 
     from conversation_with_vector_db_spark.operators.ann import (
         hyperplane_lsh_topk,
-        ivf_topk,
-        ivf_topk_indexed,
-        ivf_write_index,
         recall_at_k,
         with_lsh_bands,
     )
@@ -175,12 +241,7 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
         out["noise_rank"] = noise_rank
 
     def timed(label, df):
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[label] = round(best, 3)
+        out[label] = _timed_noop(df, reps)
         return df
 
     # The exact baseline always runs: it is the recall denominator.
@@ -208,57 +269,18 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
             .distinct().count()
         )
         out["lsh_candidate_fraction"] = round(n_cand / (n_q * n), 4)
-    # Centroid fit on a FAISS-style sample (~40 pts per cell) —
-    # full-corpus KMeans at 10^6 x 1536-d is exactly the cost the
-    # fit_fraction knob exists to avoid.
-    fit_frac = min(1.0, (40.0 * nlist) / n)
     if "ivf" in methods:
-        t0 = time.perf_counter()
-        ivf = ivf_topk(corpus, queries, k=10, nlist=nlist,
-                       nprobe=nprobe, fit_fraction=fit_frac)
-        out["ivf_fit_sec"] = round(time.perf_counter() - t0, 3)
-        ivf = timed(f"ivf_{nlist}c{nprobe}p_query_sec", ivf)
-        out["ivf_recall"] = round(
-            recall_at_k(ivf, exact, k=10).first().recall, 4
+        # IVF table: the build is paid once, then each probe reads only
+        # its cells' segments — the documented 100 TB read path.
+        table = os.path.join(workdir, f"ann_ivf_{n}_{dim}d")
+        out["ivf_index_build_sec"] = _ivf_table_build(
+            spark, corpus, table, nlist, n
         )
-        out["ivf_scan_fraction"] = round(nprobe / nlist, 4)
-    if "ivf_indexed" in methods:
-        # Write-time IVF index: build cost paid once, then the probe
-        # is a partition-pruned scan — the documented 100 TB read path.
-        idx_path = os.path.join(workdir, f"ann_ivfidx_{n}_{dim}d")
-        shutil.rmtree(idx_path, ignore_errors=True)
-        t0 = time.perf_counter()
-        ivf_write_index(corpus, idx_path, nlist=nlist,
-                        fit_fraction=fit_frac)
-        out["ivf_index_build_sec"] = round(time.perf_counter() - t0, 3)
-        ivfx = timed(f"ivf_indexed_{nlist}c{nprobe}p_query_sec",
-                     ivf_topk_indexed(spark, idx_path, queries, k=10,
-                                      nprobe=nprobe))
-        out["ivf_indexed_recall"] = round(
-            recall_at_k(ivfx, exact, k=10).first().recall, 4
-        )
-        # Probed-file fraction the indexed scan actually lists:
-        # re-derive the probed cell set the same way the probe does.
-        from conversation_with_vector_db_spark.operators.ann import (
-            ivf_probed_cells,
-        )
-        all_files = glob.glob(f"{idx_path}/data/cell=*/*.parquet")
-        cent = spark.read.parquet(f"{idx_path}/centroids")
-        cells = {
-            int(r["cell"])
-            for r in ivf_probed_cells(
-                cent, queries, nprobe=nprobe
-            ).select("cell").distinct().collect()
-        }
-        probed_files = [
-            f for f in all_files
-            if int(os.path.basename(os.path.dirname(f)).split("=")[1])
-            in cells
-        ]
-        out["ivf_indexed_file_fraction"] = round(
-            len(probed_files) / max(1, len(all_files)), 4
-        )
-        shutil.rmtree(idx_path, ignore_errors=True)
+        point = _ivf_table_probe(spark, table, queries, exact, nprobe, reps)
+        out[f"ivf_{nlist}c{nprobe}p_query_sec"] = point["query_sec"]
+        out["ivf_recall"] = point["recall"]
+        out["ivf_file_fraction"] = point["file_fraction"]
+        shutil.rmtree(table, ignore_errors=True)
     if "bq" in methods:
         # Binary sign quantization: the candidate stage reads ~dim/64
         # longs per row (1/32 of the raw bytes) and ranks by
@@ -380,21 +402,15 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
 
 def run_nlist_sweep(spark, n: int, dim: int, workdir: str,
                     pairs: list[tuple[int, int]], reps: int = 2) -> dict:
-    """nlist scaling for the write-time IVF index (VERDICT r6 #6): a
+    """nlist scaling for the IVF table (VERDICT r6 #6): a
     10^8-vector index wants nlist ~ sqrt(n), so the fit/build/query
     cost curve past the historical nlist=32 must be measured, not
     extrapolated. One corpus, ONE exact baseline (shared recall
-    denominator), then per distinct nlist: one index build (sampled
+    denominator), then per distinct nlist: one table build (sampled
     KMeans fit at ~40 pts/cell), and per (nlist, nprobe) pair: the
-    partition-pruned probe's min-of-reps wall, recall@10, and the
-    fraction of index files the probed cells actually touch — the
-    quantity that tracks nprobe/nlist and IS the 100 TB read bound."""
-    from conversation_with_vector_db_spark.operators.ann import (
-        ivf_probed_cells,
-        ivf_topk_indexed,
-        ivf_write_index,
-        recall_at_k,
-    )
+    segment-pruned probe's min-of-reps wall, recall@10, and the
+    fraction of table files the probed cells select — the quantity
+    that tracks nprobe/nlist and IS the 100 TB read bound."""
     from conversation_with_vector_db_spark.operators.vector import (
         collect_query_vectors,
         matmul_topk,
@@ -405,62 +421,26 @@ def run_nlist_sweep(spark, n: int, dim: int, workdir: str,
         "n_vectors": n, "n_queries": n_q, "dim": dim, "points": [],
     }
     exact = matmul_topk(corpus, collect_query_vectors(queries), k=10)
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        exact.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    out["exact_matmul_sec"] = round(best, 3)
+    out["exact_matmul_sec"] = _timed_noop(exact, reps)
 
     for nlist in sorted({nl for nl, _ in pairs}):
-        idx_path = os.path.join(
-            workdir, f"ann_ivfidx_{n}_{dim}d_nl{nlist}"
-        )
-        shutil.rmtree(idx_path, ignore_errors=True)
-        fit_frac = min(1.0, (40.0 * nlist) / n)
-        t0 = time.perf_counter()
-        ivf_write_index(corpus, idx_path, nlist=nlist,
-                        fit_fraction=fit_frac)
-        build_sec = round(time.perf_counter() - t0, 3)
-        all_files = glob.glob(f"{idx_path}/data/cell=*/*.parquet")
-        cent = spark.read.parquet(f"{idx_path}/centroids")
+        table = os.path.join(workdir, f"ann_ivf_{n}_{dim}d_nl{nlist}")
+        build_sec = _ivf_table_build(spark, corpus, table, nlist, n)
         for nl, nprobe in pairs:
             if nl != nlist:
                 continue
-            probe = ivf_topk_indexed(spark, idx_path, queries, k=10,
-                                     nprobe=nprobe)
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                probe.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            cells = {
-                int(r["cell"])
-                for r in ivf_probed_cells(cent, queries, nprobe=nprobe)
-                .select("cell").distinct().collect()
-            }
-            probed = [
-                f for f in all_files
-                if int(
-                    os.path.basename(os.path.dirname(f)).split("=")[1]
-                ) in cells
-            ]
             point = {
                 "nlist": nlist,
                 "nprobe": nprobe,
                 "index_build_sec": build_sec,
-                "query_sec": round(best, 3),
-                "recall": round(
-                    recall_at_k(probe, exact, k=10).first().recall, 4
-                ),
                 "scan_fraction": round(nprobe / nlist, 4),
-                "file_fraction": round(
-                    len(probed) / max(1, len(all_files)), 4
+                **_ivf_table_probe(
+                    spark, table, queries, exact, nprobe, reps
                 ),
             }
             out["points"].append(point)
             print(json.dumps(point), file=sys.stderr, flush=True)
-        shutil.rmtree(idx_path, ignore_errors=True)
+        shutil.rmtree(table, ignore_errors=True)
     corpus.unpersist()
     return out
 
@@ -488,7 +468,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--sweep", default=None,
-        help="nlist:nprobe pairs for the write-time-index nlist sweep, "
+        help="nlist:nprobe pairs for the IVF-table nlist sweep, "
         "e.g. '32:8,128:16,128:32,512:32,512:64' — replaces the "
         "per-method run with run_nlist_sweep",
     )
