@@ -1379,30 +1379,30 @@ def _bpe_step_sql(n: int) -> str:
     i.e. odd ranks within each island of consecutive candidates."""
     p = n - 1
     return f"""
-p{n} AS (
+p{n} AS MATERIALIZED (
     SELECT syms[t.i] AS l, syms[t.i + 1] AS r, CAST(sum(wc) AS BIGINT) AS c
     FROM s{p}, unnest(generate_series(1, len(syms) - 1)) AS t(i)
     GROUP BY 1, 2
 ),
-m{n} AS (SELECT l, r, c FROM p{n} ORDER BY c DESC, l, r LIMIT 1),
-cand{n} AS (
+m{n} AS MATERIALIZED (SELECT l, r, c FROM p{n} ORDER BY c DESC, l, r LIMIT 1),
+cand{n} AS MATERIALIZED (
     SELECT word, t.i AS i
     FROM s{p}, unnest(generate_series(1, len(syms) - 1)) AS t(i)
     WHERE syms[t.i] = (SELECT l FROM m{n})
       AND syms[t.i + 1] = (SELECT r FROM m{n})
 ),
-runs{n} AS (
+runs{n} AS MATERIALIZED (
     SELECT word, i,
            i - row_number() OVER (PARTITION BY word ORDER BY i) AS g
     FROM cand{n}
 ),
-mp{n} AS (
+mp{n} AS MATERIALIZED (
     SELECT word, i FROM (
         SELECT word, i,
                row_number() OVER (PARTITION BY word, g ORDER BY i) AS k
         FROM runs{n}) WHERE k % 2 = 1
 ),
-s{n} AS (
+s{n} AS MATERIALIZED (
     SELECT s.word AS word, s.wc AS wc,
            list(CASE WHEN mp.i IS NOT NULL
                 THEN (SELECT l || r FROM m{n})
@@ -1414,7 +1414,7 @@ s{n} AS (
     WHERE mq.i IS NULL
     GROUP BY s.word, s.wc
 ),
-v{n} AS (
+v{n} AS MATERIALIZED (
     SELECT CAST(count(DISTINCT u.s) AS BIGINT) AS n_symbols
     FROM s{n}, unnest(syms) AS u(s)
 )"""
@@ -1423,15 +1423,23 @@ v{n} AS (
 # The 3-step unrolled training CTEs (ending at s3: per-word symbol
 # sequences under all three merges) — shared by the merge-table query
 # and the encode query below.
+#
+# Every CTE is AS MATERIALIZED on purpose. DuckDB 1.0 inlines a CTE at
+# each place it is referenced; each step reads s{n-1} several times and
+# the 1-row m{n} through many scalar `(SELECT l FROM m{n})` lookups, so
+# inlining re-expands the whole chain below at every reference and the
+# plan grows geometrically with the step count (at sf0.001 it runs out
+# of DuckDB's 12.5 GiB default memory limit; spilling to a temp
+# directory does not help). Materialized, each CTE is evaluated once.
 _BPE_CTES = (
     """
-WITH words AS (
+WITH words AS MATERIALIZED (
     SELECT t.tok AS word, CAST(count(*) AS BIGINT) AS wc
     FROM documents,
          unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t(tok)
     GROUP BY 1
 ),
-s0 AS (
+s0 AS MATERIALIZED (
     SELECT word, wc,
            list_transform(generate_series(1, length(word)),
                           i -> substr(word, i, 1)) AS syms
