@@ -136,7 +136,7 @@ def ann_economics(spark, sf: float) -> dict:
             corpus, queries, k=10, n_bits=48, n_bands=6, dim=dim,
             probe_bits=1,
         ))
-        # The IVF table build (KMeans fit + cell-tagged write) is paid
+        # The IVF table build (k-means fit + cell-tagged write) is paid
         # once; report it separately from the probe-time query.
         t0 = time.perf_counter()
         ivf_table_create(spark, corpus, f"{tmpdir}_ivf", nlist=nlist)

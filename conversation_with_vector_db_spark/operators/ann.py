@@ -10,9 +10,12 @@ fits a data-parallel engine; the Spark-native strategies are:
   an equality join on band keys; survivors are exactly rescored. The
   plane matrix is deterministic (md5-seeded), so results are stable.
 * :func:`ivf_table_create` / :func:`ivf_table_topk` — inverted-file
-  index: MLlib KMeans (fixed seed) partitions the corpus into nlist
-  cells, written as a transactional snapshot-log table whose segments
-  are tagged by cell. A query probes the nprobe nearest centroids and
+  index: a seeded spherical (cosine) k-means, fitted in numpy on the
+  driver over a bounded hash-ordered sample, partitions the corpus
+  into nlist cells, written as a transactional snapshot-log table
+  whose segments are tagged by cell. Create, rebalance and upsert
+  assign a vector to its nearest centroid by one cosine rule; a query
+  probes its nprobe nearest centroids (driver numpy, no Spark job) and
   the scan opens only those cells' segments (pruned at the manifest's
   segment list); :func:`_matmul_rescore_probed` scores them. The same
   table takes upserts, deletes, rebalances and time-travel reads.
@@ -30,10 +33,9 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cache import scoped_cache
 from .vector import (
     brute_force_topk,
-    cosine_similarity,
+    collect_query_vectors,
     cosine_with_norms,
     l2_norm,
     majority_dim,
@@ -280,34 +282,73 @@ def hyperplane_lsh_topk(
     return topk_per_query(scored, k, tiebreak_col=id_col)
 
 
+#: The IVF fit reads at most this many vectors per cell (FAISS's upper
+#: training guideline), so the fit stays model-sized at any corpus size.
+FIT_ROWS_PER_CELL = 256
+
+
+def _spherical_kmeans(rows: list, nlist: int, seed: int):
+    """Cosine k-means of the collected fit sample ``rows`` on the
+    driver: at most nlist unit centroids, one per distinct direction.
+    Vectors with a non-finite element or zero norm carry no direction
+    and are dropped. Seeded k-means++ picks the start (each pick drawn
+    with probability proportional to its cosine distance from the
+    nearest pick so far), then 20 spherical :func:`..clustering.lloyd`
+    steps move it."""
+    import numpy as np
+
+    from .clustering import lloyd
+
+    x = np.asarray(rows, dtype=np.float64)
+    if x.size:
+        x = x[np.isfinite(x).all(axis=1)]
+        norms = np.linalg.norm(x, axis=1)
+        x = x[norms > 0] / norms[norms > 0, None]
+        # drop repeats, keeping first occurrences in the sample's order
+        x = x[np.sort(np.unique(x, axis=0, return_index=True)[1])]
+    if x.size == 0:
+        raise ValueError(
+            "ivf_fit_cells: empty corpus (or no vector with a direction) "
+            "— cannot fit an IVF cell model; callers should "
+            "short-circuit the no-data case"
+        )
+    rng = np.random.default_rng(seed)
+    picked = [int(rng.integers(len(x)))]
+    best = x @ x[picked[0]]
+    for _ in range(1, min(nlist, len(x))):
+        gap = np.clip(1.0 - best, 0.0, None)
+        gap[picked] = 0.0
+        if gap.sum() == 0:  # the rest round to picked directions
+            break
+        picked.append(int(rng.choice(len(x), p=gap / gap.sum())))
+        best = np.maximum(best, x @ x[picked[-1]])
+    return lloyd(x, x[picked], 20, spherical=True)
+
+
 def ivf_fit_cells(
     corpus: DataFrame,
     nlist: int = 16,
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float | None = None,
     dim: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Seeded-KMeans cell model: ``(corpus + cell column, centroids)``.
-
-    ``fit_fraction`` trains the centroids on a deterministic sample
-    (the standard IVF practice at corpus scale — FAISS trains on ~30x
-    nlist points, not the full set); the ASSIGNMENT transform still
-    covers every corpus row, so the index is always complete.
+    id_col: str = "vec_id",
+) -> tuple:
+    """Spherical k-means cell model, fitted on the driver:
+    ``(corpus + cell column, centroids)``, the centroids a float64
+    matrix of at most nlist rows. ONE Spark job collects the fit
+    sample: the first :data:`FIT_ROWS_PER_CELL` x nlist vectors in
+    ``xxhash64(vector, seed)`` order, ties by the vector — a pure
+    function of the DATA, so the fit is the same under any scan
+    layout. Every corpus row is then assigned by
+    :func:`ivf_assign_cells`, the rule upserts use too.
 
     ``dim`` pins the indexed dimension explicitly; when omitted it is
     the MODE of non-NULL vector sizes (:func:`majority_dim`), never an
     arbitrary first() row — on a mixed-dimension corpus the first-row
     derivation depended on partition order and a minority-dim row
     could silently drop the majority of the corpus (ADVICE r10).
+    NULL/ragged embeddings could never be scored and are excluded.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # NULL/ragged embeddings cannot be indexed (they could never be
-    # scored) and crash MLlib's fit/transform with a raw JVM error —
-    # exclude them up front, the same malformed-row contract the
-    # hand-rolled vector families enforce via size(q) == dim.
     if dim is None:
         dim = majority_dim(corpus, vec_col)
     if dim is None:
@@ -318,126 +359,50 @@ def ivf_fit_cells(
     corpus = corpus.where(
         F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
     )
-    corpus_v = corpus.withColumn("_features", array_to_vector(vec_col))
-    # Hash-stratified fit sample (clustering.py's stated at-scale
-    # posture), NOT df.sample: Bernoulli sampling draws from a
-    # per-partition RNG, so the sample MEMBERSHIP — and with it the
-    # fitted centroids — would depend on the scan layout
-    # (maxPartitionBytes, file count). xxhash64 over the vector is a
-    # pure function of the DATA; no shuffle, layout-invariant.
-    fit_on = (
-        corpus_v
-        if fit_fraction is None
-        else corpus_v.where(
-            F.pmod(
-                F.xxhash64(F.col(vec_col), F.lit(seed)), F.lit(1_000_000)
-            )
-            < F.lit(int(fit_fraction * 1_000_000))
-        )
+    sample = (
+        corpus.select(vec_col)
+        .orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)), vec_col)
+        .limit(FIT_ROWS_PER_CELL * nlist)
+        .collect()
     )
-    # Canonical physical layout for the fit: MLlib's kmeans|| init
-    # seeds its RNG per (seed, partition) and scans rows in partition
-    # order, so the SAME multiset of vectors under a different
-    # partitioning yields different centroids — the one
-    # layout-dependence the determinism sweep (tools/
-    # determinism_sweep.py) found across the registry. A FIXED-width
-    # repartition hashed on the vector plus an in-partition sort
-    # makes the fit a pure function of the data (measured: identical
-    # results across 64 KB vs 128 MB scan splits and 8 vs 13 shuffle
-    # partitions) while keeping the fit parallel — 16 partitions is
-    # plenty for a model-sized fit input (FAISS trains on ~30x nlist
-    # points; pass fit_fraction at corpus scale).
-    fit_on = fit_on.repartition(16, F.col(vec_col)).sortWithinPartitions(
-        vec_col
+    cents = _spherical_kmeans([r[0] for r in sample], nlist, seed)
+    return ivf_assign_cells(corpus, cents, id_col, vec_col), cents
+
+
+def _nearest_cells(vecs, centroids, n: int):
+    """``(len(vecs), n)`` cell ids, nearest first by cosine, ties to the
+    LOWEST cell. Every IVF cell decision (the fit's assignment, an
+    upsert's, a query's probe) scores here with
+    :func:`..vector.score_batch`, so a stored vector and the same
+    vector as a query compute the same doubles. A vector score_batch
+    cannot score (NULL, wrong size, NaN element) ties on every cell."""
+    import numpy as np
+
+    sims = np.column_stack(
+        [
+            s.to_numpy(dtype=np.float64, na_value=-np.inf)
+            for s in score_batch(vecs, *query_matrix(centroids))
+        ]
     )
-    fit_on = scoped_cache(fit_on)
-    # Degenerate-k guard: MLlib's block KMeans aggregator hits an
-    # ArrayIndexOutOfBounds when k exceeds the number of DISTINCT
-    # training points (reproduced: 3 distinct x dim 64, k=16). Cap k
-    # at the distinct count — the fit sample is small by design
-    # (FAISS-style ~30x nlist points), so the distinct() is a
-    # model-sized job, and on any real corpus distinct >> nlist makes
-    # this a no-op. Also covers the empty case with a named error.
-    n_distinct = fit_on.select(vec_col).distinct().count()
-    if n_distinct == 0:
-        raise ValueError(
-            "ivf_fit_cells: empty corpus (or empty fit sample) — "
-            "cannot fit an IVF cell model; callers should "
-            "short-circuit the no-data case"
-        )
-    k_eff = min(nlist, n_distinct)
-    # Best-of-3 seeded fits by training cost (WSSSE): kmeans|| is a
-    # local-optimum roulette — any single canonical layout that wins
-    # on one fixture loses on another (measured: one layout scored
-    # recall 0.70/0.60 across sf0.001/sf0.01, another 0.62/0.82).
-    # Three deterministic restarts chosen by the objective are the
-    # standard remedy, stay a pure function of the data, and cost 3x
-    # a model-sized fit. Tie-break: lowest cost, then lowest seed.
-    model = min(
-        (
-            KMeans(
-                k=k_eff, seed=seed + i, featuresCol="_features"
-            ).fit(fit_on)
-            for i in range(3)
-        ),
-        key=lambda m: m.summary.trainingCost,
-    )
-    assigned = (
-        model.transform(corpus_v)
-        .withColumnRenamed("prediction", "cell")
-        .drop("_features")
-    )
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n]
+
+
+def ivf_probe(centroids, query_vectors: list, nprobe: int = 4) -> list:
+    """``(qid, query vector, cell)`` for each query's ``nprobe`` nearest
+    cells, in numpy on the driver over the collected query vectors
+    (:func:`..vector.collect_query_vectors`): no Spark job. The shape
+    :func:`_matmul_rescore_probed` consumes."""
+    cells = _nearest_cells([v for _, v in query_vectors], centroids, nprobe)
+    return [
+        (qid, vec, int(c))
+        for (qid, vec), row in zip(query_vectors, cells)
+        for c in row
     ]
-    cent_df = corpus.sparkSession.createDataFrame(
-        centroids, ["cell", "centroid"]
-    )
-    return assigned, cent_df
-
-
-def ivf_probed_cells(
-    cent_df: DataFrame,
-    queries: DataFrame,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(qid, _qvec, cell) — the nprobe nearest centroids per query.
-
-    The centroid table is nlist rows (broadcast-tiny by construction);
-    the crossJoin is query x nlist, never query x corpus.
-    """
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("_qvec")
-    )
-    probe = q.crossJoin(F.broadcast(cent_df)).select(
-        "qid",
-        "_qvec",
-        "cell",
-        cosine_similarity(F.col("_qvec"), F.col("centroid")).alias("_csim"),
-    )
-    return topk_per_query(
-        probe, nprobe, query_col="qid", score_col="_csim",
-        tiebreak_col="cell",
-    ).select("qid", "_qvec", "cell")
-
-
-def _reject_null_query_probes(probed_rows: list) -> None:
-    """NULL query vectors are a caller bug surfaced at plan time —
-    the same contract as :func:`..vector.collect_query_vectors`.
-    Without this, :func:`_matmul_rescore_probed` would silently return
-    no rows for such a query."""
-    if any(r["_qvec"] is None for r in probed_rows):
-        raise ValueError(
-            "indexed top-k: NULL query embedding — filter or fix the "
-            "query side before probing"
-        )
 
 
 def _matmul_rescore_probed(
     scan: DataFrame,
-    probed_rows: list,
+    probes: list,
     k: int,
     id_col: str,
     vec_col: str,
@@ -446,22 +411,21 @@ def _matmul_rescore_probed(
     is scored ONLY against the queries that probed its cell, one
     :func:`..vector.score_batch` call per cell group, so the 1536-d
     embeddings never fan out into per-pair rows: the candidate stream
-    stays (qid, id, sim) narrow. Probed rows are already collected
+    stays (qid, id, sim) narrow. ``probes`` are :func:`ivf_probe`'s
+    ``(qid, query vector, cell)`` triples, already on the driver
     (n_queries x nprobe — tiny), so the per-cell query matrices fold
-    into the closure like matmul_topk's query matrix. No probed rows
-    means no scores: the result is an empty top-k frame."""
+    into the closure like matmul_topk's query matrix. No probes means
+    no scores: the result is an empty top-k frame."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     by_cell: dict[int, list] = {}
-    for r in probed_rows:
-        if r["_qvec"] is None:
-            continue
-        by_cell.setdefault(int(r["cell"]), []).append(r)
+    for qid, vec, cell in probes:
+        by_cell.setdefault(int(cell), []).append((qid, vec))
     cell_mats = {
         cell: (
-            [r["qid"] for r in rows],
-            *query_matrix([[float(x) for x in r["_qvec"]] for r in rows]),
+            [qid for qid, _ in rows],
+            *query_matrix([vec for _, vec in rows]),
         )
         for cell, rows in by_cell.items()
     }
@@ -508,7 +472,6 @@ def ivf_table_create(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float | None = None,
     extra_cols: tuple[str, ...] = (),
 ) -> int:
     """The IVF index as a TRANSACTIONAL snapshot-log table: cell-tagged
@@ -523,10 +486,10 @@ def ivf_table_create(
     (:func:`ivf_table_topk`'s ``where``)."""
     from ..sources.transactional import create_partitioned_table
 
-    assigned, cent_df = ivf_fit_cells(
-        corpus, nlist, vec_col, seed, fit_fraction
+    assigned, cents = ivf_fit_cells(
+        corpus, nlist, vec_col, seed, id_col=id_col
     )
-    rel = _stage_centroids(cent_df, table_dir)
+    rel = _stage_centroids(cents, table_dir)
     return create_partitioned_table(
         spark,
         assigned.select(id_col, vec_col, *extra_cols, "cell"),
@@ -537,7 +500,36 @@ def ivf_table_create(
     )
 
 
-def _stage_centroids(cent_df: DataFrame, table_dir: str) -> str:
+def _write_centroids(cents, path: str) -> None:
+    """Write the centroid matrix as one parquet file of
+    ``(cell int, centroid array<double>)`` rows under the directory
+    ``path`` (replaced if present), with pyarrow: no Spark job."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    table = pa.table(
+        {"cell": pa.array(range(len(cents)), pa.int32()),
+         "centroid": cents.tolist()}
+    )
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+
+def _read_centroids(path: str):
+    """The (nlist, dim) float64 centroid matrix stored under ``path``
+    (row i is cell i), read by pyarrow on the driver."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path).sort_by("cell")
+    return np.array(table.column("centroid").to_pylist(), dtype=np.float64)
+
+
+def _stage_centroids(cents, table_dir: str) -> str:
     """Write a centroid-model sidecar under a fresh content-addressed
     name (``centroids/m-<uuid>``) and return its table-relative path.
     Invisible until a commit's ``meta["centroids"]`` references it —
@@ -547,12 +539,12 @@ def _stage_centroids(cent_df: DataFrame, table_dir: str) -> str:
     dying after staging leaves an unreferenced sidecar the age-gated
     :func:`ivf_table_vacuum` reaps like any uncommitted segment."""
     rel = f"centroids/m-{uuid.uuid4().hex}"
-    cent_df.coalesce(1).write.parquet(f"{table_dir}/{rel}")
+    _write_centroids(cents, f"{table_dir}/{rel}")
     return rel
 
 
-def _load_centroids(spark, table_dir: str, version: int | None = None):
-    """Centroid model effective at ``version``: the manifest-published
+def _load_centroids(table_dir: str, version: int | None = None):
+    """Centroid matrix effective at ``version``: the manifest-published
     ``meta["centroids"]`` pointer (atomic with its assignment — time
     travel gets the exact model its version committed with). Every IVF
     writer commits that pointer; a version without one raises."""
@@ -566,58 +558,50 @@ def _load_centroids(spark, table_dir: str, version: int | None = None):
             f"{table_dir} has no centroid model at v{version}: its "
             'manifest meta carries no "centroids" pointer'
         )
-    return spark.read.parquet(f"{table_dir}/{rel}")
+    return _read_centroids(f"{table_dir}/{rel}")
 
 
 def ivf_assign_cells(
     updates: DataFrame,
-    cent_df: DataFrame,
+    centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``updates`` + a ``cell`` column: nearest centroid by cosine —
-    the PROBE's metric, so an upserted vector is found whenever its
-    cell is probed. query x nlist crossJoin (broadcast-tiny),
-    ``max_by`` argmax — no window, no shuffle beyond the final
-    aggregation on the update batch.
+    """``updates`` + an INT ``cell`` column: each vector's nearest
+    centroid by cosine, ties to the lowest cell — :func:`_nearest_cells`,
+    the probe's own rule, so a vector is found whenever the cell its
+    embedding probes first is probed. Create, rebalance and upsert all
+    assign here. Row-local: a scalar pandas UDF with the centroid
+    matrix in its closure — no join, no shuffle.
 
     A NULL vector, or one whose size differs from the centroids', can
-    never be scored against the index: it raises (per row, inside the
-    job that assigns it — no extra Spark job) instead of landing in
-    cell 0 with a NULL similarity forever."""
-    vec = F.col(vec_col)
-    sims = updates.crossJoin(F.broadcast(cent_df)).select(
-        F.col(id_col),
-        "cell",
-        F.when(
-            F.size(vec) == F.size("centroid"),
-            cosine_similarity(vec, F.col("centroid")),
-        )
-        .otherwise(
-            F.raise_error(
-                F.format_string(
-                    "ivf_assign_cells: vector of %s=%s has size %s, the "
-                    "index centroids have size %s",
-                    F.lit(id_col),
-                    F.col(id_col).cast("string"),
-                    F.size(vec).cast("string"),
-                    F.size("centroid").cast("string"),
+    never be scored against the index: it raises (inside the job that
+    assigns it — no extra Spark job) instead of landing in cell 0
+    forever."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    dim = centroids.shape[1]
+
+    # no parameter annotations: PEP 563 (future annotations) stringifies
+    # them, which pandas_udf's signature inference rejects.
+    @pandas_udf("int")
+    def nearest(ids, vecs):
+        arr = vecs.to_numpy()
+        for i, v in enumerate(arr):
+            if v is None or len(v) != dim:
+                raise ValueError(
+                    f"ivf_assign_cells: vector of {id_col}={ids.iloc[i]} "
+                    f"has size {'NULL' if v is None else len(v)}, the "
+                    f"index centroids have size {dim}"
                 )
-            )
+        return pd.Series(_nearest_cells(arr, centroids, 1)[:, 0]).astype(
+            "int32"
         )
-        .alias("_csim"),
+
+    return updates.withColumn(
+        "cell", nearest(F.col(id_col), F.col(vec_col))
     )
-    best = sims.groupBy(id_col).agg(
-        F.expr(
-            # Ties break to the LOWEST cell id (negate in the struct),
-            # matching ivf_probed_cells' deterministic ordering.
-            "max_by(cell, named_struct('s', _csim, 'c', -cell)) AS cell"
-        )
-    )
-    # INT to match ivf_fit_cells' KMeans prediction dtype — mixed
-    # int/long cell columns across segments break the parquet read.
-    best = best.withColumn("cell", F.col("cell").cast("int"))
-    return updates.join(best, id_col)
 
 
 def ivf_table_upsert(
@@ -636,6 +620,12 @@ def ivf_table_upsert(
     upsert would strand a stale twin the probe could still find).
     Old-row lookup prunes by the recorded id min/max before opening
     any cell's files.
+
+    The assigned batch is evaluated ONCE (``localCheckpoint``): the
+    global upsert reads it three times (key min/max, hit-set semi-join,
+    staged write), each a re-run of the caller's chunk/embed/assign
+    plan otherwise. Its blocks are freed when the attempt ends, so a
+    sink upserting per micro-batch holds at most one batch.
 
     Conflict retries happen HERE, not inside the upsert: when the
     writer that won the race was :func:`ivf_table_rebalance`, the
@@ -666,13 +656,18 @@ def ivf_table_upsert(
     )
     last: Exception | None = None
     for _ in range(max_replans):
-        cent_df = _load_centroids(spark, table_dir)
-        assigned = ivf_assign_cells(updates, cent_df, id_col, vec_col)
+        assigned = (
+            ivf_assign_cells(
+                updates, _load_centroids(table_dir), id_col, vec_col
+            )
+            .select(*table_cols, "cell")
+            .localCheckpoint(eager=True)
+        )
         try:
             return upsert_by_key_global(
                 spark,
                 table_dir,
-                assigned.select(*table_cols, "cell"),
+                assigned,
                 key=id_col,
                 partition_col="cell",
                 txn=txn,
@@ -680,6 +675,10 @@ def ivf_table_upsert(
             )
         except CommitConflictError as e:
             last = e
+        finally:
+            # Free the checkpoint's blocks now; otherwise they live
+            # until the driver JVM garbage-collects the RDD.
+            assigned._jdf.queryExecution().analyzed().rdd().unpersist(False)
     raise last if last is not None else CommitConflictError(table_dir)
 
 
@@ -703,7 +702,6 @@ def ivf_table_rebalance(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float | None = None,
     max_replans: int = 4,
 ) -> int:
     """Atomic index REBUILD: re-fit the centroid model on the current
@@ -744,13 +742,13 @@ def ivf_table_rebalance(
             return head
         current = _read_segments(spark, table_dir, bases).drop("cell")
         keep_cols = current.columns  # id + vector + metadata ride along
-        assigned, cent_df = ivf_fit_cells(
-            current, nlist, vec_col, seed, fit_fraction
+        assigned, cents = ivf_fit_cells(
+            current, nlist, vec_col, seed, id_col=id_col
         )
         new_rels = _stage_partition_segments(
             assigned.select(*keep_cols, "cell"), table_dir, "cell"
         )
-        cent_rel = _stage_centroids(cent_df, table_dir)
+        cent_rel = _stage_centroids(cents, table_dir)
         try:
             return commit_segments(
                 table_dir, added=new_rels, removed=bases, op="rebalance",
@@ -865,18 +863,19 @@ def ivf_table_topk(
     of an unfiltered ranking."""
     from ..sources.transactional import read_table
 
-    cent_df = _load_centroids(spark, table_dir, version)
-    probed_plan = ivf_probed_cells(cent_df, queries, nprobe, id_col, vec_col)
-    probed_rows = probed_plan.collect()
-    if not probed_rows:
+    probes = ivf_probe(
+        _load_centroids(table_dir, version),
+        collect_query_vectors(queries, id_col, vec_col),
+        nprobe,
+    )
+    if not probes:
         # No queries -> no probed cells: an empty top-k frame. The
         # false filter folds the scan away, so no query reads a row.
         scan = read_table(spark, table_dir, version=version)
         return _matmul_rescore_probed(
             scan.filter(F.lit(False)), [], k, id_col, vec_col
         )
-    _reject_null_query_probes(probed_rows)
-    cells = {str(int(r["cell"])) for r in probed_rows}
+    cells = {str(cell) for _, _, cell in probes}
     scan = read_table(
         spark, table_dir, version=version, partitions=cells,
         partition_col="cell",
@@ -885,7 +884,7 @@ def ivf_table_topk(
         scan = scan.filter(
             F.expr(where) if isinstance(where, str) else where
         )
-    return _matmul_rescore_probed(scan, probed_rows, k, id_col, vec_col)
+    return _matmul_rescore_probed(scan, probes, k, id_col, vec_col)
 
 
 def recall_at_k(

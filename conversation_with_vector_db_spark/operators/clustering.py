@@ -1,17 +1,17 @@
 """Deterministic embedding clustering for corpus organization.
 
 A training-data pipeline clusters document embeddings to drive topic
-balancing, mixture weighting, and diversity-aware sampling. MLlib's
-KMeans (used by the ANN/IVF index, :mod:`.ann`) is the right tool when
-approximate cells are fine, but its float accumulation order varies
-with partitioning — reruns of the same corpus can emit different
-assignments, which poisons any downstream join keyed on cluster id.
+balancing, mixture weighting, and diversity-aware sampling. Models
+fitted on a bounded collected sample (the IVF cells of :mod:`.ann`,
+the PQ codebooks of :mod:`.pq`) run :func:`lloyd`, the one driver-side
+numpy Lloyd loop; float sums there are exact for a given sample but
+not portable across engines.
 
-:func:`quantized_lloyd` is the reproducible alternative: embeddings are
-quantized to integers (``floor(x * scale + 0.5)``) and every Lloyd
-step — distances, argmin, centroid means — is exact integer or
-integer-derived arithmetic with a fixed tie rule, so the assignment is
-a pure function of the input set, independent of partitioning, task
+:func:`quantized_lloyd` is the distributed, reproducible form:
+embeddings are quantized to integers (``floor(x * scale + 0.5)``) and
+every Lloyd step — distances, argmin, centroid means — is exact integer
+or integer-derived arithmetic with a fixed tie rule, so the assignment
+is a pure function of the input set, independent of partitioning, task
 order, or engine. That makes it oracle-checkable value-for-value in
 SQL (``scale_kmeans_topics``) and stable across pipeline reruns.
 
@@ -41,6 +41,33 @@ from .vector import majority_dim
 #: full float32 precision (~7 significant digits) while bounding the
 #: integer range so squared distances stay in BIGINT.
 QUANT_SCALE = 1_000_000
+
+
+def lloyd(x, cent, iters: int, spherical: bool = False):
+    """``iters`` Lloyd steps over the rows of ``x`` from the centroids
+    ``cent``, in numpy on the driver: every row joins its nearest
+    centroid (lowest index on ties), every centroid moves to its
+    members' mean. ``spherical`` is cosine k-means over unit rows:
+    nearest is the largest inner product, and means are renormalized.
+    A centroid left without members, or with a zero mean, stays put."""
+    import numpy as np
+
+    cent = np.array(cent, dtype=np.float64)
+    for _ in range(iters):
+        if spherical:
+            assign = (x @ cent.T).argmax(1)
+        else:  # squared distances via the expanded dot form
+            assign = (
+                (x * x).sum(1)[:, None]
+                - 2.0 * x @ cent.T
+                + (cent * cent).sum(1)[None, :]
+            ).argmin(1)
+        for c in np.unique(assign):
+            mean = x[assign == c].mean(0)
+            norm = np.linalg.norm(mean) if spherical else 1.0
+            if norm > 0:
+                cent[c] = mean / norm
+    return cent
 
 
 def _half_up(x: float) -> int:

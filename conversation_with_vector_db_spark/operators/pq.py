@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .clustering import lloyd
+
 
 def pq_fit(
     corpus: DataFrame,
@@ -96,21 +98,8 @@ def pq_fit(
     books = np.empty((m, k_eff, dsub), dtype=np.float64)
     for j in range(m):
         sub = vecs[:, j * dsub:(j + 1) * dsub]
-        cent = sub[rng.choice(n, size=k_eff, replace=False)].copy()
-        for _ in range(iters):
-            # (n, k) squared distances via the expanded dot form.
-            d2 = (
-                (sub * sub).sum(1)[:, None]
-                - 2.0 * sub @ cent.T
-                + (cent * cent).sum(1)[None, :]
-            )
-            assign = d2.argmin(1)
-            for c in range(k_eff):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = sub[mask].mean(0)
-                # empty cell: keep the old centroid (deterministic).
-        books[j] = cent
+        start = sub[rng.choice(n, size=k_eff, replace=False)]
+        books[j] = lloyd(sub, start, iters)
     return books
 
 
@@ -365,7 +354,7 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float | None = None,
+    sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF-PQ: the composed 100 TB serving architecture (the
     public FAISS IVFPQ design). IVF bounds what a query READS — only
@@ -374,29 +363,26 @@ def ivf_pq_topk(
     not raw vectors; the exact-cosine refine touches raw vectors for
     only ~refine candidates per query. One code table partitioned by
     cell serves everything; the raw arrays stay cold until refine.
-    Codes encode cell RESIDUALS (IVFADC; see :func:`_with_residual`)."""
-    from .ann import ivf_fit_cells, ivf_probed_cells
+    Codes encode cell RESIDUALS (IVFADC; see :func:`_with_residual`).
+    ``sample_fraction`` bounds the codebook fit's sample
+    (:func:`pq_fit`); the IVF fit caps its own."""
+    from .ann import ivf_fit_cells, ivf_probe
     from .vector import collect_query_vectors, matmul_topk, topk_per_query
 
-    assigned, cent = ivf_fit_cells(
-        corpus, nlist, vec_col, seed, fit_fraction
+    assigned, cents = ivf_fit_cells(
+        corpus, nlist, vec_col, seed, id_col=id_col
     )
-    resid = _with_residual(assigned, cent, vec_col)
+    resid = _with_residual(assigned, cents, vec_col)
     books = pq_fit(
         resid, "_resid", m=m, k=ksub, seed=seed,
-        sample_fraction=fit_fraction,
+        sample_fraction=sample_fraction,
     )
     codes = pq_encode(resid, books, "_resid", id_col, keep_cols=("cell",))
     qvecs = collect_query_vectors(queries, id_col, vec_col)
-    probed = (
-        ivf_probed_cells(cent, queries, nprobe, id_col, vec_col)
-        .join(F.broadcast(cent), "cell")
-        .select(
-            "qid", "cell",
-            _dot(F.col("_qvec"), F.col("centroid")).alias("_bias"),
-        )
+    probed = _probe_bias(
+        corpus.sparkSession, cents, ivf_probe(cents, qvecs, nprobe)
     )
-    pairs = codes.join(F.broadcast(probed), "cell")
+    pairs = codes.join(probed, "cell")
     cands = topk_per_query(
         pq_adc_pair_scores(pairs, books, qvecs, id_col),
         refine,
@@ -416,16 +402,24 @@ def ivf_pq_topk(
     ).select("qid", id_col, "sim", "rank")
 
 
-def _dot(a, b):
-    """JVM-side dot product of two array columns (stays in codegen)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _probe_bias(spark, cents, probes: list) -> DataFrame:
+    """Broadcast ``(qid, cell, _bias)`` rows for the probed pairs
+    (:func:`..ann.ivf_probe` triples): ``_bias`` = q . coarse[cell],
+    the IVFADC term the residual-encoded ADC scores add back."""
+    import numpy as np
+
+    return F.broadcast(
+        spark.createDataFrame(
+            [
+                (int(qid), cell, float(np.asarray(vec) @ cents[cell]))
+                for qid, vec, cell in probes
+            ],
+            "qid long, cell int, _bias double",
+        )
     )
 
 
-def _with_residual(assigned: DataFrame, cent: DataFrame, vec_col: str):
+def _with_residual(assigned: DataFrame, cents, vec_col: str):
     """Attach ``_resid`` = vector - coarse centroid of its cell (the
     IVFADC residual; Jegou et al. 2011 §IV): residuals concentrate
     around zero at the intra-cell noise scale, so the PQ codebooks
@@ -437,6 +431,10 @@ def _with_residual(assigned: DataFrame, cent: DataFrame, vec_col: str):
     and 0.22 -> 0.355 on full-rank isotropic noise (the PQ worst
     case: quantization error spread over every coordinate), at
     identical code size."""
+    cent = assigned.sparkSession.createDataFrame(
+        [(i, c.tolist()) for i, c in enumerate(cents)],
+        "cell int, centroid array<double>",
+    )
     return assigned.join(F.broadcast(cent), "cell").withColumn(
         "_resid",
         F.zip_with(
@@ -454,7 +452,7 @@ def pq_write_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_fraction: float | None = None,
+    sample_fraction: float | None = None,
 ) -> None:
     """Materialize an IVF-PQ index next to the raw vectors:
 
@@ -469,16 +467,17 @@ def pq_write_index(
     Everything expensive (cell fit + assignment, codebook fit, encode)
     is paid once at write time; a query then partition-prunes the CODE
     table to nprobe cells, ADC-scans bytes, and touches the raw table
-    only for ~refine candidate rows."""
-    from .ann import ivf_fit_cells
+    only for ~refine candidate rows. ``sample_fraction`` bounds the
+    codebook fit's sample (:func:`pq_fit`)."""
+    from .ann import _write_centroids, ivf_fit_cells
 
-    assigned, cent_df = ivf_fit_cells(
-        corpus, nlist, vec_col, seed, fit_fraction
+    assigned, cents = ivf_fit_cells(
+        corpus, nlist, vec_col, seed, id_col=id_col
     )
-    resid = _with_residual(assigned, cent_df, vec_col)
+    resid = _with_residual(assigned, cents, vec_col)
     books = pq_fit(
         resid, "_resid", m=m, k=ksub, seed=seed,
-        sample_fraction=fit_fraction,
+        sample_fraction=sample_fraction,
     )
     assigned.select(id_col, vec_col, "cell").write.partitionBy(
         "cell"
@@ -488,9 +487,7 @@ def pq_write_index(
     ).write.partitionBy("cell").mode("overwrite").parquet(
         f"{path}/codes"
     )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
-    )
+    _write_centroids(cents, f"{path}/centroids")
     mm, k_eff, dsub = books.shape
     rows = [
         (j, c, [float(x) for x in books[j, c]])
@@ -534,16 +531,15 @@ def pq_topk_indexed(
     query. Same one-probe-evaluation discipline as
     :func:`..ann.ivf_table_topk`: partition filter and pair join are
     rebuilt from ONE collected probe row set."""
-    from .ann import ivf_probed_cells
-    from .vector import matmul_topk, topk_per_query
+    from .ann import _read_centroids, ivf_probe
+    from .vector import collect_query_vectors, matmul_topk, topk_per_query
 
-    cent_df = spark.read.parquet(f"{index_path}/centroids")
+    cents = _read_centroids(f"{index_path}/centroids")
     books = _load_books(spark, index_path)
-    probed_rows = ivf_probed_cells(
-        cent_df, queries, nprobe, id_col, vec_col
-    ).collect()
+    qvecs = collect_query_vectors(queries, id_col, vec_col)
+    probes = ivf_probe(cents, qvecs, nprobe)
     codes_scan = spark.read.parquet(f"{index_path}/codes")
-    if not probed_rows:
+    if not probes:
         return (
             codes_scan.filter(F.lit(False))
             .select(
@@ -553,36 +549,8 @@ def pq_topk_indexed(
                 F.lit(0).alias("rank"),
             )
         )
-    import numpy as np
-
-    qvecs = sorted(
-        (int(r["qid"]), [float(x) for x in r["_qvec"]])
-        for r in probed_rows
-    )
-    qvecs = list(dict(qvecs).items())
-    cells = sorted({int(r["cell"]) for r in probed_rows})
-    coarse = {
-        int(r["cell"]): np.asarray(r["centroid"], dtype=np.float64)
-        for r in cent_df.collect()
-    }
-    qv_by_id = {q: np.asarray(v, dtype=np.float64) for q, v in qvecs}
-    probed_df = F.broadcast(
-        spark.createDataFrame(
-            [
-                (
-                    int(r["qid"]),
-                    int(r["cell"]),
-                    # IVFADC bias: q . coarse[cell] — the codes are
-                    # residual-encoded, so ADC scores add this back.
-                    float(
-                        qv_by_id[int(r["qid"])] @ coarse[int(r["cell"])]
-                    ),
-                )
-                for r in probed_rows
-            ],
-            "qid long, cell int, _bias double",
-        )
-    )
+    cells = sorted({cell for _, _, cell in probes})
+    probed_df = _probe_bias(spark, cents, probes)
     pairs = codes_scan.filter(F.col("cell").isin(cells)).join(
         probed_df, "cell"
     )

@@ -1,7 +1,7 @@
 """ANN similarity-search queries with recall self-certification
 (SURVEY §7 Phase 1 scale path; BASELINE.md 'ANN recall' target).
 
-Approximate results depend on LSH banding / KMeans internals that ANSI
+Approximate results depend on LSH banding / k-means internals that ANSI
 SQL can't express, so these are rows-only for the driver — but each
 query RETURNS its own recall@10 against the exact brute force computed
 in the same plan, plus a ``meets_floor`` self-assertion, making the
@@ -14,9 +14,9 @@ prune far better):
 
 * hyperplane LSH 24 bits / 6 bands + 1-bit multi-probe: recall 0.98
   (0.60 before multi-probe), candidate fraction 0.88.
-* IVF KMeans 16 cells / nprobe 6 (the transactional IVF table,
-  :func:`..operators.ann.ivf_table_topk`): recall 0.82, scans 6/16 of
-  the corpus.
+* IVF spherical k-means 16 cells / nprobe 6 (the transactional IVF
+  table, :func:`..operators.ann.ivf_table_topk`): recall 0.80, scans
+  6/16 of the corpus.
 * MLlib BRP-LSH 4 tables: recall 0.98 (stock-library scale path).
 """
 
@@ -43,8 +43,8 @@ EMB_DIM = 64
 #: Per-method recall@10 floors asserted by ann_recall_suite.
 FLOORS = {
     "hyperplane_lsh_24b6band_mp1": 0.90,
-    # 0.82 at sf0.01; 0.70 at sf0.001 where 16 cells over-fragment the
-    # 50-vector corpus — the floor tracks the smallest fixture.
+    # 0.80 at sf0.01; 0.76 at sf0.001 (where 16 cells over-fragment
+    # the 50-vector corpus) and at sf0.1.
     "ivf_kmeans_16c6probe": 0.65,
     "mllib_brp_lsh_4tables": 0.95,
 }
@@ -74,9 +74,9 @@ def lsh_recall_report(
 def ivf_recall_report(
     spark: SparkSession, exact: DataFrame | None = None
 ) -> DataFrame:
-    """IVF (seeded KMeans cells, centroid probing) vs exact: the index
-    is an IVF table in a per-process scratch dir (the returned frame
-    reads it lazily)."""
+    """IVF (seeded spherical k-means cells, centroid probing) vs exact:
+    the index is an IVF table in a per-process scratch dir (the returned
+    frame reads it lazily)."""
     emb = spark.table("embeddings")
     q = _queries(emb)
     table = scratch_dir("ivfrecall")
@@ -186,7 +186,7 @@ def _with_floor(report: DataFrame) -> DataFrame:
     "ann_recall_suite",
     doc="""All three ANN strategies (multi-probe hyperplane LSH, IVF,
     MLlib BRP-LSH) recall-certified against exact brute force. LSH
-    banding / KMeans internals aren't ANSI-SQL, so the driver-checked
+    banding / k-means internals aren't ANSI-SQL, so the driver-checked
     result is the self-asserting form: one (method, meets_floor) row
     per strategy, hash-compared against the expected all-true VALUES —
     a recall regression flips a boolean and fails the gate. The full
@@ -256,9 +256,10 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: of the 16 cells, so `partitions_pruned` is TRUE by construction at
 #: every fixture scale (and the per-query economics match the
 #: `ivf_kmeans_16c6probe` recall family). Recall floor from
-#: measurement on the uniform fixtures — the ANN-hardest case —
-#: sf0.001: 0.50, sf0.01: 0.95; floor = smallest-fixture value minus
-#: a 0.10 margin for KMeans-init sensitivity to input partitioning.
+#: measurement on the uniform fixtures — the ANN-hardest case — with
+#: the MLlib fit it replaced, sf0.001: 0.50, sf0.01: 0.95; floor =
+#: smallest-fixture value minus a 0.10 margin. The driver k-means
+#: measures 0.70 / 0.85 / 0.70 at sf0.001 / sf0.01 / sf0.1.
 IDX_NLIST, IDX_NPROBE, IDX_FLOOR = 16, 6, 0.40
 
 
@@ -294,8 +295,9 @@ def ann_ivf_indexed_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import (
         _load_centroids,
         _matmul_rescore_probed,
-        ivf_probed_cells,
+        ivf_probe,
     )
+    from ..operators.vector import collect_query_vectors
     from ..sources.transactional import read_table
 
     emb = spark.table("embeddings")
@@ -310,18 +312,18 @@ def ann_ivf_indexed_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = ivf_table_topk(spark, path, q, k=K, nprobe=IDX_NPROBE)
         # Unpruned control: same index, same probe set, every cell's
         # segments scanned — identical rows prove pruning is lossless.
-        probed_rows = ivf_probed_cells(
-            _load_centroids(spark, path), q, nprobe=IDX_NPROBE
-        ).collect()
+        probes = ivf_probe(
+            _load_centroids(path), collect_query_vectors(q), IDX_NPROBE
+        )
         full = _matmul_rescore_probed(
-            read_table(spark, path), probed_rows, K, "vec_id", "embedding"
+            read_table(spark, path), probes, K, "vec_id", "embedding"
         )
         n_diff = (
             full.exceptAll(pruned)
             .unionByName(pruned.exceptAll(full))
             .agg(F.count(F.lit(1)).alias("n_diff"))
         )
-        n_probed_cells = len({r["cell"] for r in probed_rows})
+        n_probed_cells = len({cell for _, _, cell in probes})
         exact = exact_baseline(emb, q, k=K)
         report = recall_at_k(pruned, exact, k=K)
         rows = (
@@ -481,9 +483,7 @@ def ann_ivf_table_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = tempfile.mkdtemp(prefix="cvdb_ivf_rag_")
     try:
-        ivf_table_create(
-            spark, emb, t, nlist=8, id_col="doc_id", fit_fraction=None
-        )
+        ivf_table_create(spark, emb, t, nlist=8, id_col="doc_id")
         approx = sorted(
             (r["doc_id"], r["sim"])
             for r in ivf_table_topk(
@@ -524,7 +524,7 @@ def ann_ivf_table_rag_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_ivf_recall",
     driver=False,
-    doc="""IVF ANN (KMeans nlist=16 cells, nprobe=6, seed 42) vs exact:
+    doc="""IVF ANN (k-means nlist=16 cells, nprobe=6, seed 42) vs exact:
     returns recall@10. The index is the transactional IVF table, whose
     segments are tagged by cell, so probing prunes the segment list.""",
     oracle=None,
@@ -537,8 +537,8 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: case (no cluster structure, quantization error dominates);
 #: measured recall@10 with m=16 subspaces x 32 centroids + exact
 #: refine of the ADC top-100: sf0.001 1.0, sf0.01 1.0, sf0.1 0.94.
-#: Floor = worst measurement minus a 0.14 margin for KMeans-init
-#: sensitivity to input partitioning (the IDX_FLOOR convention). The
+#: Floor = worst measurement minus a 0.14 margin (the IDX_FLOOR
+#: convention). The
 #: 64-d float64 fixture vector is 512 B; its code is 16 B -> 32x.
 PQ_M, PQ_KSUB, PQ_REFINE, PQ_FLOOR = 16, 32, 100, 0.80
 
@@ -553,7 +553,7 @@ PQ_M, PQ_KSUB, PQ_REFINE, PQ_FLOOR = 16, 32, 100, 0.80
     force — the memory-side scale path: IVF bounds what a query READS,
     PQ bounds what the index WEIGHS (the 64-d fixture vector is 512 B
     raw, 16 B coded — 32x; at the reference's 1536-d it is 12 KB vs
-    ~100 B). Codebook/KMeans internals aren't ANSI-SQL, so like
+    ~100 B). Codebook/k-means internals aren't ANSI-SQL, so like
     ann_recall_suite the driver-checked form is self-asserting
     (method, meets_floor) rows against all-true VALUES; the
     compression row pins the static size arithmetic.""",
@@ -599,7 +599,7 @@ def ann_pq_recall_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed-SCAN family member next to IVF (read pruning) and PQ
     (memory compression); same serving surface as Pinecone's read
     path (controllers/conversationController.js:32-36). Encoding is
-    stateless (no trained model), so unlike the LSH/KMeans variants
+    stateless (no trained model), so unlike the LSH/k-means variants
     the FULL approximate pipeline is value-parity checked: the oracle
     replicates sign-bit Hamming rank, the deterministic candidate
     cut, and the rounded cosine refine in ANSI SQL.""",

@@ -236,9 +236,12 @@ def test_ivf_table_probe_prunes_at_segment_list(spark, tmp_path):
 
     from conversation_with_vector_db_spark.operators.ann import (
         _load_centroids,
-        ivf_probed_cells,
+        ivf_probe,
         ivf_table_create,
         ivf_table_topk,
+    )
+    from conversation_with_vector_db_spark.operators.vector import (
+        collect_query_vectors,
     )
 
     rng = np.random.default_rng(29)
@@ -253,11 +256,11 @@ def test_ivf_table_probe_prunes_at_segment_list(spark, tmp_path):
     ivf_table_create(spark, corpus, t, nlist=8)
 
     queries = corpus.filter(F.col("vec_id") < 2)
-    cent = _load_centroids(spark, t)
     probed = {
-        int(r["cell"])
-        for r in ivf_probed_cells(cent, queries, nprobe=3)
-        .select("cell").distinct().collect()
+        cell
+        for _, _, cell in ivf_probe(
+            _load_centroids(t), collect_query_vectors(queries), nprobe=3
+        )
     }
     assert 0 < len(probed) < 8
     df = ivf_table_topk(spark, t, queries, k=5, nprobe=3)

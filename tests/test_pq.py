@@ -145,7 +145,7 @@ def test_ivf_pq_composed_recall_and_pruning(spark, clustered):
     shrink), and (c) emit exact cosine sims for what it returns."""
     from conversation_with_vector_db_spark.operators.ann import (
         ivf_fit_cells,
-        ivf_probed_cells,
+        ivf_probe,
     )
     from conversation_with_vector_db_spark.operators.pq import ivf_pq_topk
 
@@ -177,8 +177,8 @@ def test_ivf_pq_composed_recall_and_pruning(spark, clustered):
         for r in assigned.select("vec_id", "cell").collect()
     }
     probed = {}
-    for r in ivf_probed_cells(cent, queries, 3).collect():
-        probed.setdefault(r["qid"], set()).add(r["cell"])
+    for qid, _, cell in ivf_probe(cent, qvecs, 3):
+        probed.setdefault(qid, set()).add(cell)
     for q, ids in ap.items():
         assert all(cell_of[i] in probed[q] for i in ids)
 
@@ -191,7 +191,8 @@ def test_pq_indexed_matches_inmemory_composition(spark, clustered, tmp_path):
     to the probed cells' CODE partitions — the double win (fewer files
     AND smaller ones) is the layout's whole point."""
     from conversation_with_vector_db_spark.operators.ann import (
-        ivf_probed_cells,
+        _read_centroids,
+        ivf_probe,
     )
     from conversation_with_vector_db_spark.operators.pq import (
         ivf_pq_topk,
@@ -214,10 +215,12 @@ def test_pq_indexed_matches_inmemory_composition(spark, clustered, tmp_path):
     )
     # Partition pruning on the code table (one query probes exactly
     # nprobe of the 8 cells; the earlier equality ran the full set).
-    cent = spark.read.parquet(f"{path}/centroids")
+    cent = _read_centroids(f"{path}/centroids")
     one = queries.orderBy("vec_id").limit(1)
     cells = {
-        int(r["cell"]) for r in ivf_probed_cells(cent, one, 3).collect()
+        cell for _, _, cell in ivf_probe(
+            cent, collect_query_vectors(one), 3
+        )
     }
     assert len(cells) == 3  # something actually pruned
     pruned_scan = spark.read.parquet(f"{path}/codes").filter(

@@ -568,9 +568,12 @@ def test_streaming_index_steady_state_compaction_loop(spark, tmp_path):
 
     from conversation_with_vector_db_spark.operators.ann import (
         _load_centroids,
-        ivf_probed_cells,
+        ivf_probe,
         ivf_table_create,
         ivf_table_topk,
+    )
+    from conversation_with_vector_db_spark.operators.vector import (
+        collect_query_vectors,
     )
     from conversation_with_vector_db_spark.sources.snapshot_log import (
         compact_snapshots,
@@ -668,10 +671,10 @@ def test_streaming_index_steady_state_compaction_loop(spark, tmp_path):
     post_df = ivf_table_topk(spark, t, probes, k=5, nprobe=1)
     assert _collect_sorted(post_df) == pre
     probed_cells = {
-        str(int(r["cell"]))
-        for r in ivf_probed_cells(
-            _load_centroids(spark, t), probes, 1, "vec_id", "embedding"
-        ).collect()
+        str(cell)
+        for _, _, cell in ivf_probe(
+            _load_centroids(t), collect_query_vectors(probes), 1
+        )
     }
     pruned = read_table(
         spark, t, partitions=probed_cells, partition_col="cell"

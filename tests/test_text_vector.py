@@ -246,7 +246,7 @@ class TestIvfIndexed:
         t = str(tmp_path / "ivf_dims")
         ivf_table_create(spark, corpus, t, nlist=4)
         with pytest.raises(ValueError) as no_model:
-            _load_centroids(spark, t, 0)
+            _load_centroids(t, 0)
         assert t in str(no_model.value) and "v0" in str(no_model.value)
         v0 = latest_version(t)
         for bad in ([1.0, 2.0, 3.0], None):
@@ -272,8 +272,11 @@ class TestIvfIndexed:
 
         from conversation_with_vector_db_spark.operators.ann import (
             _load_centroids,
-            ivf_probed_cells,
+            ivf_probe,
             ivf_table_create,
+        )
+        from conversation_with_vector_db_spark.operators.vector import (
+            collect_query_vectors,
         )
         from conversation_with_vector_db_spark.sources.snapshot_log import (
             live_segments,
@@ -288,8 +291,10 @@ class TestIvfIndexed:
         t = str(tmp_path / "ivf_files")
         ivf_table_create(spark, corpus, t, nlist=8)
         queries = corpus.filter(F.col("vec_id") < 2)
-        probed = ivf_probed_cells(_load_centroids(spark, t), queries, nprobe=3)
-        cells = {str(int(r["cell"])) for r in probed.collect()}
+        probes = ivf_probe(
+            _load_centroids(t), collect_query_vectors(queries), nprobe=3
+        )
+        cells = {str(cell) for _, _, cell in probes}
         assert 0 < len(cells) < 8
 
         def n_files(segs):
@@ -363,6 +368,61 @@ class TestIvfIndexed:
         assert out.columns == ["qid", "vec_id", "sim", "rank"]
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "FileScan" not in plan  # lit(False) folded the scan away
+
+    def test_create_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
+        """The k-means fits on the driver: building the index runs the
+        dimension query, ONE fit-sample collect and the cell-tagged
+        write — at most 10 Spark jobs on a small corpus (an MLlib fit
+        alone ran dozens)."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        sc = spark.sparkContext
+        group = f"ivf-create-{tmp_path.name}"
+        sc.setJobGroup(group, "ivf_table_create job count")
+        try:
+            ivf_table_create(
+                spark, corpus, str(tmp_path / "ivf_jobs"), nlist=8
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= 10, n_jobs
+
+    def test_upsert_of_unchanged_rows_keeps_their_cells(self, spark, tmp_path):
+        """One assignment rule: create, rebalance and upsert all assign
+        by ivf_assign_cells, so re-upserting every row exactly as the
+        table stores it leaves each row in the cell the create gave
+        it."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_upsert,
+        )
+        from conversation_with_vector_db_spark.sources.transactional import (
+            read_table,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        t = str(tmp_path / "ivf_same_rule")
+        ivf_table_create(spark, corpus, t, nlist=8)
+
+        def cells():
+            return {
+                r["vec_id"]: r["cell"]
+                for r in read_table(spark, t).select("vec_id", "cell")
+                .collect()
+            }
+
+        created = cells()
+        assert len(set(created.values())) > 1  # the rule has choices
+        ivf_table_upsert(
+            spark, t, read_table(spark, t).select("vec_id", "embedding")
+        )
+        assert cells() == created
 
     def test_transactional_index_table_lifecycle(self, spark, tmp_path):
         """IVF index as a snapshot-log table: create -> query -> atomic
@@ -684,7 +744,7 @@ class TestIvfIndexed:
         monkeypatch.undo()
 
         # Fully rolled back: old model serves, old results unchanged.
-        assert _load_centroids(spark, t).count() == 8
+        assert len(_load_centroids(t)) == 8
         got = {
             r["vec_id"]
             for r in ivf_table_topk(spark, t, probe, k=5, nprobe=8)
@@ -699,7 +759,7 @@ class TestIvfIndexed:
         v = ivf_table_rebalance(spark, t, nlist=4)
         rel = table_meta(t, v)["centroids"]
         assert os.path.isdir(f"{t}/{rel}")
-        assert _load_centroids(spark, t).count() == 4
+        assert len(_load_centroids(t)) == 4
         got2 = ivf_table_topk(spark, t, probe, k=5, nprobe=4).collect()
         assert len(got2) == 5
 
@@ -758,7 +818,7 @@ class TestIvfIndexed:
 
         # The landed row's cell is the NEW model's nearest centroid.
         expected = ivf_assign_cells(
-            updates, _load_centroids(spark, t)
+            updates, _load_centroids(t)
         ).first()["cell"]
         row = (
             read_table(spark, t, partition_col="cell")
@@ -1374,12 +1434,13 @@ def test_ivf_fit_is_layout_deterministic(spark):
     in partition order, so the same corpus under different scan
     splits / shuffle widths fitted different centroids (recall 0.70
     vs 0.72 at sf0.001 across 64 KB vs 128 MB maxPartitionBytes).
-    ivf_fit_cells now canonicalizes the fit layout (fixed-width
-    repartition hashed on the vector + in-partition sort) and draws
-    any fit sample by xxhash64, not per-partition Bernoulli. This pin
+    ivf_fit_cells now fits on the driver over a sample collected in
+    xxhash64(vector, seed) order, a pure function of the data. This pin
     fits the SAME vectors delivered under three hostile layouts —
     1-partition, 7-partition round-robin, and reversed input order —
-    and demands bit-identical centroids and assignments."""
+    and demands bit-identical centroids and assignments, once on a
+    corpus the sample covers and once on one larger than the sample
+    cap (256 rows per cell)."""
     import math
     import random
 
@@ -1392,33 +1453,34 @@ def test_ivf_fit_is_layout_deterministic(spark):
         (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(120)
     ]
 
-    def fit(df, **kw):
-        assigned, cents = ivf_fit_cells(df, nlist=4, seed=42, **kw)
+    def fit(df):
+        assigned, cents = ivf_fit_cells(df, nlist=4, seed=42)
         a = sorted(
             (r["vec_id"], r["cell"]) for r in assigned.collect()
         )
-        c = sorted(
-            (r["cell"], tuple(r["centroid"])) for r in cents.collect()
-        )
+        c = [(cell, tuple(cent)) for cell, cent in enumerate(cents)]
         return a, c
 
-    base = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).coalesce(1)
-    scattered = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    ).repartition(7)
-    reversed_ = spark.createDataFrame(
-        rows[::-1], "vec_id long, embedding array<double>"
-    ).coalesce(1)
+    def layouts(rows):
+        schema = "vec_id long, embedding array<double>"
+        return (
+            spark.createDataFrame(rows, schema).coalesce(1),
+            spark.createDataFrame(rows, schema).repartition(7),
+            spark.createDataFrame(rows[::-1], schema).coalesce(1),
+        )
 
+    base, scattered, reversed_ = layouts(rows)
     want = fit(base)
     assert fit(scattered) == want
     assert fit(reversed_) == want
-    # the hash-stratified sample path is layout-invariant too
-    want_s = fit(base, fit_fraction=0.5)
-    assert fit(scattered, fit_fraction=0.5) == want_s
-    assert fit(reversed_, fit_fraction=0.5) == want_s
+    # the capped sample path (1200 rows > 256 x 4) is layout-invariant too
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(1200)
+    ]
+    base, scattered, reversed_ = layouts(rows)
+    want_s = fit(base)
+    assert fit(scattered) == want_s
+    assert fit(reversed_) == want_s
     # sanity: the sample really binds (fewer than all rows train, all
     # rows are still assigned)
     assert len(want_s[0]) == len(rows)

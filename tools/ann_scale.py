@@ -16,7 +16,7 @@ corpus-size scaling, not query-batch growth.
 (text-embedding-ada-002 / 3-small: controllers/embeddingController.js:28,
 controllers/conversationController.js:30) — per-pair cost is 24x the
 64-d toy dimension, which moves the exact-vs-pruned crossover, the
-KMeans fit cost, and the LSH bit budget; pass ``--dim 64`` to
+k-means fit cost, and the LSH bit budget; pass ``--dim 64`` to
 reproduce the historical sweep.
 
 Measures, per scale: exact Arrow matmul, hyperplane LSH
@@ -157,18 +157,17 @@ def _timed_noop(df, reps: int) -> float:
     return round(best, 3)
 
 
-def _ivf_table_build(spark, corpus, table: str, nlist: int, n: int) -> float:
-    """Build the IVF table, centroids fit on a FAISS-style sample (~40
-    pts per cell — a full-corpus KMeans at 10^6 x 1536-d is exactly the
-    cost ``fit_fraction`` exists to avoid). Returns build seconds."""
+def _ivf_table_build(spark, corpus, table: str, nlist: int) -> float:
+    """Build the IVF table (its k-means reads at most 256 vectors per
+    cell, so the fit stays model-sized at any n). Returns build
+    seconds."""
     from conversation_with_vector_db_spark.operators.ann import (
         ivf_table_create,
     )
 
     shutil.rmtree(table, ignore_errors=True)
     t0 = time.perf_counter()
-    ivf_table_create(spark, corpus, table, nlist=nlist,
-                     fit_fraction=min(1.0, (40.0 * nlist) / n))
+    ivf_table_create(spark, corpus, table, nlist=nlist)
     return round(time.perf_counter() - t0, 3)
 
 
@@ -180,9 +179,12 @@ def _ivf_table_probe(spark, table: str, queries, exact, nprobe: int,
     segments, the list the probe's scan is pruned from."""
     from conversation_with_vector_db_spark.operators.ann import (
         _load_centroids,
-        ivf_probed_cells,
+        ivf_probe,
         ivf_table_topk,
         recall_at_k,
+    )
+    from conversation_with_vector_db_spark.operators.vector import (
+        collect_query_vectors,
     )
     from conversation_with_vector_db_spark.sources.snapshot_log import (
         live_segments,
@@ -194,10 +196,10 @@ def _ivf_table_probe(spark, table: str, queries, exact, nprobe: int,
 
     probe = ivf_table_topk(spark, table, queries, k=10, nprobe=nprobe)
     cells = {
-        str(int(r["cell"]))
-        for r in ivf_probed_cells(
-            _load_centroids(spark, table), queries, nprobe=nprobe
-        ).select("cell").distinct().collect()
+        str(cell)
+        for _, _, cell in ivf_probe(
+            _load_centroids(table), collect_query_vectors(queries), nprobe
+        )
     }
     n_files = {
         seg: sum(
@@ -274,7 +276,7 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
         # its cells' segments — the documented 100 TB read path.
         table = os.path.join(workdir, f"ann_ivf_{n}_{dim}d")
         out["ivf_index_build_sec"] = _ivf_table_build(
-            spark, corpus, table, nlist, n
+            spark, corpus, table, nlist
         )
         point = _ivf_table_probe(spark, table, queries, exact, nprobe, reps)
         out[f"ivf_{nlist}c{nprobe}p_query_sec"] = point["query_sec"]
@@ -356,7 +358,7 @@ def run_scale(spark, n: int, dim: int, workdir: str, reps: int = 2,
         # ~80 pts/centroid for the 256-centroid books (the FAISS
         # training regime); the collect stays ~20k rows at any n.
         pq_write_index(corpus, pq_path, nlist=nlist, m=pq_m, ksub=256,
-                       fit_fraction=min(1.0, 20_000 / n))
+                       sample_fraction=min(1.0, 20_000 / n))
         out["pq_index_build_sec"] = round(time.perf_counter() - t0, 3)
 
         def _bytes(sub):
@@ -406,8 +408,8 @@ def run_nlist_sweep(spark, n: int, dim: int, workdir: str,
     10^8-vector index wants nlist ~ sqrt(n), so the fit/build/query
     cost curve past the historical nlist=32 must be measured, not
     extrapolated. One corpus, ONE exact baseline (shared recall
-    denominator), then per distinct nlist: one table build (sampled
-    KMeans fit at ~40 pts/cell), and per (nlist, nprobe) pair: the
+    denominator), then per distinct nlist: one table build (k-means
+    fit on at most 256 pts/cell), and per (nlist, nprobe) pair: the
     segment-pruned probe's min-of-reps wall, recall@10, and the
     fraction of table files the probed cells select — the quantity
     that tracks nprobe/nlist and IS the 100 TB read bound."""
@@ -425,7 +427,7 @@ def run_nlist_sweep(spark, n: int, dim: int, workdir: str,
 
     for nlist in sorted({nl for nl, _ in pairs}):
         table = os.path.join(workdir, f"ann_ivf_{n}_{dim}d_nl{nlist}")
-        build_sec = _ivf_table_build(spark, corpus, table, nlist, n)
+        build_sec = _ivf_table_build(spark, corpus, table, nlist)
         for nl, nprobe in pairs:
             if nl != nlist:
                 continue
@@ -477,8 +479,9 @@ def main() -> None:
 
     from conversation_with_vector_db_spark.session import get_spark
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
-        app_name="cvdb-ann-scale", master="local[32]",
+        app_name="cvdb-ann-scale", master=f"local[{cpus}]",
         shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")

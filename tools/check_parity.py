@@ -42,7 +42,8 @@ def main() -> int:
         spark_result,
     )
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in BASE_TABLES:

@@ -94,7 +94,8 @@ def main() -> int:
 
     load_all()
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = registry.all_queries()
