@@ -282,11 +282,6 @@ def hyperplane_lsh_topk(
     return topk_per_query(scored, k, tiebreak_col=id_col)
 
 
-#: The IVF fit reads at most this many vectors per cell (FAISS's upper
-#: training guideline), so the fit stays model-sized at any corpus size.
-FIT_ROWS_PER_CELL = 256
-
-
 def _spherical_kmeans(rows: list, nlist: int, seed: int):
     """Cosine k-means of the collected fit sample ``rows`` on the
     driver: at most nlist unit centroids, one per distinct direction.
@@ -303,7 +298,8 @@ def _spherical_kmeans(rows: list, nlist: int, seed: int):
     if x.size:
         x = x[np.isfinite(x).all(axis=1)]
         norms = np.linalg.norm(x, axis=1)
-        x = x[norms > 0] / norms[norms > 0, None]
+        # + 0.0 turns -0.0 into 0.0, so equal directions dedupe below
+        x = x[norms > 0] / norms[norms > 0, None] + 0.0
         # drop repeats, keeping first occurrences in the sample's order
         x = x[np.sort(np.unique(x, axis=0, return_index=True)[1])]
     if x.size == 0:
@@ -335,11 +331,13 @@ def ivf_fit_cells(
 ) -> tuple:
     """Spherical k-means cell model, fitted on the driver:
     ``(corpus + cell column, centroids)``, the centroids a float64
-    matrix of at most nlist rows. ONE Spark job collects the fit
-    sample: the first :data:`FIT_ROWS_PER_CELL` x nlist vectors in
-    ``xxhash64(vector, seed)`` order, ties by the vector — a pure
-    function of the DATA, so the fit is the same under any scan
-    layout. Every corpus row is then assigned by
+    matrix of at most nlist rows. The fit sample is the first
+    :data:`..clustering.FIT_ROWS_PER_CELL` x nlist vectors in
+    ``xxhash64(vector, seed)`` order (fewer when that would pass
+    :data:`..clustering.FIT_SAMPLE_VALUES` elements), taken by
+    :func:`..clustering.hash_sample`: a pure function of the DATA, so
+    the fit is the same under any scan layout, and the driver receives
+    only the sample. Every corpus row is then assigned by
     :func:`ivf_assign_cells`, the rule upserts use too.
 
     ``dim`` pins the indexed dimension explicitly; when omitted it is
@@ -349,6 +347,8 @@ def ivf_fit_cells(
     could silently drop the majority of the corpus (ADVICE r10).
     NULL/ragged embeddings could never be scored and are excluded.
     """
+    from .clustering import FIT_ROWS_PER_CELL, FIT_SAMPLE_VALUES, hash_sample
+
     if dim is None:
         dim = majority_dim(corpus, vec_col)
     if dim is None:
@@ -359,13 +359,14 @@ def ivf_fit_cells(
     corpus = corpus.where(
         F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
     )
+    rows = min(FIT_ROWS_PER_CELL * nlist, FIT_SAMPLE_VALUES // dim)
     sample = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col), F.lit(seed)), vec_col)
-        .limit(FIT_ROWS_PER_CELL * nlist)
-        .collect()
+        hash_sample(corpus, vec_col, seed, rows)
+        .select(F.xxhash64(F.col(vec_col), F.lit(seed)).alias("_h"), vec_col)
+        .toPandas()
+        .sort_values("_h", kind="stable")  # ties: copies of one vector
     )
-    cents = _spherical_kmeans([r[0] for r in sample], nlist, seed)
+    cents = _spherical_kmeans(list(sample[vec_col]), nlist, seed)
     return ivf_assign_cells(corpus, cents, id_col, vec_col), cents
 
 
@@ -625,7 +626,9 @@ def ivf_table_upsert(
     global upsert reads it three times (key min/max, hit-set semi-join,
     staged write), each a re-run of the caller's chunk/embed/assign
     plan otherwise. Its blocks are freed when the attempt ends, so a
-    sink upserting per micro-batch holds at most one batch.
+    sink upserting per micro-batch holds at most one batch. A ``txn``
+    that already committed (a replayed micro-batch) returns None before
+    the batch is assigned or evaluated.
 
     Conflict retries happen HERE, not inside the upsert: when the
     writer that won the race was :func:`ivf_table_rebalance`, the
@@ -634,9 +637,13 @@ def ivf_table_upsert(
     may never select — a permanent recall hole, not the documented
     transient dip. Each retry reloads the head's centroids and
     re-assigns before re-planning the upsert."""
-    from ..sources.snapshot_log import CommitConflictError
+    from ..sources.snapshot_log import CommitConflictError, last_txn_version
     from ..sources.transactional import read_table, upsert_by_key_global
 
+    if txn is not None:
+        prev = last_txn_version(table_dir, txn[0])
+        if prev is not None and prev >= txn[1]:
+            return None  # a replay: skipped before its batch is evaluated
     table_schema = read_table(spark, table_dir).schema
     # Updates must carry every index column (id, vector, metadata):
     # a staged segment missing a metadata column would give the table

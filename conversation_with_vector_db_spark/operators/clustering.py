@@ -42,6 +42,35 @@ from .vector import majority_dim
 #: integer range so squared distances stay in BIGINT.
 QUANT_SCALE = 1_000_000
 
+#: Driver-side fits read at most this many vectors per centroid (FAISS's
+#: upper training guideline) and this many vector elements in all (256
+#: MiB of float64, well inside the driver's default 1 GiB result limit).
+FIT_ROWS_PER_CELL = 256
+FIT_SAMPLE_VALUES = 1 << 25
+
+
+def hash_sample(df: DataFrame, vec_col: str, seed: int, rows: int):
+    """The first ``rows`` rows of ``df`` in ``xxhash64(vec_col, seed)``
+    order, as a filter of ``df`` that keeps its row order: a pure
+    function of the data, the same under any scan layout. One job cuts
+    it from the hash column alone (a top ``rows + 1`` of 8-byte hashes),
+    so the driver receives the sample and nothing more, where
+    ``orderBy(hash).limit(rows).collect()`` ships every partition's own
+    top ``rows`` vectors. Rows sharing the cutoff hash are copies of one
+    vector; a cap that splits them keeps as many as the top holds."""
+    h = F.xxhash64(F.col(vec_col), F.lit(seed))
+    top = df.select(h.alias("_h")).orderBy("_h").limit(rows + 1)
+    taken = 0
+    for cut, c in sorted(map(tuple, top.groupBy("_h").count().collect())):
+        if taken + c > rows:  # copies of the cutoff vector straddle it
+            return df.where(h < cut).unionByName(
+                df.where(h == cut).limit(rows - taken)
+            )
+        taken += c
+        if taken == rows:
+            return df.where(h <= cut)
+    return df  # no more than ``rows`` rows
+
 
 def lloyd(x, cent, iters: int, spherical: bool = False):
     """``iters`` Lloyd steps over the rows of ``x`` from the centroids

@@ -31,7 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import lloyd
+from .clustering import (
+    FIT_ROWS_PER_CELL,
+    FIT_SAMPLE_VALUES,
+    hash_sample,
+    lloyd,
+)
 
 
 def pq_fit(
@@ -39,7 +44,6 @@ def pq_fit(
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 256,
-    sample_fraction: float | None = None,
     seed: int = 42,
     iters: int = 15,
 ):
@@ -50,38 +54,27 @@ def pq_fit(
 
     Driver-side on a SAMPLE by design (FAISS trains PQ on ~10-100k
     points regardless of corpus size): the codebook is m*k*dsub
-    floats; the training set is the only thing collected and
-    ``sample_fraction`` bounds it. The dimension must divide by ``m``
-    (loud refusal beats silent padding)."""
+    floats; the training set is the only thing collected, at most
+    :data:`..clustering.FIT_ROWS_PER_CELL` x k vectors and
+    :data:`..clustering.FIT_SAMPLE_VALUES` elements
+    (:func:`..clustering.hash_sample`). The dimension must divide by
+    ``m`` (loud refusal beats silent padding)."""
     import numpy as np
 
-    # Hash-stratified sample, not df.sample: Bernoulli membership is
-    # drawn from a per-partition RNG and would vary with the scan
-    # layout; xxhash64(vector, seed) is a pure function of the data.
-    # (The collected row ORDER is already layout-invariant: splits
-    # collect in file-offset order whatever their size.)
-    fit_on = (
-        corpus
-        if sample_fraction is None
-        else corpus.where(
-            F.pmod(
-                F.xxhash64(F.col(vec_col), F.lit(seed)), F.lit(1_000_000)
-            )
-            < F.lit(int(sample_fraction * 1_000_000))
-        )
-    )
     # Drop NULL vectors and refuse ragged lengths LOUDLY: a None (or a
     # short row) in the collected list makes np.asarray build an
     # inhomogeneous object array whose error names numpy, not the
-    # caller's data problem.
-    rows = [
-        r[0]
-        for r in fit_on.select(vec_col)
-        .where(F.col(vec_col).isNotNull())
-        .collect()
-    ]
-    if not rows:
+    # caller's data problem. The first vector's size sets the sample
+    # cap; a ragged sample is refused below.
+    corpus = corpus.where(F.col(vec_col).isNotNull())
+    first = corpus.select(F.size(vec_col)).first()
+    if first is None:
         raise ValueError("pq_fit: no non-NULL vectors to train on")
+    cap = min(FIT_ROWS_PER_CELL * k, FIT_SAMPLE_VALUES // max(first[0], 1))
+    # (The collected row ORDER is layout-invariant: splits collect in
+    # file-offset order whatever their size.)
+    sample = hash_sample(corpus, vec_col, seed, cap).select(vec_col)
+    rows = [r[0] for r in sample.collect()]
     dims = {len(v) for v in rows}
     if len(dims) != 1:
         raise ValueError(
@@ -181,6 +174,20 @@ def pq_encode(
     )
 
 
+def _luts(codebooks, query_vectors: list):
+    """ADC lookup tables: ``luts[q, j, c]`` = <query q's subvector j,
+    centroid c of subspace j>, shape (n_queries, m, k)."""
+    import numpy as np
+
+    qmat = np.asarray(query_vectors, dtype=np.float64)
+    dsub = codebooks.shape[2]
+    return np.stack(
+        [qmat[:, j * dsub:(j + 1) * dsub] @ book.T
+         for j, book in enumerate(codebooks)],
+        axis=1,
+    )
+
+
 def pq_adc_scores(
     codes: DataFrame,
     codebooks,
@@ -195,21 +202,13 @@ def pq_adc_scores(
     import numpy as np
     import pandas as pd
 
-    mm, k_eff, dsub = codebooks.shape
-    qids = [q for q, _ in query_vectors]
-    qmat = np.asarray([v for _, v in query_vectors], dtype=np.float64)
-    # luts[q, j, c] = <query_q subvector j, centroid c of subspace j>
-    luts = np.stack(
-        [
-            qmat[:, j * dsub:(j + 1) * dsub] @ codebooks[j].T
-            for j in range(mm)
-        ],
-        axis=1,
-    )
     from .cache import scoped_broadcast
 
-    sess = codes.sparkSession
-    bc = scoped_broadcast(sess.sparkContext.broadcast((qids, luts)))
+    qids = [q for q, _ in query_vectors]
+    luts = _luts(codebooks, [v for _, v in query_vectors])
+    bc = scoped_broadcast(
+        codes.sparkSession.sparkContext.broadcast((qids, luts))
+    )
 
     def score(batches):
         q_ids, tables = bc.value
@@ -251,14 +250,25 @@ def pq_topk(
     cosine (same shape/rounding as the other vector plans). Recall
     depends on (m, refine) and is floor-certified by the recall
     suite."""
-    from .vector import collect_query_vectors, matmul_topk, topk_per_query
+    from .vector import collect_query_vectors
 
     qvecs = collect_query_vectors(queries, id_col, vec_col)
+    return _exact_refine(
+        corpus, pq_adc_scores(codes, codebooks, qvecs, id_col), qvecs,
+        k, refine, id_col, vec_col,
+    )
+
+
+def _exact_refine(
+    raw: DataFrame, ascores: DataFrame, qvecs: list, k: int, refine: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """Exact-cosine top-k of each query's ADC top-``refine``
+    candidates (``ascores``: qid, id, ascore), read from ``raw``."""
+    from .vector import matmul_topk, topk_per_query
+
     cands = topk_per_query(
-        pq_adc_scores(codes, codebooks, qvecs, id_col),
-        refine,
-        query_col="qid",
-        score_col="ascore",
+        ascores, refine, query_col="qid", score_col="ascore",
         tiebreak_col=id_col,
     ).select("qid", id_col)
     # Refine: exact cosine over candidates only. The per-query exact
@@ -266,7 +276,7 @@ def pq_topk(
     # the semi join is what a 100 TB serving path does to fetch raw
     # vectors for refinement (candidate ids are ~refine * n_queries).
     cand_ids = cands.select(id_col).distinct()
-    pruned = corpus.join(F.broadcast(cand_ids), id_col)
+    pruned = raw.join(F.broadcast(cand_ids), id_col)
     # The exact pass ranks over the UNION of all queries' candidates,
     # so its per-query window limit must admit every candidate (another
     # query's vector may outscore this query's own) — the join back to
@@ -298,17 +308,9 @@ def pq_adc_pair_scores(
 
     from .cache import scoped_broadcast
 
-    mm, k_eff, dsub = codebooks.shape
     qids = np.asarray(sorted(q for q, _ in query_vectors), dtype=np.int64)
     by_id = dict(query_vectors)
-    qmat = np.asarray([by_id[q] for q in qids], dtype=np.float64)
-    luts = np.stack(
-        [
-            qmat[:, j * dsub:(j + 1) * dsub] @ codebooks[j].T
-            for j in range(mm)
-        ],
-        axis=1,
-    )
+    luts = _luts(codebooks, [by_id[q] for q in qids])
     bc = scoped_broadcast(
         pairs.sparkSession.sparkContext.broadcast((qids, luts))
     )
@@ -354,7 +356,6 @@ def ivf_pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF-PQ: the composed 100 TB serving architecture (the
     public FAISS IVFPQ design). IVF bounds what a query READS — only
@@ -363,43 +364,25 @@ def ivf_pq_topk(
     not raw vectors; the exact-cosine refine touches raw vectors for
     only ~refine candidates per query. One code table partitioned by
     cell serves everything; the raw arrays stay cold until refine.
-    Codes encode cell RESIDUALS (IVFADC; see :func:`_with_residual`).
-    ``sample_fraction`` bounds the codebook fit's sample
-    (:func:`pq_fit`); the IVF fit caps its own."""
+    Codes encode cell RESIDUALS (IVFADC; see :func:`_with_residual`)."""
     from .ann import ivf_fit_cells, ivf_probe
-    from .vector import collect_query_vectors, matmul_topk, topk_per_query
+    from .vector import collect_query_vectors
 
     assigned, cents = ivf_fit_cells(
         corpus, nlist, vec_col, seed, id_col=id_col
     )
     resid = _with_residual(assigned, cents, vec_col)
-    books = pq_fit(
-        resid, "_resid", m=m, k=ksub, seed=seed,
-        sample_fraction=sample_fraction,
-    )
+    books = pq_fit(resid, "_resid", m=m, k=ksub, seed=seed)
     codes = pq_encode(resid, books, "_resid", id_col, keep_cols=("cell",))
     qvecs = collect_query_vectors(queries, id_col, vec_col)
     probed = _probe_bias(
         corpus.sparkSession, cents, ivf_probe(cents, qvecs, nprobe)
     )
     pairs = codes.join(probed, "cell")
-    cands = topk_per_query(
-        pq_adc_pair_scores(pairs, books, qvecs, id_col),
-        refine,
-        query_col="qid",
-        score_col="ascore",
-        tiebreak_col=id_col,
-    ).select("qid", id_col)
-    cand_ids = cands.select(id_col).distinct()
-    pruned = corpus.join(F.broadcast(cand_ids), id_col)
-    scored = matmul_topk(
-        pruned, qvecs, k=max(k, refine) * max(1, len(qvecs)),
-        id_col=id_col, vec_col=vec_col,
-    ).join(cands, ["qid", id_col])
-    return topk_per_query(
-        scored.select("qid", id_col, "sim"), k,
-        query_col="qid", score_col="sim", tiebreak_col=id_col,
-    ).select("qid", id_col, "sim", "rank")
+    return _exact_refine(
+        corpus, pq_adc_pair_scores(pairs, books, qvecs, id_col), qvecs,
+        k, refine, id_col, vec_col,
+    )
 
 
 def _probe_bias(spark, cents, probes: list) -> DataFrame:
@@ -452,7 +435,6 @@ def pq_write_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    sample_fraction: float | None = None,
 ) -> None:
     """Materialize an IVF-PQ index next to the raw vectors:
 
@@ -467,18 +449,14 @@ def pq_write_index(
     Everything expensive (cell fit + assignment, codebook fit, encode)
     is paid once at write time; a query then partition-prunes the CODE
     table to nprobe cells, ADC-scans bytes, and touches the raw table
-    only for ~refine candidate rows. ``sample_fraction`` bounds the
-    codebook fit's sample (:func:`pq_fit`)."""
+    only for ~refine candidate rows."""
     from .ann import _write_centroids, ivf_fit_cells
 
     assigned, cents = ivf_fit_cells(
         corpus, nlist, vec_col, seed, id_col=id_col
     )
     resid = _with_residual(assigned, cents, vec_col)
-    books = pq_fit(
-        resid, "_resid", m=m, k=ksub, seed=seed,
-        sample_fraction=sample_fraction,
-    )
+    books = pq_fit(resid, "_resid", m=m, k=ksub, seed=seed)
     assigned.select(id_col, vec_col, "cell").write.partitionBy(
         "cell"
     ).mode("overwrite").parquet(f"{path}/data")
@@ -532,7 +510,7 @@ def pq_topk_indexed(
     :func:`..ann.ivf_table_topk`: partition filter and pair join are
     rebuilt from ONE collected probe row set."""
     from .ann import _read_centroids, ivf_probe
-    from .vector import collect_query_vectors, matmul_topk, topk_per_query
+    from .vector import collect_query_vectors
 
     cents = _read_centroids(f"{index_path}/centroids")
     books = _load_books(spark, index_path)
@@ -554,23 +532,10 @@ def pq_topk_indexed(
     pairs = codes_scan.filter(F.col("cell").isin(cells)).join(
         probed_df, "cell"
     )
-    cands = topk_per_query(
-        pq_adc_pair_scores(pairs, books, qvecs, id_col),
-        refine,
-        query_col="qid",
-        score_col="ascore",
-        tiebreak_col=id_col,
-    ).select("qid", id_col)
-    cand_ids = cands.select(id_col).distinct()
     raw = spark.read.parquet(f"{index_path}/data").filter(
         F.col("cell").isin(cells)
     )
-    pruned = raw.join(F.broadcast(cand_ids), id_col)
-    scored = matmul_topk(
-        pruned, qvecs, k=max(k, refine) * max(1, len(qvecs)),
-        id_col=id_col, vec_col=vec_col,
-    ).join(cands, ["qid", id_col])
-    return topk_per_query(
-        scored.select("qid", id_col, "sim"), k,
-        query_col="qid", score_col="sim", tiebreak_col=id_col,
-    ).select("qid", id_col, "sim", "rank")
+    return _exact_refine(
+        raw, pq_adc_pair_scores(pairs, books, qvecs, id_col), qvecs,
+        k, refine, id_col, vec_col,
+    )

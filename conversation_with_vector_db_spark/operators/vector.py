@@ -309,11 +309,14 @@ def score_batch(vecs, qmat, qn) -> list:
     )
     idx = np.flatnonzero(valid)
     if idx.size:
-        c = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in idx])
-        valid[idx[np.isnan(c).any(axis=1)]] = False
+        # one contiguous row per DIMENSION: the fold reads c[d] whole
+        c = np.stack(
+            [np.asarray(vecs[i], dtype=np.float64) for i in idx], axis=1
+        )
+        valid[idx[np.isnan(c).any(axis=0)]] = False
         cn = np.zeros(idx.size)
         for d in range(dim):
-            cn += c[:, d] * c[:, d]
+            cn += c[d] * c[d]
         cn = np.sqrt(cn)
     out = []
     for j in range(qmat.shape[0]):
@@ -321,7 +324,7 @@ def score_batch(vecs, qmat, qn) -> list:
         if idx.size:
             acc = np.zeros(idx.size)
             for d in range(dim):
-                acc += c[:, d] * qmat[j, d]
+                acc += c[d] * qmat[j, d]
             with np.errstate(divide="ignore", invalid="ignore"):
                 vals[idx] = np.where(
                     (qn[j] == 0) | (cn == 0), 0.0, acc / (qn[j] * cn)

@@ -424,6 +424,31 @@ class TestIvfIndexed:
         )
         assert cells() == created
 
+    def test_replayed_txn_upsert_runs_no_job(self, spark, tmp_path):
+        """A streaming micro-batch replayed after its commit is skipped
+        before its batch is assigned or evaluated: the replay returns
+        None and runs no Spark job."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_upsert,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        t = str(tmp_path / "ivf_replay")
+        ivf_table_create(spark, corpus, t, nlist=4)
+        updates = corpus.filter(F.col("vec_id") < 5)
+        assert ivf_table_upsert(spark, t, updates, txn=("app", 0)) is not None
+        sc = spark.sparkContext
+        group = f"ivf-replay-{tmp_path.name}"
+        sc.setJobGroup(group, "replayed upsert")
+        try:
+            assert ivf_table_upsert(spark, t, updates, txn=("app", 0)) is None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
     def test_transactional_index_table_lifecycle(self, spark, tmp_path):
         """IVF index as a snapshot-log table: create -> query -> atomic
         upsert (one vector MOVES clusters, one is new) -> re-query.
@@ -1485,6 +1510,41 @@ def test_ivf_fit_is_layout_deterministic(spark):
     # rows are still assigned)
     assert len(want_s[0]) == len(rows)
     assert not math.isnan(want_s[1][0][1][0])
+
+
+def test_hash_sample_takes_the_lowest_hashes(spark):
+    """A fit sample is the first ``rows`` rows in xxhash64(vector,
+    seed) order, found from the hash column alone, whatever the scan
+    layout. Pinned against a full sort, including a cap that falls
+    inside a run of copies of one vector (rows sharing the cutoff
+    hash): exactly ``rows`` rows come back, never every copy."""
+    import random
+
+    from conversation_with_vector_db_spark.operators.clustering import (
+        hash_sample,
+    )
+
+    rng = random.Random(5)
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(300)
+    ]
+    rows += [(1000 + i, [0.5, 0.25, -1.0, 2.0]) for i in range(60)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartition(5)
+    h = F.xxhash64(F.col("embedding"), F.lit(42))
+    hashes = sorted(r[0] for r in df.select(h).collect())
+    first_copy = hashes.index(
+        spark.createDataFrame([rows[-1]], df.schema).select(h).first()[0]
+    )
+    for cap in (1, 50, first_copy + 30, 359, 360, 500):
+        got = sorted(
+            r[0]
+            for r in hash_sample(df, "embedding", 42, cap)
+            .select(h)
+            .collect()
+        )
+        assert got == hashes[:cap], cap
 
 
 def test_zero_norm_vectors_are_cross_engine_exact(spark, sf_dir):
