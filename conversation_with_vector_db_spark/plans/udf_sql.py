@@ -100,8 +100,8 @@ def d9_sql_udtf_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction (the get_json_object form in c_scalar_suite); the
     oracle is DuckDB's JSON extraction over the same column.
 
-    Storage posture (VERDICT r8 #6, measured by tools/variant_cost.py
-    at sf1, BENCH_EXTRAS_SF1 `c23_variant_json_arms`): this registered
+    Storage posture (VERDICT r8 #6, measured at sf1, BENCH_EXTRAS_SF1
+    `c23_variant_json_arms`): this registered
     form parses the JSON text per query because the fixture stores
     `props` as a string — 2.97 s at sf1, parse-dominated. On a real
     table the cheap arm is to parse ONCE at write time: a stored

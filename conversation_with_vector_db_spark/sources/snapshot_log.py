@@ -48,9 +48,9 @@ flat as the table grows; rewrites replay at most
 ``CHECKPOINT_INTERVAL`` deltas to validate their remove set. Data
 movement stays in Spark jobs; nothing here ever reads data rows on the
 driver. Concurrency tests in tests/test_snapshot_log.py race real
-threads through append/rewrite/vacuum; tools/snapshot_cost.py measures
-commit bytes/wall vs segment count for the delta vs full-manifest
-shapes.
+threads through append/rewrite/vacuum; PLANS.md "Snapshot log: O(1)
+commits" records commit bytes vs segment count for the delta vs
+full-manifest shapes.
 """
 
 from __future__ import annotations
@@ -1017,6 +1017,12 @@ def vacuum(
             ever_committed.update(m.get("added", ()))
             ever_committed.update(m.get("live", ()))
         for cv in _checkpoint_versions(table_dir):
+            # A checkpoint newer than this snapshot (a racing commit's,
+            # or a racing vacuum's fence) lists segments this vacuum's
+            # keep window never saw: they are live, not removed, so
+            # they must stay under the orphan age gate.
+            if cv > keep[-1]:
+                continue
             try:
                 with open(_ckpt_path(table_dir, cv)) as f:
                     ever_committed.update(json.load(f)["live"])

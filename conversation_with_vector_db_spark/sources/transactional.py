@@ -406,8 +406,12 @@ def _bloom_any_match(
     return any(_bloom_contains(bloom, v) for v in probe_keys)
 
 
+#: Most distinct keys a mutation probes segment Bloom sidecars with.
+_PROBE_KEY_CAP = 1024
+
+
 def _collect_probe_keys(
-    df: DataFrame, key: str, cap: int = 1024
+    df: DataFrame, key: str, cap: int = _PROBE_KEY_CAP
 ) -> list | None:
     """The mutation's distinct non-null keys, or None when they exceed
     ``cap`` — a TRUNCATED probe list would prune segments holding the
@@ -770,7 +774,27 @@ def delete_by_key(
     in the remove set, so resurrection is structurally impossible."""
     scoped = partition_col in ids.columns
     match_cols = [partition_col, key] if scoped else [key]
-    klo, khi = ids.agg(F.min(key), F.max(key)).first()
+    # The key frame is evaluated ONCE: a broadcast join ships it whole
+    # to the driver anyway, so collect it (Arrow keeps nullable keys
+    # typed) and join against a local relation of its rows — a NULL
+    # key still matches nothing.
+    keyed = ids.select(*match_cols)
+    rows = keyed.toArrow()
+    local = F.broadcast(spark.createDataFrame(rows, keyed.schema))
+    keys = [v for v in rows.columns[-1].to_pylist() if v is not None]
+    # Spark orders NaN above every number; a NaN key skips range pruning.
+    if keys and all(v == v for v in keys):
+        klo, khi = min(keys), max(keys)
+    else:
+        klo = khi = None
+    probe = list(dict.fromkeys(keys))
+    if len(probe) > _PROBE_KEY_CAP:
+        probe = None  # a truncated probe list would prune live keys
+    touched = (
+        {str(v) for v in rows.columns[0].to_pylist()}
+        if scoped
+        else None
+    )
     last: Exception | None = None
     for _ in range(max_replans):
         head = latest_version(table_dir)
@@ -780,39 +804,25 @@ def delete_by_key(
         except FileNotFoundError:
             continue
         _guard_no_log(live, table_dir, "delete_by_key")
-        bases = [s for s in live if not _is_log(s)]
-        if scoped:
-            touched = {
-                str(r[0])
-                for r in ids.select(partition_col).distinct().collect()
-            }
-            candidates = [
-                s
-                for s in bases
-                if (tag := _partition_of(s, partition_col)) is None
-                or tag in touched
-            ]
-        else:
-            candidates = bases
-        # Sub-partition pruning: a segment whose recorded key range
-        # misses every delete key can't lose a row — skip before any
-        # file opens.
         candidates = [
             s
-            for s in candidates
-            if _stats_may_match(stats.get(s), key, klo, khi)
+            for s in live
+            if not _is_log(s)
+            and (
+                touched is None
+                or (tag := _partition_of(s, partition_col)) is None
+                or tag in touched
+            )
+            # Sub-partition pruning: a segment whose recorded key
+            # range misses every delete key can't lose a row — skip
+            # it before any file opens.
+            and _stats_may_match(stats.get(s), key, klo, khi)
+            and _bloom_any_match(stats.get(s), key, probe)
         ]
-        if any("bloom" in (stats.get(s) or {}) for s in candidates):
-            probe = _collect_probe_keys(ids, key)
-            candidates = [
-                s
-                for s in candidates
-                if _bloom_any_match(stats.get(s), key, probe)
-            ]
         if not candidates:
             return head
         current = _read_segments(spark, table_dir, candidates)
-        victims = current.join(F.broadcast(ids), match_cols, "left_semi")
+        victims = current.join(local, match_cols, "left_semi")
         hit = {
             str(r[0])
             for r in victims.select(partition_col).distinct().collect()
@@ -825,7 +835,7 @@ def delete_by_key(
             if (tag := _partition_of(s, partition_col)) is None or tag in hit
         ]
         survivors = _read_segments(spark, table_dir, old).join(
-            F.broadcast(ids), match_cols, "left_anti"
+            local, match_cols, "left_anti"
         )
         new_rels = _stage_partition_segments(
             survivors, table_dir, partition_col

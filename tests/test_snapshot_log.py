@@ -436,6 +436,32 @@ def test_concurrent_vacuums_and_appends(spark, tmp_path, ckpt_interval):
     assert _ids(read_snapshot(spark, t)) == expect
 
 
+def test_stale_vacuum_keeps_segments_of_newer_commits(
+    spark, tmp_path, monkeypatch
+):
+    """A vacuum whose version listing predates the latest commit (an
+    append landed after it looked) must not delete that commit's
+    segment, even though a newer checkpoint lists it: the race
+    test_concurrent_vacuums_and_appends hits at random, made
+    deterministic."""
+    from conversation_with_vector_db_spark.sources import snapshot_log as sl
+
+    t = str(tmp_path / "t")
+    create_table(t)
+    for i in range(3):
+        append_snapshot(
+            spark.range(i * 10, i * 10 + 5), t, checkpoint_interval=1
+        )
+    stale = sl.versions(t)[:-1]
+    assert latest_version(t) in sl._checkpoint_versions(t)
+    monkeypatch.setattr(sl, "versions", lambda table_dir: stale)
+    vacuum(t, keep_versions=1)
+    monkeypatch.undo()
+    assert _ids(read_snapshot(spark, t)) == sorted(
+        x for i in range(3) for x in range(i * 10, i * 10 + 5)
+    )
+
+
 # ---------------------------------------------------------------------------
 # Delta-manifest + checkpoint shape (r5): commit cost is O(change)
 # ---------------------------------------------------------------------------

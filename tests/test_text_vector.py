@@ -254,7 +254,9 @@ class TestIvfIndexed:
                 [(7, [0.1, 0.2, 0.3, 0.4]), (9001, bad)],
                 "vec_id long, embedding array<double>",
             )
-            with pytest.raises(Exception, match="ivf_assign_cells"):
+            with pytest.raises(
+                Exception, match="ValueError: ivf_assign_cells"
+            ):
                 ivf_table_upsert(spark, t, updates)
             assert latest_version(t) == v0
         ok = spark.createDataFrame(
@@ -392,6 +394,37 @@ class TestIvfIndexed:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         assert 0 < n_jobs <= 10, n_jobs
+
+    def test_delete_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
+        """ivf_table_delete collects its id frame once and joins the
+        collected ids: one collect, one segment read for the hit set
+        and one for the survivors' write — at most 8 Spark jobs."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_delete,
+        )
+        from conversation_with_vector_db_spark.sources.transactional import (
+            read_table,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        t = str(tmp_path / "ivf_delete_jobs")
+        ivf_table_create(spark, corpus, t, nlist=8)
+        ids = spark.createDataFrame([(3,), (17,), (200,)], "vec_id long")
+        sc = spark.sparkContext
+        group = f"ivf-delete-{tmp_path.name}"
+        sc.setJobGroup(group, "ivf_table_delete job count")
+        try:
+            ivf_table_delete(spark, t, ids)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= 8, n_jobs
+        left = read_table(spark, t)
+        assert left.count() == corpus.count() - 3
+        assert left.filter(F.col("vec_id").isin(3, 17, 200)).count() == 0
 
     def test_upsert_of_unchanged_rows_keeps_their_cells(self, spark, tmp_path):
         """One assignment rule: create, rebalance and upsert all assign

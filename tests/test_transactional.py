@@ -118,6 +118,58 @@ class TestCopyOnWrite:
         assert after.count() == 28
         assert after.filter(F.col("vec_id").isin(5, 6)).count() == 0
 
+    def test_delete_evaluates_the_key_frame_once(self, spark, store):
+        """The caller's key frame runs once: a Python-computed key
+        column is evaluated once per row, not again for the key range,
+        the hit set and the survivors."""
+        from pyspark.sql.functions import udf
+
+        evaluated = spark.sparkContext.accumulator(0)
+
+        @udf("long")
+        def counted(v):
+            evaluated.add(1)
+            return v
+
+        ids = spark.range(5, 8).select(counted("id").alias("vec_id"))
+        delete_by_key(spark, store, ids, key="vec_id")
+        assert evaluated.value == 3
+        after = read_table(spark, store)
+        assert after.count() == 27
+        assert after.filter(F.col("vec_id").isin(5, 6, 7)).count() == 0
+
+    def test_delete_null_and_string_keys(self, spark, tmp_path):
+        """A NULL delete key matches nothing (a NULL-keyed row stays),
+        and keys keep their type: nullable longs past 2^53 and strings
+        match exactly."""
+        big = 2**62 + 1
+        t = str(tmp_path / "typed")
+        create_partitioned_table(
+            spark,
+            spark.createDataFrame(
+                [(big, "a", 0), (big - 1, "b", 0), (None, "c", 1),
+                 (7, None, 1)],
+                "vec_id long, doc string, namespace int",
+            ),
+            t,
+        )
+        delete_by_key(
+            spark,
+            t,
+            spark.createDataFrame([(big,), (None,)], "vec_id long"),
+            key="vec_id",
+        )
+        delete_by_key(
+            spark,
+            t,
+            spark.createDataFrame([("c",), (None,)], "doc string"),
+            key="doc",
+        )
+        rows = sorted(
+            (r.vec_id, r.doc) for r in read_table(spark, t).collect()
+        )
+        assert rows == [(7, None), (big - 1, "b")]
+
     def test_delete_scoped_when_ids_carry_namespace(self, spark, store):
         # Same key in two namespaces; delete only the ns-1 identity.
         upsert_by_key(
