@@ -612,39 +612,39 @@ def ivf_table_upsert(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     txn: tuple[str, int] | None = None,
-    max_replans: int = 4,
 ) -> int | None:
     """Atomic index maintenance: assign each update to its nearest
     cell, then a GLOBAL-identity upsert — an updated embedding that
     moves to a different cell removes its old row from the previous
     cell and lands in the new one in the SAME commit (a cell-scoped
     upsert would strand a stale twin the probe could still find).
-    Old-row lookup prunes by the recorded id min/max before opening
-    any cell's files.
+    Old-row lookup prunes by the recorded id min/max and Bloom
+    sidecars before opening any cell's files.
 
-    The assigned batch is evaluated ONCE (``localCheckpoint``): the
-    global upsert reads it three times (key min/max, hit-set semi-join,
-    staged write), each a re-run of the caller's chunk/embed/assign
-    plan otherwise. Its blocks are freed when the attempt ends, so a
-    sink upserting per micro-batch holds at most one batch. A ``txn``
-    that already committed (a replayed micro-batch) returns None before
-    the batch is assigned or evaluated.
+    The update ids must fit the driver. The assigned batch is evaluated
+    ONCE per attempt: a lazy ``localCheckpoint`` that the upsert's id
+    collect materializes, so its second read (the staged write) does
+    not re-run the caller's chunk/embed plan or the assignment. Its
+    blocks are freed when the attempt ends, so a sink upserting per
+    micro-batch holds at most one batch. A ``txn`` that already
+    committed (a replayed micro-batch) returns None before the batch
+    is read.
 
-    Conflict retries happen HERE, not inside the upsert: when the
-    writer that won the race was :func:`ivf_table_rebalance`, the
-    centroid model changed, and retrying with the cells assigned under
-    the OLD model would land vectors in cells the new model's probes
-    may never select — a permanent recall hole, not the documented
-    transient dip. Each retry reloads the head's centroids and
-    re-assigns before re-planning the upsert."""
-    from ..sources.snapshot_log import CommitConflictError, last_txn_version
-    from ..sources.transactional import read_table, upsert_by_key_global
+    Every attempt assigns under the HEAD's centroid model: when the
+    writer that won a commit race was :func:`ivf_table_rebalance`, the
+    model changed, and retrying with cells assigned under the OLD
+    model would land vectors in cells the new model's probes may never
+    select — a permanent recall hole, not the documented transient
+    dip. So the conflict retries wrap the whole assign-and-upsert, one
+    upsert attempt each."""
+    from ..sources import transactional as tx
+    from ..sources.snapshot_log import last_txn_version
 
     if txn is not None:
         prev = last_txn_version(table_dir, txn[0])
         if prev is not None and prev >= txn[1]:
             return None  # a replay: skipped before its batch is evaluated
-    table_schema = read_table(spark, table_dir).schema
+    table_schema = tx.read_table(spark, table_dir).schema
     # Updates must carry every index column (id, vector, metadata):
     # a staged segment missing a metadata column would give the table
     # mixed per-file schemas — a nondeterministic read.
@@ -661,32 +661,26 @@ def ivf_table_upsert(
     updates = updates.withColumn(
         vec_col, F.col(vec_col).cast(table_schema[vec_col].dataType)
     )
-    last: Exception | None = None
-    for _ in range(max_replans):
+
+    def attempt():
         assigned = (
             ivf_assign_cells(
                 updates, _load_centroids(table_dir), id_col, vec_col
             )
             .select(*table_cols, "cell")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         try:
-            return upsert_by_key_global(
-                spark,
-                table_dir,
-                assigned,
-                key=id_col,
-                partition_col="cell",
-                txn=txn,
-                max_replans=1,  # replan here: assignment must refresh
+            return tx.upsert_by_key_global(
+                spark, table_dir, assigned, key=id_col,
+                partition_col="cell", txn=txn, max_replans=1,
             )
-        except CommitConflictError as e:
-            last = e
         finally:
             # Free the checkpoint's blocks now; otherwise they live
             # until the driver JVM garbage-collects the RDD.
             assigned._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    raise last if last is not None else CommitConflictError(table_dir)
+
+    return tx._replan(attempt)
 
 
 def ivf_table_delete(
@@ -709,7 +703,6 @@ def ivf_table_rebalance(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    max_replans: int = 4,
 ) -> int:
     """Atomic index REBUILD: re-fit the centroid model on the current
     rows and reassign every vector, swapping all base segments in ONE
@@ -723,55 +716,29 @@ def ivf_table_rebalance(
     assignment — there is no crash point at which the new assignment
     probes with the old model (r6 published the sidecar after the
     commit; a crash in that window stranded the table on the previous
-    model permanently)."""
-    from ..sources.snapshot_log import CommitConflictError
-    from ..sources.transactional import (
-        _guard_no_log,
-        _is_log,
-        _read_segments,
-        _segment_key_stats,
-        _stage_partition_segments,
-        commit_segments,
-        latest_version,
-        live_segments,
-    )
+    model permanently). An attempt that fails before its commit, or
+    whose commit is refused, removes its staged sidecar with its
+    staged segments."""
+    from ..sources.transactional import _copy_on_write, _Rewrite, read_table
 
-    last: Exception | None = None
-    for _ in range(max_replans):
-        head = latest_version(table_dir)
-        try:
-            live = live_segments(table_dir, head)
-        except FileNotFoundError:
-            continue
-        _guard_no_log(live, table_dir, "ivf_table_rebalance")
-        bases = [s for s in live if not _is_log(s)]
-        if not bases:
-            return head
-        current = _read_segments(spark, table_dir, bases).drop("cell")
-        keep_cols = current.columns  # id + vector + metadata ride along
+    def plan(at):
+        if not at.bases:
+            return None
+        current = read_table(spark, table_dir, at.version).drop("cell")
         assigned, cents = ivf_fit_cells(
             current, nlist, vec_col, seed, id_col=id_col
         )
-        new_rels = _stage_partition_segments(
-            assigned.select(*keep_cols, "cell"), table_dir, "cell"
+        at.staged.append(_stage_centroids(cents, table_dir))
+        return _Rewrite(
+            # id + vector + metadata ride along
+            assigned.select(*current.columns, "cell"),
+            at.bases,
+            meta={"centroids": at.staged[-1]},
         )
-        cent_rel = _stage_centroids(cents, table_dir)
-        try:
-            return commit_segments(
-                table_dir, added=new_rels, removed=bases, op="rebalance",
-                stats=_segment_key_stats(
-                    table_dir, new_rels, id_col, spark=spark
-                ),
-                meta={"centroids": cent_rel},
-            )
-        except CommitConflictError as e:
-            import shutil as _sh
 
-            for rel in [*new_rels, cent_rel]:
-                _sh.rmtree(f"{table_dir}/{rel}", ignore_errors=True)
-            last = e
-            continue
-    raise last if last is not None else CommitConflictError(table_dir)
+    return _copy_on_write(
+        spark, table_dir, "rebalance", plan, "cell", key=id_col
+    )
 
 
 def ivf_table_vacuum(

@@ -109,6 +109,24 @@ class CommitConflictError(RuntimeError):
     resurrect rows; the caller must re-plan from the current head."""
 
 
+def is_missing_file_error(e: BaseException) -> bool:
+    """True when ``e`` reports a file or path that no longer exists —
+    how a segment vacuumed between a writer's planning and its Spark
+    action surfaces: ``FileNotFoundError`` on the driver, an
+    AnalysisException (``[PATH_NOT_FOUND]``) while the scan resolves,
+    or an executor's ``[FAILED_READ_FILE.FILE_NOT_EXIST]`` inside a
+    Py4JJavaError. A writer seeing it re-plans from the new head."""
+    msg = str(e)
+    return (
+        isinstance(e, FileNotFoundError)
+        or "AnalysisException" in type(e).__name__
+        or any(
+            m in msg
+            for m in ("PATH_NOT_FOUND", "FILE_NOT_EXIST", "does not exist")
+        )
+    )
+
+
 def _commits_dir(table_dir: str) -> str:
     return os.path.join(table_dir, _COMMITS)
 
@@ -842,20 +860,12 @@ def compact_snapshots(
             )
         except Exception as e:  # noqa: BLE001 - classify below
             # A fold segment vacuumed between planning and the Spark
-            # action surfaces as AnalysisException / SparkException
-            # ("path does not exist"), not FileNotFoundError — that
-            # is the same raced-vacuum condition: re-plan rather than
-            # crash the maintenance job. Anything else re-raises.
-            name = type(e).__name__
-            msg = str(e)
-            if (
-                "AnalysisException" in name
-                or "PATH_NOT_FOUND" in msg
-                or "does not exist" in msg
-                or isinstance(e, FileNotFoundError)
-            ):
+            # action is the same raced-vacuum condition as a vanished
+            # head: re-plan rather than crash the maintenance job.
+            if is_missing_file_error(e):
                 last = CommitConflictError(
-                    f"compaction raced a vacuum at {table_dir}: {msg[:120]}"
+                    f"compaction raced a vacuum at {table_dir}: "
+                    f"{str(e)[:120]}"
                 )
                 continue
             raise

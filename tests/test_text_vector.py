@@ -398,7 +398,8 @@ class TestIvfIndexed:
     def test_delete_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
         """ivf_table_delete collects its id frame once and joins the
         collected ids: one collect, one segment read for the hit set
-        and one for the survivors' write — at most 8 Spark jobs."""
+        and one for the survivors' write, which reuses the hit-set
+        scan's schema — at most 7 Spark jobs."""
         from conversation_with_vector_db_spark.operators.ann import (
             ivf_table_create,
             ivf_table_delete,
@@ -421,10 +422,45 @@ class TestIvfIndexed:
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n_jobs <= 8, n_jobs
+        assert 0 < n_jobs <= 7, n_jobs
         left = read_table(spark, t)
         assert left.count() == corpus.count() - 3
         assert left.filter(F.col("vec_id").isin(3, 17, 200)).count() == 0
+
+    def test_upsert_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
+        """ivf_table_upsert reads the table schema, collects the update
+        ids once, reads the candidate segments for the hit set and
+        writes survivors plus assigned updates — at most 9 Spark jobs
+        (no min/max aggregate, no second schema inference)."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_upsert,
+        )
+        from conversation_with_vector_db_spark.sources.transactional import (
+            read_table,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        t = str(tmp_path / "ivf_upsert_jobs")
+        ivf_table_create(spark, corpus, t, nlist=8)
+        rows = corpus.filter(F.col("vec_id").isin(3, 17, 200)).collect()
+        updates = spark.createDataFrame(
+            [(r["vec_id"] + 1000 * (i == 2), r["embedding"])
+             for i, r in enumerate(rows)],
+            corpus.schema,
+        )
+        sc = spark.sparkContext
+        group = f"ivf-upsert-{tmp_path.name}"
+        sc.setJobGroup(group, "ivf_table_upsert job count")
+        try:
+            ivf_table_upsert(spark, t, updates)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= 9, n_jobs
+        assert read_table(spark, t).count() == corpus.count() + 1
 
     def test_upsert_of_unchanged_rows_keeps_their_cells(self, spark, tmp_path):
         """One assignment rule: create, rebalance and upsert all assign

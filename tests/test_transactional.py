@@ -138,6 +138,144 @@ class TestCopyOnWrite:
         assert after.count() == 27
         assert after.filter(F.col("vec_id").isin(5, 6, 7)).count() == 0
 
+    def test_upsert_evaluates_the_update_frame_once(self, spark, store):
+        """The caller's update frame runs in two passes, the key collect
+        and the staged write: a Python-computed key column is evaluated
+        twice per row, not again for the key range or the hit set."""
+        from pyspark.sql.functions import udf
+
+        from conversation_with_vector_db_spark.sources.transactional import (
+            upsert_by_key_global,
+        )
+
+        evaluated = spark.sparkContext.accumulator(0)
+
+        @udf("long")
+        def counted(v):
+            evaluated.add(1)
+            return v
+
+        updates = spark.range(5, 8).select(
+            counted("id").alias("vec_id"),
+            F.lit(999).alias("label"),
+            F.lit(2).alias("namespace"),
+        )
+        upsert_by_key_global(spark, store, updates, key="vec_id")
+        assert evaluated.value == 6
+        after = read_table(spark, store)
+        assert after.count() == 30
+        assert {
+            (r.vec_id, r.label, r.namespace)
+            for r in after.filter(F.col("vec_id").isin(5, 6, 7)).collect()
+        } == {(5, 999, 2), (6, 999, 2), (7, 999, 2)}
+
+    def test_delete_racing_a_vacuum_replans(self, spark, store, monkeypatch):
+        """A writer commits over the delete's planned segments and a
+        vacuum removes them before the delete's staged write reads them:
+        the delete re-plans from the new head instead of failing on the
+        missing files, and both writes land."""
+        from conversation_with_vector_db_spark.sources import (
+            transactional as tx,
+        )
+
+        real = tx._stage_partition_segments
+        raced = []
+
+        def racing_stage(*a, **kw):
+            if not raced:
+                raced.append(True)
+                tx.upsert_by_key_global(
+                    spark,
+                    store,
+                    spark.createDataFrame(
+                        [(4, 444, 1)],
+                        "vec_id long, label int, namespace int",
+                    ),
+                    key="vec_id",
+                )
+                vacuum(store, keep_versions=1)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(tx, "_stage_partition_segments", racing_stage)
+        delete_by_key(
+            spark, store, spark.createDataFrame([(1,)], "vec_id long"),
+            key="vec_id",
+        )
+        monkeypatch.undo()
+        assert raced
+        after = read_table(spark, store)
+        assert after.count() == 29
+        assert after.filter(F.col("vec_id") == 1).count() == 0
+        assert after.filter(F.col("label") == 444).count() == 1
+
+    def test_upserts_racing_on_one_new_key_land_once(
+        self, spark, store, monkeypatch
+    ):
+        """Two upserts inserting the same NEW identity: neither plan
+        finds a row to replace, so the one committing second sees a
+        segment that may hold its key appear since its plan, re-plans,
+        and replaces the first one's row — the identity stays unique."""
+        from conversation_with_vector_db_spark.sources import (
+            transactional as tx,
+        )
+
+        real = tx._stage_partition_segments
+        raced = []
+
+        def racing_stage(*a, **kw):
+            if not raced:
+                raced.append(True)
+                upsert_by_key(
+                    spark,
+                    store,
+                    spark.createDataFrame(
+                        [(5000, 1, 0)],
+                        "vec_id long, label int, namespace int",
+                    ),
+                    key="vec_id",
+                )
+            return real(*a, **kw)
+
+        monkeypatch.setattr(tx, "_stage_partition_segments", racing_stage)
+        upsert_by_key(
+            spark,
+            store,
+            spark.createDataFrame(
+                [(5000, 2, 0)], "vec_id long, label int, namespace int"
+            ),
+            key="vec_id",
+        )
+        monkeypatch.undo()
+        assert raced
+        got = read_table(spark, store).filter(F.col("vec_id") == 5000)
+        assert [r.label for r in got.collect()] == [2]
+
+    def test_failed_delete_removes_its_staged_segments(
+        self, spark, store, monkeypatch
+    ):
+        """A delete failing after its survivors staged (here: while
+        collecting their key stats) removes the staged segments itself:
+        data/ holds only live segments, nothing waits for the vacuum."""
+        from conversation_with_vector_db_spark.sources import (
+            transactional as tx,
+        )
+
+        def fail(*a, **kw):
+            raise RuntimeError("stats collection failed")
+
+        monkeypatch.setattr(tx, "_segment_key_stats", fail)
+        with pytest.raises(RuntimeError, match="stats collection failed"):
+            delete_by_key(
+                spark, store, spark.createDataFrame([(1,)], "vec_id long"),
+                key="vec_id",
+            )
+        monkeypatch.undo()
+        data = os.path.join(store, "data")
+        assert {
+            os.path.join("data", n) for n in os.listdir(data)
+        } == set(live_segments(store))
+        assert read_table(spark, store).count() == 30
+
     def test_delete_null_and_string_keys(self, spark, tmp_path):
         """A NULL delete key matches nothing (a NULL-keyed row stays),
         and keys keep their type: nullable longs past 2^53 and strings
