@@ -644,6 +644,7 @@ def ivf_table_upsert(
         prev = last_txn_version(table_dir, txn[0])
         if prev is not None and prev >= txn[1]:
             return None  # a replay: skipped before its batch is evaluated
+    # The table's recorded schema: building the read runs no job.
     table_schema = tx.read_table(spark, table_dir).schema
     # Updates must carry every index column (id, vector, metadata):
     # a staged segment missing a metadata column would give the table

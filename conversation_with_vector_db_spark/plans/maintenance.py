@@ -1327,7 +1327,8 @@ def m14_delete_where_lifecycle(
     audit trail of a transactional table as a queryable DataFrame —
     version, op, segment delta counts, txn tag, meta flag, straight
     from the manifests. The lifecycle here runs create (3 tagged
-    segments) -> partition-scoped upsert (1-for-1 segment swap in the
+    segments, with the recorded schema in its meta) -> partition-scoped
+    upsert (1-for-1 segment swap in the
     touched namespace) -> cross-namespace keyed delete (3-for-3) ->
     metadata-only namespace drop (0 added, 1 removed) and the oracle
     pins the ENTIRE expected history as literals — segment-count
@@ -1336,7 +1337,7 @@ def m14_delete_where_lifecycle(
     oracle="""
 SELECT * FROM (VALUES
     (0, 'create',  0, 0, false),
-    (1, 'append',  3, 0, false),
+    (1, 'append',  3, 0, true),
     (2, 'upsert',  1, 1, false),
     (3, 'delete',  3, 3, false),
     (4, 'drop_partition', 0, 1, false)

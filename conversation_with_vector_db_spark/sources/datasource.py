@@ -6,9 +6,14 @@ pruning pushed through ``pushFilters``, and
 that tails the commit log — versions are the offsets, so exactly-once
 delivery falls out of the stream checkpoint (the Delta CDF shape).
 
-Positioning: :func:`~.snapshot_log.read_snapshot` stays the FAST batch
-path — it hands the JVM parquet reader explicit segment paths, keeping
-whole-stage codegen and native column pruning. This source is the
+Positioning: :func:`~.snapshot_log.read_snapshot` (and
+:func:`~.transactional.read_table`) stay the FAST batch path — they
+hand the JVM parquet reader explicit segment paths and the table's
+recorded schema, keeping whole-stage codegen and native column
+pruning, and run no Spark job to build. This source takes the same
+recorded schema as its own (a segment older than a column reads it
+as typed NULLs; a table that records none falls back to the first
+live segment's footer). It is the
 INTEGRATION surface: anything that speaks ``format(...)`` (SQL
 ``CREATE TABLE ... USING``, spark.readStream, third-party tooling) can
 consume the table format without importing this package's Python API.
@@ -100,6 +105,33 @@ def _segment_files(table_dir: str, rel: str) -> list[str]:
     return out
 
 
+def _pinned_version(options, table_dir: str) -> int | None:
+    """The batch read's version: ``version``, or ``timestampAsOf``
+    (unix seconds) resolved against the monotone effective commit
+    times; None = the head."""
+    v = options.get("version")
+    t = options.get("timestampAsOf")
+    if v is not None and t is not None:
+        raise ValueError(
+            "pass either 'version' or 'timestampAsOf', not both"
+        )
+    if t is not None:
+        v = sl.version_at_timestamp(table_dir, float(t))
+    return int(v) if v is not None else None
+
+
+def _file_batches(files, target):
+    """Arrow batches of segment ``files`` in the ``target`` arrow
+    schema, column for column (the JVM reads them positionally); a
+    column a file predates (the table widened after it was written)
+    reads as typed NULLs."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        list(files), schema=target, format="parquet"
+    ).to_batches()
+
+
 @dataclass
 class _SegmentPartition(InputPartition):
     files: tuple
@@ -138,17 +170,7 @@ class _SnapshotReader(DataSourceReader):
 
     def __init__(self, options, schema: StructType):
         self._table_dir = _table_dir_opt(options)
-        v = options.get("version")
-        t = options.get("timestampAsOf")
-        if v is not None and t is not None:
-            raise ValueError(
-                "pass either 'version' or 'timestampAsOf', not both"
-            )
-        if t is not None:
-            # TIMESTAMP AS OF (unix seconds): resolve against the
-            # monotone effective commit times.
-            v = sl.version_at_timestamp(self._table_dir, float(t))
-        self._version = int(v) if v is not None else None
+        self._version = _pinned_version(options, self._table_dir)
         self._schema = schema
         self._segs = sl.live_segments(self._table_dir, self._version)
         self._stats = sl.segment_stats(
@@ -211,14 +233,11 @@ class _SnapshotReader(DataSourceReader):
         ]
 
     def read(self, partition: _SegmentPartition):
-        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        cols = self._schema.fieldNames()
-        for path in partition.files:
-            for batch in pq.ParquetFile(path).iter_batches(
-                columns=cols
-            ):
-                yield batch
+        yield from _file_batches(
+            partition.files, to_arrow_schema(self._schema)
+        )
 
 
 #: Commit ops whose ``added`` segments MAY be new rows (the append
@@ -276,26 +295,26 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _SegmentPartition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        names = self._schema.fieldNames()
-        stamp = "_commit_version" in names
-        cols = [c for c in names if c != "_commit_version"]
-        for path in partition.files:
-            for batch in pq.ParquetFile(path).iter_batches(columns=cols):
-                if not stamp:
-                    yield batch
-                    continue
-                arrays = list(batch.columns)
-                arrays.append(
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        stamp = "_commit_version" in self._schema.fieldNames()
+        target = pa.schema(
+            [
+                f for f in to_arrow_schema(self._schema)
+                if f.name != "_commit_version"
+            ]
+        )
+        for batch in _file_batches(partition.files, target):
+            if stamp:
+                batch = batch.append_column(
+                    "_commit_version",
                     pa.array(
                         [partition.commit_version] * batch.num_rows,
-                        type=pa.int64(),
-                    )
+                        pa.int64(),
+                    ),
                 )
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=cols + ["_commit_version"]
-                )
+            yield batch
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in the stream checkpoint
@@ -395,7 +414,6 @@ def _cdc_read(partition: _CDCPartition, schema: StructType,
               key: str, pc: str):
     """Derive one partition's CDC rows (shared stream/batch body)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -405,13 +423,11 @@ def _cdc_read(partition: _CDCPartition, schema: StructType,
     # batches positionally.
     out_schema = to_arrow_schema(schema)
     stamps = ("_change_type", "_commit_version", "_commit_timestamp")
-    cols = [f.name for f in out_schema if f.name not in stamps]
+    target = pa.schema([f for f in out_schema if f.name not in stamps])
+    cols = target.names
 
     def _load(files):
-        if not files:
-            return []
-        tabs = [pq.read_table(p, columns=cols) for p in files]
-        return pa.concat_tables(tabs).to_pylist()
+        return [r for b in _file_batches(files, target) for r in b.to_pylist()]
 
     after = _load(partition.files_after)
     v = partition.commit_version
@@ -562,35 +578,39 @@ class SnapshotLogDataSource(DataSource):
         return "snapshot_log"
 
     def schema(self):
-        import pyarrow.parquet as pq
-
+        """The schema the pinned version recorded, as DDL (this runs in
+        a Python worker, which cannot parse DDL itself); a table that
+        records none falls back to its first live segment's footer."""
         table_dir = _table_dir_opt(self.options)
-        v = self.options.get("version")
-        segs = sl.live_segments(
-            table_dir, int(v) if v is not None else None
-        )
-        if not segs:
-            raise ValueError(
-                f"cannot infer schema of empty table {table_dir}"
-            )
-        files = _segment_files(table_dir, segs[0])
-        arrow = pq.ParquetFile(files[0]).schema_arrow
-        from pyspark.sql.pandas.types import from_arrow_schema
+        v = _pinned_version(self.options, table_dir)
+        fields = sl.recorded_schema(table_dir, v)
+        if fields is None:
+            import pyarrow.parquet as pq
 
-        spark_schema = from_arrow_schema(arrow)
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            segs = sl.live_segments(table_dir, v)
+            if not segs:
+                raise ValueError(
+                    f"cannot infer schema of empty table {table_dir}"
+                )
+            files = _segment_files(table_dir, segs[0])
+            fields = sl._fields_of(
+                from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
+            )
+        ddl = sl.schema_ddl(fields)
         if self.options.get("readChangeFeed", "").lower() == "true":
             # CDC stream: Delta CDF's column contract.
             return (
-                spark_schema.add("_change_type", "string")
-                .add("_commit_version", "long")
-                .add("_commit_timestamp", "double")
+                ddl + ", _change_type string, _commit_version bigint, "
+                "_commit_timestamp double"
             )
         if self.options.get("withCommitVersion", "").lower() == "true":
             # Stream-only convenience: stamp each row with the commit
             # that delivered it (batch readers don't add the column —
             # pass this option on readStream only).
-            spark_schema = spark_schema.add("_commit_version", "long")
-        return spark_schema
+            ddl += ", _commit_version bigint"
+        return ddl
 
     def reader(self, schema: StructType):
         if self.options.get("readChangeFeed", "").lower() == "true":

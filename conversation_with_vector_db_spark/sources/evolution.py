@@ -4,18 +4,23 @@ rewriting a byte of existing data — the Delta/Iceberg contract that a
 
 Model:
 
-* The table's CURRENT schema is a ``meta`` key (``schema``) published
-  atomically with the commit that first uses it (Delta's
-  metaData-action shape, the same channel the IVF centroid pointer
-  rides). ``table_meta`` resolves newest-wins, so time travel sees
-  the schema THAT VERSION had — a v3 read of a table widened at v5
-  neither shows the new column nor fails.
+* The table's CURRENT schema is a ``meta`` key (``schema``,
+  :data:`.snapshot_log.SCHEMA_KEY`) published atomically with the
+  commit that first uses it (Delta's metaData-action shape, the same
+  channel the IVF centroid pointer rides). Every table created here or
+  through :func:`.transactional.create_partitioned_table` records it.
+  ``table_meta`` resolves newest-wins, so time travel sees the schema
+  THAT VERSION had — a v3 read of a table widened at v5 neither shows
+  the new column nor fails.
 * A write may ADD columns (appended to the recorded order, never
   interleaved) and may OMIT existing columns (they read as typed
   NULLs for those rows). It may NOT change an existing column's type
   or redefine order — :class:`SchemaEvolutionError`, fail-closed,
-  because silent coercion is how lakehouse tables rot.
-* The read path hands the RECORDED schema to the parquet reader:
+  because silent coercion is how lakehouse tables rot. The same rule
+  runs wherever rows are staged: here, ``append_partitioned`` and
+  every copy-on-write commit in :mod:`.transactional`.
+* Every read of a table that records a schema hands the RECORDED
+  schema to the parquet reader (:func:`.snapshot_log.read_segments`):
   segments written before a column existed project a typed NULL for
   it, segments newer than a time-traveled version are projected down
   to the old shape — one scan, no footer pre-walk, no data rewrite
@@ -33,61 +38,24 @@ widened).
 from __future__ import annotations
 
 import json
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .snapshot_log import (
+from .snapshot_log import (  # noqa: F401 - re-exported
+    SCHEMA_KEY,
+    SchemaEvolutionError,
+    _fields_of,
     _write_segment,
     commit_segments,
     create_table,
+    declared_struct,
+    evolve_fields,
     latest_version,
-    live_segments,
+    recorded_schema,
     segment_path,
-    table_meta,
 )
-
-SCHEMA_KEY = "schema"
-
-
-class SchemaEvolutionError(ValueError):
-    pass
-
-
-def _fields_of(schema: T.StructType) -> list[dict]:
-    return [
-        {"name": f.name, "type": f.dataType.simpleString()}
-        for f in schema.fields
-    ]
-
-
-def recorded_schema(
-    table_dir: str, version: int | None = None
-) -> list[dict] | None:
-    """The [{name, type}] list the table declared at ``version``,
-    None for pre-evolution tables (their schema is their segments')."""
-    raw = table_meta(table_dir, version).get(SCHEMA_KEY)
-    return json.loads(raw) if raw is not None else None
-
-
-def evolve_fields(
-    old: list[dict], new: list[dict]
-) -> tuple[list[dict], bool]:
-    """Merged field list (old order, new columns appended) and
-    whether anything changed. Type conflicts and reorders of existing
-    columns fail closed."""
-    by_name = {f["name"]: f["type"] for f in old}
-    for f in new:
-        t = by_name.get(f["name"])
-        if t is not None and t != f["type"]:
-            raise SchemaEvolutionError(
-                f"column {f['name']!r} is {t}, write carries "
-                f"{f['type']} — type changes require an explicit "
-                "rewrite, not evolution"
-            )
-    added = [f for f in new if f["name"] not in by_name]
-    return old + added, bool(added)
+from .transactional import _constraints_pre_commit, read_table
 
 
 def create_evolved_table(
@@ -110,7 +78,10 @@ def append_evolved(df: DataFrame, table_dir: str) -> int:
     """Append that may widen the schema (new columns) or narrow the
     ROW (omitted existing columns read as NULL). The widened schema
     publishes in the SAME commit as the data that needs it — no
-    window where a reader sees rows it cannot shape."""
+    window where a reader sees rows it cannot shape. CHECK / FOREIGN
+    KEY / UNIQUE constraints read the staged segment with the schema
+    this commit publishes, so a row that OMITS a constrained column
+    evaluates its predicate on NULL and is refused."""
     old = recorded_schema(table_dir)
     if old is None:
         raise SchemaEvolutionError(
@@ -119,89 +90,30 @@ def append_evolved(df: DataFrame, table_dir: str) -> int:
         )
     merged, changed = evolve_fields(old, _fields_of(df.schema))
     rel = _write_segment(df, table_dir)
-    meta = (
-        {SCHEMA_KEY: json.dumps(merged)} if changed else None
-    )
     try:
         return commit_segments(
             table_dir, added=[rel], removed=[], op="append",
-            meta=meta,
-            pre_commit=_constraints_pre_commit_evolved(
-                df.sparkSession, table_dir, rel, merged
+            meta={SCHEMA_KEY: json.dumps(merged)} if changed else None,
+            pre_commit=_constraints_pre_commit(
+                df.sparkSession, table_dir, [rel], merged,
+                widens=changed,
             ),
         )
     except Exception:
-        import shutil as _shutil
-
-        from .snapshot_log import segment_path
-
-        _shutil.rmtree(
-            segment_path(table_dir, rel), ignore_errors=True
-        )
+        shutil.rmtree(segment_path(table_dir, rel), ignore_errors=True)
         raise
-
-
-def _constraints_pre_commit_evolved(
-    spark: SparkSession, table_dir: str, rel: str, merged: list[dict]
-):
-    """Per-CAS-attempt CHECK enforcement on the evolved write path
-    (the evolution-side twin of transactional's
-    _constraints_pre_commit; shared core = check_violations): the
-    staged segment is read through the MERGED declared schema (the
-    same typed-NULL backfill the evolved read uses), so a row that
-    OMITS a constrained column evaluates its predicate on NULL and is
-    refused — fail-closed. Memoized per constraint map; cleanup of
-    the refused segment is the caller's except block."""
-    from .snapshot_log import segment_path
-    from .transactional import check_violations, table_constraints
-
-    state = {"ok_for": None}
-
-    def hook(_head: int) -> None:
-        cons = table_constraints(table_dir)
-        if not cons:
-            return
-        key = json.dumps(cons, sort_keys=True)
-        if state["ok_for"] == key:
-            return
-        staged = spark.read.schema(declared_struct(merged)).parquet(
-            segment_path(table_dir, rel)
-        )
-        check_violations(staged, cons, table_dir)
-        state["ok_for"] = key
-
-    return hook
-
-
-def declared_struct(fields: list[dict]) -> T.StructType:
-    return T.StructType.fromDDL(
-        ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-    )
 
 
 def read_evolved(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Version-pinned read aligned to the schema THAT version
-    declared, in ONE scan: the declared schema is handed to the
-    parquet reader, which projects typed NULLs for columns a segment
-    predates and skips columns the pinned version does not know yet
-    (time travel shows the old shape) — no footer pre-walk, no
-    per-era unions, no data movement. A segment whose on-disk type
-    genuinely conflicts with the declaration fails inside the scan
-    (vectorized-reader schema check) instead of being coerced."""
+    """Version-pinned read of a schema-tracked table: refuses a table
+    that records no schema at ``version``, then reads it like every
+    table (:func:`.transactional.read_table`)."""
     if version is None:
         version = latest_version(table_dir)
-    fields = recorded_schema(table_dir, version)
-    if fields is None:
+    if recorded_schema(table_dir, version) is None:
         raise SchemaEvolutionError(
             f"{table_dir} is not schema-tracked at v{version}"
         )
-    segs = live_segments(table_dir, version)
-    if not segs:
-        raise ValueError(
-            f"version {version} of {table_dir} has no segments"
-        )
-    return spark.read.schema(declared_struct(fields)).parquet(
-        *[segment_path(table_dir, s) for s in segs]
-    )
+    return read_table(spark, table_dir, version)

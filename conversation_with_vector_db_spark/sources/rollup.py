@@ -49,7 +49,9 @@ from .snapshot_log import (
     last_txn_version,
     latest_version,
     live_segments,
+    read_segments,
     read_snapshot,
+    recorded_schema,
     table_meta,
 )
 
@@ -129,8 +131,9 @@ def rollup_refresh(
                 "segments_read": 0}
 
     if mode == "incremental":
-        src = spark.read.parquet(
-            *[os.path.join(source_dir, s) for s in new_segs]
+        src = read_segments(
+            spark, source_dir, new_segs,
+            recorded_schema(source_dir, v_head),
         )
         part = _partials(src, ts_col, value_col, bucket_seconds)
         rel = _write_segment(part, rollup_dir)

@@ -63,6 +63,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "CHECKPOINT_INTERVAL",
@@ -75,12 +77,15 @@ __all__ = [
     "last_txn_version",
     "latest_version",
     "live_segments",
+    "read_segments",
     "read_snapshot",
+    "recorded_schema",
     "restore_table",
     "rewrite_snapshot",
     "segment_path",
     "segment_stats",
     "table_meta",
+    "table_state",
     "version_at_timestamp",
     "vacuum",
     "versions",
@@ -196,13 +201,17 @@ def _apply_delta(live: list[str], manifest: dict) -> list[str]:
     )
 
 
-def live_segments(table_dir: str, version: int | None = None) -> list[str]:
-    """Relative segment paths live at ``version`` (default: head).
+def table_state(table_dir: str, version: int | None = None) -> dict:
+    """The table at ``version`` (default: head) from ONE walk of its
+    log: ``live`` segment paths, per-live-segment ``stats`` (see
+    :func:`segment_stats`), the effective ``meta`` map (see
+    :func:`table_meta`) and the streaming ``txns`` map (see
+    :func:`last_txn_version`).
 
     Reconstruction: walk committed versions DOWN from ``version`` until
     a base — a checkpoint sidecar, or a manifest embedding a full
-    ``live`` list (v0's create; old-format manifests) — then replay the
-    collected deltas UP. Replay length is bounded by
+    ``live`` list (v0's create; old-format manifests; a branch's fork)
+    — then replay the collected deltas UP. Replay length is bounded by
     ``CHECKPOINT_INTERVAL``. A manifest or checkpoint reaped by a
     concurrent vacuum mid-walk surfaces as :class:`FileNotFoundError`,
     which every caller's retry loop already re-resolves from the new
@@ -215,21 +224,22 @@ def live_segments(table_dir: str, version: int | None = None) -> list[str]:
         raise FileNotFoundError(_manifest_path(table_dir, version))
     ckpts = _checkpoint_versions(table_dir)
     deltas: list[dict] = []
-    base: list[str] | None = None
     for u in reversed([v for v in vs if v <= version]):
         if u in ckpts:
             try:
                 with open(_ckpt_path(table_dir, u)) as f:
-                    base = list(json.load(f)["live"])
+                    base = json.load(f)
                 break
             except FileNotFoundError:
                 pass  # vacuumed between listing and read; use manifest
         m = _read_manifest(table_dir, u)  # FileNotFoundError -> caller
         if "live" in m:
-            base = list(m["live"])
+            # A base manifest: its own meta and txn apply on top.
+            base = {"live": m["live"], "stats": m.get("stats", {})}
+            deltas.append({k: m[k] for k in ("meta", "txn") if k in m})
             break
         deltas.append(m)
-    if base is None:
+    else:
         # The walk ran past the oldest surviving manifest without
         # finding a base: a concurrent vacuum reaped the chain tail
         # under us. Its fence guarantees the NEW head window is
@@ -238,42 +248,31 @@ def live_segments(table_dir: str, version: int | None = None) -> list[str]:
             f"no reconstruction base at or below v{version} "
             f"of {table_dir}"
         )
-    live = base
-    for m in reversed(deltas):
-        live = _apply_delta(live, m)
-    return live
+    live = list(base["live"])
+    stats = dict(base.get("stats", {}))
+    meta = dict(base.get("meta", {}))
+    txns = dict(base.get("txns", {}))
+    for d in reversed(deltas):
+        live = _apply_delta(live, d)
+        for rel in d.get("removed", ()):
+            stats.pop(rel, None)
+        stats.update(d.get("stats", {}))
+        meta.update(d.get("meta", {}))  # newest commit wins per key
+        if t := d.get("txn"):
+            app, tv = str(t["app"]), int(t["version"])
+            txns[app] = max(txns.get(app, tv), tv)
+    return {"live": live, "stats": stats, "meta": meta, "txns": txns}
+
+
+def live_segments(table_dir: str, version: int | None = None) -> list[str]:
+    """Relative segment paths live at ``version`` (default: head)."""
+    return table_state(table_dir, version)["live"]
 
 
 def _collect_txns(table_dir: str, version: int) -> dict[str, int]:
     """Latest streaming-transaction version per app id at ``version``
-    (Delta's ``txnAppId``/``txnVersion`` idempotent-write map). Walks
-    down to the nearest checkpoint (whose ``txns`` map seeds older
-    history) — bounded by ``CHECKPOINT_INTERVAL`` like live-set
-    reconstruction. Missing manifests (concurrent vacuum) surface as
-    :class:`FileNotFoundError` for the caller's retry loop."""
-    vs = versions(table_dir)
-    ckpts = _checkpoint_versions(table_dir)
-    newer: dict[str, int] = {}
-    base: dict[str, int] = {}
-    for u in reversed([v for v in vs if v <= version]):
-        if u in ckpts:
-            try:
-                with open(_ckpt_path(table_dir, u)) as f:
-                    base = dict(json.load(f).get("txns", {}))
-                break
-            except FileNotFoundError:
-                pass  # vacuumed between listing and read; use manifest
-        m = _read_manifest(table_dir, u)
-        t = m.get("txn")
-        if t:
-            app = str(t["app"])
-            newer[app] = max(newer.get(app, int(t["version"])),
-                             int(t["version"]))
-        if "live" in m:
-            break
-    for app, v in newer.items():
-        base[app] = max(base.get(app, v), v)
-    return base
+    (Delta's ``txnAppId``/``txnVersion`` idempotent-write map)."""
+    return table_state(table_dir, version)["txns"]
 
 
 def last_txn_version(
@@ -287,42 +286,94 @@ def last_txn_version(
     return _collect_txns(table_dir, version).get(app)
 
 
-def _collect_meta(table_dir: str, version: int) -> dict:
+def table_meta(table_dir: str, version: int | None = None) -> dict:
     """Effective table metadata at ``version`` — the newest value per
     key across commits carrying a ``meta`` map (Delta's metaData-action
     shape: a commit can atomically publish a pointer, e.g. an ANN
-    index's centroid-model sidecar, WITH the data it describes). Walks
-    down to the nearest checkpoint (whose ``meta`` map seeds older
-    history), like :func:`_collect_txns`. Missing manifests (concurrent
-    vacuum) surface as :class:`FileNotFoundError` for the caller's
-    retry loop."""
-    vs = versions(table_dir)
-    ckpts = _checkpoint_versions(table_dir)
-    newer: dict = {}
-    base: dict = {}
-    for u in reversed([v for v in vs if v <= version]):
-        if u in ckpts:
-            try:
-                with open(_ckpt_path(table_dir, u)) as f:
-                    base = dict(json.load(f).get("meta", {}))
-                break
-            except FileNotFoundError:
-                pass  # vacuumed between listing and read; use manifest
-        m = _read_manifest(table_dir, u)
-        for key, val in m.get("meta", {}).items():
-            newer.setdefault(key, val)  # newest commit wins per key
-        if "live" in m:
-            break
-    base.update(newer)
-    return base
+    index's centroid-model sidecar, WITH the data it describes)."""
+    return table_state(table_dir, version)["meta"]
 
 
-def table_meta(table_dir: str, version: int | None = None) -> dict:
-    """Public read of the effective ``meta`` map (see
-    :func:`_collect_meta`)."""
-    if version is None:
-        version = latest_version(table_dir)
-    return _collect_meta(table_dir, version)
+#: Meta key holding the table's RECORDED schema: a JSON list of
+#: ``{name, type}`` in column order, ``type`` in quoted DDL. Written by
+#: the creating commit and by every commit that widens the table;
+#: resolved newest-wins like any meta key, so each version reads with
+#: the schema it had. Tables that record nothing (bare
+#: :func:`create_table` + :func:`append_snapshot`) read by inference.
+SCHEMA_KEY = "schema"
+
+
+class SchemaEvolutionError(ValueError):
+    pass
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ddl(t: T.DataType) -> str:
+    """``t`` as DDL that parses back to ``t`` whatever its field names:
+    nested names are back-quoted (``simpleString`` leaves them bare)."""
+    if isinstance(t, T.StructType):
+        return "struct<" + ",".join(
+            f"{_quote(f.name)}:{_ddl(f.dataType)}" for f in t.fields
+        ) + ">"
+    if isinstance(t, T.ArrayType):
+        return f"array<{_ddl(t.elementType)}>"
+    if isinstance(t, T.MapType):
+        return f"map<{_ddl(t.keyType)},{_ddl(t.valueType)}>"
+    return t.simpleString()
+
+
+def _fields_of(schema: T.StructType) -> list[dict]:
+    return [{"name": f.name, "type": _ddl(f.dataType)} for f in schema.fields]
+
+
+def schema_ddl(fields: list[dict]) -> str:
+    return ", ".join(f"{_quote(f['name'])} {f['type']}" for f in fields)
+
+
+def declared_struct(fields: list[dict]) -> T.StructType:
+    return T.StructType.fromDDL(schema_ddl(fields))
+
+
+def recorded_schema(
+    table_dir: str, version: int | None = None
+) -> list[dict] | None:
+    """The [{name, type}] list the table recorded at ``version``, None
+    for a table that records none (its schema is its segments')."""
+    return fields_in(table_meta(table_dir, version))
+
+
+def fields_in(meta: dict) -> list[dict] | None:
+    """The recorded fields a ``meta`` map carries, if any."""
+    raw = meta.get(SCHEMA_KEY)
+    return json.loads(raw) if raw is not None else None
+
+
+def evolve_fields(
+    old: list[dict], new: list[dict]
+) -> tuple[list[dict], bool]:
+    """Merged field list (old order, new columns appended) and
+    whether anything changed. A type conflict on an existing column
+    fails closed. Records written before types were quoted compare by
+    their parsed type."""
+    by_name = {f["name"]: f["type"] for f in old}
+    for f in new:
+        t = by_name.get(f["name"])
+        if (
+            t is not None
+            and t != f["type"]
+            and _ddl(declared_struct([{"name": "c", "type": t}])[0].dataType)
+            != f["type"]
+        ):
+            raise SchemaEvolutionError(
+                f"column {f['name']!r} is {t}, write carries "
+                f"{f['type']} — type changes require an explicit "
+                "rewrite, not evolution"
+            )
+    added = [f for f in new if f["name"] not in by_name]
+    return old + added, bool(added)
 
 
 def segment_stats(
@@ -335,34 +386,8 @@ def segment_stats(
     key range cannot intersect the mutation (sub-partition pruning at
     the SEGMENT LIST, before any file opens). Segments committed
     without stats are simply absent — callers must treat unknown as
-    "may match". Reconstruction mirrors :func:`live_segments`:
-    checkpoint base + bounded delta replay (removed segments drop
-    their stats)."""
-    if version is None:
-        version = latest_version(table_dir)
-    vs = versions(table_dir)
-    ckpts = _checkpoint_versions(table_dir)
-    deltas: list[dict] = []
-    base: dict[str, dict] = {}
-    for u in reversed([v for v in vs if v <= version]):
-        if u in ckpts:
-            try:
-                with open(_ckpt_path(table_dir, u)) as f:
-                    base = dict(json.load(f).get("stats", {}))
-                break
-            except FileNotFoundError:
-                pass  # vacuumed between listing and read; use manifest
-        m = _read_manifest(table_dir, u)
-        if "live" in m:
-            base = dict(m.get("stats", {}))
-            break
-        deltas.append(m)
-    stats = base
-    for m in reversed(deltas):
-        for rel in m.get("removed", ()):
-            stats.pop(rel, None)
-        stats.update(m.get("stats", {}))
-    return stats
+    "may match"; a removed segment drops its stats."""
+    return table_state(table_dir, version)["stats"]
 
 
 def _write_checkpoint(
@@ -388,8 +413,8 @@ def _write_checkpoint(
     (:func:`_maybe_checkpoint`); neither may fence on a map that
     could be incomplete."""
     txns = _collect_txns(table_dir, version)
-    stats = segment_stats(table_dir, version)
-    meta = _collect_meta(table_dir, version)
+    state = table_state(table_dir, version)
+    stats, meta = state["stats"], state["meta"]
     cdir = _commits_dir(table_dir)
     tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
     final = _ckpt_path(table_dir, version)
@@ -663,15 +688,33 @@ def rewrite_snapshot(
         raise
 
 
+def read_segments(
+    spark: SparkSession,
+    table_dir: str,
+    rels: list[str],
+    fields: list[dict] | None,
+) -> DataFrame:
+    """The one segment reader: a scan of ``rels`` shaped by the
+    recorded ``fields`` of the version they belong to. The recorded
+    schema goes to the parquet reader, so building the scan runs no
+    Spark job; a segment older than a column reads it as typed NULLs,
+    and a column newer than the version is not read. ``fields=None``
+    (a table that records no schema) infers it from a footer, which
+    costs one Spark job."""
+    reader = spark.read
+    if fields is not None:
+        reader = reader.schema(declared_struct(fields))
+    return reader.parquet(*[segment_path(table_dir, r) for r in rels])
+
+
 def read_snapshot(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Snapshot-isolated read: resolve the manifest once and scan
-    exactly its immutable segments. ``version`` pins time travel; the
-    default head resolution is the ONLY racy step, and it races to a
-    committed version or not at all. Empty tables need a caller-side
-    schema, so they read as an empty RDD-less DataFrame only when at
-    least one segment exists; an empty live set raises."""
+    exactly its immutable segments with the schema that version
+    recorded (:func:`read_segments`). ``version`` pins time travel;
+    the default head resolution is the ONLY racy step, and it races
+    to a committed version or not at all. An empty live set raises."""
     if version is None:
         version = latest_version(table_dir)
     segs = live_segments(table_dir, version)
@@ -680,9 +723,17 @@ def read_snapshot(
             f"version {version} of {table_dir} has no segments; "
             "schema-less empty reads are undefined on bare parquet"
         )
-    return spark.read.parquet(
-        *[segment_path(table_dir, s) for s in segs]
+    return read_segments(
+        spark, table_dir, segs, recorded_schema(table_dir, version)
     )
+
+
+def seg_of_file() -> F.Column:
+    """The segment directory name of the row's file: the url-decoded
+    ``input_file_name()`` directory (URI encoding is injective with
+    ``url_decode`` as its exact inverse)."""
+    raw = F.regexp_extract(F.input_file_name(), r"^.*/data/([^/]+)/", 1)
+    return F.coalesce(F.try_url_decode(raw), raw)
 
 
 #: Bin-pack target for :func:`compact_snapshots` output segments —
@@ -785,8 +836,6 @@ def compact_snapshots(
     partition tag and the replacements keep the tag; merge-on-read
     ``log-`` segments are never touched (their ``_op``/``_seq``
     protocol belongs to ``compact_change_log``)."""
-    from pyspark.sql import functions as F
-
     last: Exception | None = None
     for _ in range(max_retries):
         head = latest_version(table_dir)
@@ -816,32 +865,24 @@ def compact_snapshots(
             for gi, g in enumerate(groups):
                 for s in g:
                     seg_to_grp[os.path.basename(s)] = gi
-            # mergeSchema: segments may carry HETEROGENEOUS schemas
-            # (sources/evolution.py adds columns with zero rewrite) —
-            # first-file schema inference would silently DROP the
-            # younger columns from every folded row. The union schema
-            # null-fills missing columns, which is exactly what the
-            # recorded-schema read backfills anyway.
-            scan = spark.read.option("mergeSchema", "true").parquet(
-                *[segment_path(table_dir, s) for s in fold]
-            )
+            # Segments may carry HETEROGENEOUS schemas (a widening
+            # write adds columns with zero rewrite): the recorded
+            # schema null-fills the columns a segment predates. A
+            # table that records none falls back to the mergeSchema
+            # footer union — first-file inference would silently DROP
+            # younger columns from every folded row.
+            fields = recorded_schema(table_dir, head)
+            if fields is not None:
+                scan = read_segments(spark, table_dir, fold, fields)
+            else:
+                scan = spark.read.option("mergeSchema", "true").parquet(
+                    *[segment_path(table_dir, s) for s in fold]
+                )
             grp_map = spark.createDataFrame(
                 list(seg_to_grp.items()), "_seg string, _grp int"
             )
             merged = (
-                scan.withColumn(
-                    "_raw",
-                    F.regexp_extract(
-                        F.input_file_name(), r"^.*/data/([^/]+)/", 1
-                    ),
-                )
-                .withColumn(
-                    "_seg",
-                    F.coalesce(
-                        F.expr("try_url_decode(_raw)"), F.col("_raw")
-                    ),
-                )
-                .drop("_raw")
+                scan.withColumn("_seg", seg_of_file())
                 .join(F.broadcast(grp_map), "_seg", "left")
                 .drop("_seg")
             )
@@ -1171,9 +1212,8 @@ def restore_table(table_dir: str, version: int) -> int:
     winner's head and converges to a no-op. The target-file existence
     check also reruns per attempt, shrinking (not eliminating — the
     same residual window Delta has) the restore-vs-vacuum race."""
-    target = live_segments(table_dir, version)
-    target_stats = segment_stats(table_dir, version)
-    target_meta = _collect_meta(table_dir, version)
+    tgt = table_state(table_dir, version)
+    target, target_stats, target_meta = tgt["live"], tgt["stats"], tgt["meta"]
     tgt_set = set(target)
     last: Exception | None = None
     for _ in range(8):
@@ -1189,8 +1229,8 @@ def restore_table(table_dir: str, version: int) -> int:
             )
         head = latest_version(table_dir)
         try:
-            current = live_segments(table_dir, head)
-            current_meta = _collect_meta(table_dir, head)
+            cur = table_state(table_dir, head)
+            current, current_meta = cur["live"], cur["meta"]
         except FileNotFoundError:
             continue  # head vacuumed mid-read; re-resolve
         cur_set = set(current)

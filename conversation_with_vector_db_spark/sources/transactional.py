@@ -56,6 +56,7 @@ semantics as plans/vector.py documents.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -65,17 +66,25 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .snapshot_log import (
+    SCHEMA_KEY,
     CommitConflictError,
+    _fields_of,
     commit_segments,
     create_table,
+    evolve_fields,
+    fields_in,
     is_missing_file_error,
     latest_version,
     live_segments,
-    segment_path,
+    read_segments,
+    recorded_schema,
+    seg_of_file,
     segment_stats,
     table_meta,
+    table_state,
 )
 
 __all__ = [
@@ -94,6 +103,17 @@ __all__ = [
 
 _PART_TMP = "__cvdb_part"
 _LOG_PREFIX = "data/log-"
+
+
+def _log_fields(fields: list[dict] | None) -> list[dict] | None:
+    """A change-log segment's fields: the table's plus the ``_op`` /
+    ``_seq`` row protocol (see :func:`merge_overlay`)."""
+    if fields is None:
+        return None
+    return fields + [
+        {"name": "_op", "type": "string"},
+        {"name": "_seq", "type": "bigint"},
+    ]
 
 
 def _is_log(rel: str) -> bool:
@@ -191,7 +211,7 @@ def _cleanup(table_dir: str, rels: list[str]) -> None:
 
 
 def _segment_key_stats(
-    table_dir: str, rels: list[str], key: str, spark=None
+    table_dir: str, rels: list[str], key: str, spark=None, fields=None
 ) -> dict[str, dict]:
     """Per-segment min/max of ``key`` (the Iceberg write-time
     column-stats collection). Two equivalent paths (pinned equal by
@@ -204,13 +224,15 @@ def _segment_key_stats(
       files, grouped by source segment. A 10^4-segment initial load
       must not pay a serial footer pass over every file it just wrote
       (VERDICT r6 #4); the distributed job reads ONLY the key column,
-      still hot in the page cache.
+      still hot in the page cache, with the recorded ``fields``.
 
     A segment where stats are unavailable, or whose min/max aren't
     plain JSON scalars, is simply omitted (readers treat unknown as
     "may match")."""
     if spark is not None and len(rels) >= 32:
-        return _segment_key_stats_distributed(spark, table_dir, rels, key)
+        return _segment_key_stats_distributed(
+            spark, table_dir, rels, key, fields
+        )
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
@@ -273,7 +295,11 @@ def _segment_key_stats(
 
 
 def _segment_key_stats_distributed(
-    spark: SparkSession, table_dir: str, rels: list[str], key: str
+    spark: SparkSession,
+    table_dir: str,
+    rels: list[str],
+    key: str,
+    fields: list[dict] | None = None,
 ) -> dict[str, dict]:
     """Executor-parallel stats: one aggregation job over the staged
     segments, column-pruned to ``key``, grouped by the url-decoded
@@ -281,7 +307,7 @@ def _segment_key_stats_distributed(
     encoding — same identity compact_snapshots uses). Emits the same
     {rel: {col, min, max}} map as the footer walk; non-scalar key
     types yield no stats, matching the footer path's conservatism."""
-    scan = spark.read.parquet(*[os.path.join(table_dir, r) for r in rels])
+    scan = read_segments(spark, table_dir, rels, fields)
     dtype = scan.schema[key].dataType.simpleString()
     if dtype not in (
         "tinyint", "smallint", "int", "bigint", "float", "double",
@@ -290,18 +316,7 @@ def _segment_key_stats_distributed(
         return {}
     by_name = {os.path.basename(r): r for r in rels}
     agged = (
-        scan.select(
-            F.coalesce(
-                F.expr(
-                    "try_url_decode(regexp_extract("
-                    "input_file_name(), '^.*/data/([^/]+)/', 1))"
-                ),
-                F.regexp_extract(
-                    F.input_file_name(), r"^.*/data/([^/]+)/", 1
-                ),
-            ).alias("_seg"),
-            F.col(key).alias("_k"),
-        )
+        scan.select(seg_of_file().alias("_seg"), F.col(key).alias("_k"))
         .groupBy("_seg")
         .agg(F.min("_k").alias("_lo"), F.max("_k").alias("_hi"))
         .collect()
@@ -332,6 +347,7 @@ def _segment_key_blooms(
     rels: list[str],
     key: str,
     m_bits: int,
+    fields: list[dict] | None,
 ) -> dict[str, dict]:
     """Per-segment Bloom filter of the key column (the Delta
     bloom-filter-index move, at SEGMENT granularity): ONE
@@ -350,21 +366,12 @@ def _segment_key_blooms(
     so false negatives are structurally impossible. Only integral
     and string key types build blooms (float string forms differ
     across engines); others stay range-pruned only."""
-    scan = spark.read.parquet(
-        *[segment_path(table_dir, r) for r in rels]
-    )
+    scan = read_segments(spark, table_dir, rels, fields)
     if scan.schema[key].dataType.simpleString() not in _BLOOM_DTYPES:
         return {}
     by_name = {os.path.basename(r): r for r in rels}
-    seg = F.coalesce(
-        F.expr(
-            "try_url_decode(regexp_extract("
-            "input_file_name(), '^.*/data/([^/]+)/', 1))"
-        ),
-        F.regexp_extract(F.input_file_name(), r"^.*/data/([^/]+)/", 1),
-    )
     keyed = scan.select(
-        seg.alias("_seg"), F.col(key).cast("string").alias("_k")
+        seg_of_file().alias("_seg"), F.col(key).cast("string").alias("_k")
     ).where(F.col("_k").isNotNull())
     positions = F.array(
         *[
@@ -492,16 +499,17 @@ def _write_stats(
     rels: list[str],
     key: str | None,
     bloom_bits: int,
+    fields: list[dict] | None,
 ) -> dict[str, dict] | None:
     """Write-time stats for just-staged segments: min/max always
     (when ``key`` given), plus Bloom sidecars when ``bloom_bits`` is
     set (see :func:`_segment_key_blooms`)."""
     if not key:
         return None
-    stats = _segment_key_stats(table_dir, rels, key, spark=spark)
+    stats = _segment_key_stats(table_dir, rels, key, spark, fields)
     if bloom_bits:
         for rel, bl in _segment_key_blooms(
-            spark, table_dir, rels, key, bloom_bits
+            spark, table_dir, rels, key, bloom_bits, fields
         ).items():
             stats.setdefault(rel, {"col": key})["bloom"] = bl
     return stats
@@ -523,14 +531,39 @@ def create_partitioned_table(
     per-segment Bloom sidecar of the key set (point-lookup pruning
     where ranges can't help); ``meta`` publishes table-metadata keys
     atomically with the creating commit (see
-    :func:`..snapshot_log.table_meta`)."""
+    :func:`..snapshot_log.table_meta`), beside the recorded schema
+    (:data:`..snapshot_log.SCHEMA_KEY`) every later read uses."""
+    fields = _fields_of(df.schema)
     create_table(table_dir)
     rels = _stage_partition_segments(df, table_dir, partition_col)
     return commit_segments(
         table_dir, added=rels, removed=[], op="append",
-        stats=_write_stats(spark, table_dir, rels, key, bloom_bits),
-        meta=meta,
+        stats=_write_stats(spark, table_dir, rels, key, bloom_bits, fields),
+        meta={SCHEMA_KEY: json.dumps(fields), **(meta or {})},
     )
+
+
+def _evolve(
+    base: list[dict] | None, schema: T.StructType, internal=()
+) -> tuple[list[dict] | None, dict | None]:
+    """The fields a write staging rows of ``schema`` reads its staged
+    segments with, and the meta it publishes: the head's recorded
+    ``base`` widened by the columns the rows add (``internal`` columns
+    never reach the table's schema). A type change on a recorded
+    column fails closed (:class:`..snapshot_log.SchemaEvolutionError`);
+    it is analysis only and runs no job. A table that records no
+    schema stays unrecorded."""
+    if base is None:
+        return None, None
+    fields, widened = evolve_fields(
+        base,
+        _fields_of(
+            T.StructType(
+                [f for f in schema.fields if f.name not in internal]
+            )
+        ),
+    )
+    return fields, ({SCHEMA_KEY: json.dumps(fields)} if widened else None)
 
 
 def append_partitioned(
@@ -544,27 +577,27 @@ def append_partitioned(
     """S9 insert/insertMany: stage tagged segments, commit atomically —
     a multi-partition insert is ONE version, never a torn subset.
     ``key`` records per-segment min/max stats and ``bloom_bits`` the
-    optional Bloom sidecar (see :func:`create_partitioned_table`)."""
+    optional Bloom sidecar (see :func:`create_partitioned_table`).
+    Rows may add columns to the recorded schema, never retype one
+    (:func:`_evolve`)."""
+    fields, widened = _evolve(recorded_schema(table_dir), df.schema)
     rels = _stage_partition_segments(df, table_dir, partition_col)
     try:
         return commit_segments(
             table_dir, added=rels, removed=[], op="append",
-            stats=_write_stats(spark, table_dir, rels, key, bloom_bits),
-            pre_commit=_constraints_pre_commit(spark, table_dir, rels),
+            stats=_write_stats(
+                spark, table_dir, rels, key, bloom_bits, fields
+            ),
+            meta=widened,
+            pre_commit=_constraints_pre_commit(
+                spark, table_dir, rels, fields, widens=bool(widened)
+            ),
         )
     except Exception:
         # Constraint refusal, analysis error in a stored predicate,
         # or CAS exhaustion: never leave staged dirs behind.
         _cleanup(table_dir, rels)
         raise
-
-
-def _read_segments(
-    spark: SparkSession, table_dir: str, rels: list[str], schema=None
-) -> DataFrame:
-    """Scan of ``rels``; a known ``schema`` skips the inference job."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*[segment_path(table_dir, r) for r in rels])
 
 
 def read_table(
@@ -576,10 +609,14 @@ def read_table(
 ) -> DataFrame:
     """Snapshot-isolated read of the base table (MOR overlay excluded —
     use :func:`read_merge_on_read` for current-state reads on tables
-    with a live change log). ``partitions`` prunes at the SEGMENT LIST:
-    only tagged segments matching the requested values are opened
-    (untagged segments, which could hold any partition, are always
-    included and filtered row-wise)."""
+    with a live change log), shaped by the schema ``version`` recorded
+    (:func:`..snapshot_log.read_segments`): building it runs no Spark
+    job unless the table records no schema. ``partitions`` prunes at
+    the SEGMENT LIST: only tagged segments matching the requested
+    values are opened (untagged segments, which could hold any
+    partition, are always included and filtered row-wise)."""
+    if version is None:
+        version = latest_version(table_dir)
     segs = [s for s in live_segments(table_dir, version) if not _is_log(s)]
     if partitions is not None:
         wanted = {str(v) for v in partitions}
@@ -594,7 +631,9 @@ def read_table(
             f"no base segments selected at {table_dir} "
             f"(version={version}, partitions={partitions})"
         )
-    df = _read_segments(spark, table_dir, segs)
+    df = read_segments(
+        spark, table_dir, segs, recorded_schema(table_dir, version)
+    )
     if partitions is not None:
         df = df.filter(
             F.col(partition_col).cast("string").isin(*sorted(wanted))
@@ -620,13 +659,15 @@ _MAX_REPLANS = 4
 @dataclass
 class _Head:
     """What one write attempt plans against: the head version, its live
-    segments and their recorded stats. A plan that writes a side file
+    segments, their recorded stats and the head's recorded schema
+    (None when the table records none). A plan that writes a side file
     itself (a rebalance's centroid sidecar) lists it in ``staged`` so a
     failed attempt removes it."""
 
     version: int
     live: list[str]
     stats: dict[str, dict]
+    fields: list[dict] | None
     staged: list[str] = field(default_factory=list)
 
     @property
@@ -678,7 +719,9 @@ def _copy_on_write(
     the writers that fold or drop the log itself); calls ``plan(head)``
     for a :class:`_Rewrite` (None = nothing to do, the head is
     returned); stages its rows; and commits them with ``key`` min/max
-    stats, ``txn`` and the plan's ``meta``. ``fold_identity`` marks a
+    stats, ``txn`` and the plan's ``meta``. Staged rows may add columns
+    to the head's recorded schema, published in the same commit, and
+    may not retype one (:func:`_evolve`). ``fold_identity`` marks a
     row-introducing write: the commit then enforces the table's
     constraints per CAS attempt, folding UNIQUE rules the identity
     guarantees (see :func:`_constraints_pre_commit`).
@@ -700,10 +743,9 @@ def _copy_on_write(
     def attempt():
         head = latest_version(table_dir)
         try:
+            st = table_state(table_dir, head)
             at = _Head(
-                head,
-                live_segments(table_dir, head),
-                segment_stats(table_dir, head),
+                head, st["live"], st["stats"], fields_in(st["meta"])
             )
         except FileNotFoundError as e:
             raise CommitConflictError(
@@ -717,6 +759,12 @@ def _copy_on_write(
             rw = plan(at)
             if rw is None:
                 return head
+            fields, widened = at.fields, None
+            if rw.rows is not None:
+                internal = ("_op", "_seq") if rw.log else (rw.bucket_col,)
+                fields, widened = _evolve(
+                    at.fields, rw.rows.schema, internal
+                )
             added: list[str] = []
             if rw.rows is not None and rw.log:
                 added = [os.path.join("data", f"log-{uuid.uuid4().hex}")]
@@ -728,16 +776,16 @@ def _copy_on_write(
                 )
                 at.staged += added
             stats = (
-                _segment_key_stats(table_dir, added, key, spark=spark)
+                _segment_key_stats(table_dir, added, key, spark, fields)
                 if key
                 else None
             )
             constraints = (
                 _constraints_pre_commit(
-                    spark, table_dir, added, removed=rw.removed,
-                    fold_identity=fold_identity,
+                    spark, table_dir, added, fields, removed=rw.removed,
+                    fold_identity=fold_identity, widens=bool(widened),
                 )
-                if fold_identity
+                if fold_identity or widened
                 else None
             )
 
@@ -769,7 +817,7 @@ def _copy_on_write(
                 stats=stats,
                 pre_commit=pre_commit,
                 txn=txn,
-                meta=rw.meta,
+                meta={**(rw.meta or {}), **widened} if widened else rw.meta,
             )
         except Exception as e:
             conflict = isinstance(e, CommitConflictError)
@@ -873,7 +921,7 @@ def _keyed_rewrite(
         old: list[str] = []
         cands = read_set(at.live, at.stats)
         if cands:
-            current = _read_segments(spark, table_dir, cands)
+            current = read_segments(spark, table_dir, cands, at.fields)
             hit = {
                 str(r[0])
                 for r in current.join(local, match_cols, "left_semi")
@@ -890,8 +938,8 @@ def _keyed_rewrite(
                 ]
         if not old:
             return None if updates is None else _Rewrite(updates, [])
-        survivors = _read_segments(
-            spark, table_dir, old, current.schema
+        survivors = read_segments(
+            spark, table_dir, old, at.fields
         ).join(local, match_cols, "left_anti")
         if updates is not None:
             survivors = survivors.unionByName(updates)
@@ -1017,7 +1065,9 @@ def drop_partition(
             return None
         kept = None
         if logs:
-            kept = _read_segments(spark, table_dir, logs).filter(
+            kept = read_segments(
+                spark, table_dir, logs, _log_fields(at.fields)
+            ).filter(
                 F.col(partition_col).cast("string") != F.lit(val)
             )
             if kept.limit(1).count() == 0:
@@ -1093,16 +1143,19 @@ def read_merge_on_read(
     """Current state at ``version``: base segments overlaid with the
     live change-log segments (latest ``_seq`` per identity wins,
     deletes drop the identity). Snapshot-isolated like every log read."""
+    if version is None:
+        version = latest_version(table_dir)
     live = live_segments(table_dir, version)
+    fields = recorded_schema(table_dir, version)
     logs = [s for s in live if _is_log(s)]
     bases = [s for s in live if not _is_log(s)]
     if not bases and not logs:
         raise ValueError(f"{table_dir} has no segments at v{version}")
     if not logs:
-        return _read_segments(spark, table_dir, bases)
-    log_df = _read_segments(spark, table_dir, logs)
+        return read_segments(spark, table_dir, bases, fields)
+    log_df = read_segments(spark, table_dir, logs, _log_fields(fields))
     if bases:
-        base = _read_segments(spark, table_dir, bases)
+        base = read_segments(spark, table_dir, bases, fields)
     else:
         base = log_df.drop("_op", "_seq").filter(F.lit(False))
     return merge_overlay(base, log_df, [partition_col, key])
@@ -1128,7 +1181,9 @@ def compact_change_log(
         logs = [s for s in at.live if _is_log(s)]
         if not logs:
             return None
-        log_df = _read_segments(spark, table_dir, logs)
+        log_df = read_segments(
+            spark, table_dir, logs, _log_fields(at.fields)
+        )
         touched = {
             str(r[0])
             for r in log_df.select(partition_col).distinct().collect()
@@ -1140,7 +1195,7 @@ def compact_change_log(
             at.live, at.stats, key, None, None, None, touched, partition_col
         )
         if fold_bases:
-            base = _read_segments(spark, table_dir, fold_bases)
+            base = read_segments(spark, table_dir, fold_bases, at.fields)
         else:
             base = log_df.drop("_op", "_seq").filter(F.lit(False))
         merged = merge_overlay(base, log_df, [partition_col, key])
@@ -1259,7 +1314,7 @@ def merge_into(
                 s for s in old if _bloom_any_match(at.stats.get(s), key, probe)
             ]
         if old:
-            current = _read_segments(spark, table_dir, old)
+            current = read_segments(spark, table_dir, old, at.fields)
         else:
             # Nothing can match: the merge degenerates to the insert
             # clause. The empty target still takes the TABLE's schema
@@ -1268,9 +1323,9 @@ def merge_into(
             # drift the column set; a table with no live segments at
             # all borrows the source's shape.
             current = (
-                _read_segments(spark, table_dir, at.bases[:1]).filter(
-                    F.lit(False)
-                )
+                read_segments(
+                    spark, table_dir, at.bases[:1], at.fields
+                ).filter(F.lit(False))
                 if at.bases
                 else source.filter(F.lit(False))
             )
@@ -1377,20 +1432,6 @@ def merge_into(
     )
 
 
-#: Shared url-decoded input_file_name -> segment-dir identity (the
-#: compact_snapshots / distributed-stats expression).
-def _seg_of_file() -> F.Column:
-    return F.coalesce(
-        F.expr(
-            "try_url_decode(regexp_extract("
-            "input_file_name(), '^.*/data/([^/]+)/', 1))"
-        ),
-        F.regexp_extract(
-            F.input_file_name(), r"^.*/data/([^/]+)/", 1
-        ),
-    )
-
-
 def delete_where(
     spark: SparkSession,
     table_dir: str,
@@ -1423,11 +1464,11 @@ def delete_where(
         cands = at.bases
         if not cands:
             return None
-        scan = _read_segments(spark, table_dir, cands)
+        scan = read_segments(spark, table_dir, cands, at.fields)
         hits = {
             str(r[0])
             for r in scan.where(cond)
-            .select(_seg_of_file().alias("_seg"))
+            .select(seg_of_file().alias("_seg"))
             .distinct()
             .collect()
         }
@@ -1442,8 +1483,8 @@ def delete_where(
                 "rather than risking row loss"
             )
         old = sorted(by_name[h] for h in hits)
-        survivors = _read_segments(
-            spark, table_dir, old, scan.schema
+        survivors = read_segments(
+            spark, table_dir, old, at.fields
         ).where(~F.coalesce(cond, F.lit(False)))
         return _Rewrite(survivors, old)
 
@@ -1497,7 +1538,7 @@ def zorder_rewrite(
         old = at.bases
         if not old:
             return None
-        cur = _read_segments(spark, table_dir, old)
+        cur = read_segments(spark, table_dir, old, at.fields)
         if len(by) == 2:
             zed = with_z_value(cur, by[0], by[1], out_col="_zv")
         else:
@@ -1581,10 +1622,13 @@ def table_changes(
     }
     gone = sorted(old_live - new_live)
     came = sorted(new_live - old_live)
+    # Both sides read with v_to's recorded schema: a column added in
+    # the range reads NULL in the pre-images.
+    fields = recorded_schema(table_dir, v_to)
     if not gone and not came:
         # Version range touched nothing (or only metadata).
-        empty = _read_segments(
-            spark, table_dir, sorted(new_live or old_live)[:1]
+        empty = read_segments(
+            spark, table_dir, sorted(new_live or old_live)[:1], fields
         ).filter(F.lit(False)) if (new_live or old_live) else None
         if empty is None:
             raise ValueError(
@@ -1593,13 +1637,13 @@ def table_changes(
             )
         return empty.withColumn("_change_type", F.lit(""))
     before = (
-        _read_segments(spark, table_dir, gone)
+        read_segments(spark, table_dir, gone, fields)
         if gone
-        else _read_segments(spark, table_dir, sorted(new_live)[:1])
+        else read_segments(spark, table_dir, sorted(new_live)[:1], fields)
         .filter(F.lit(False))
     )
     after = (
-        _read_segments(spark, table_dir, came)
+        read_segments(spark, table_dir, came, fields)
         if came
         else before.filter(F.lit(False))
     )
@@ -1654,47 +1698,65 @@ class ConstraintViolationError(ValueError):
     pass
 
 
+def _rules(table_dir: str, key: str) -> dict:
+    """The rule map the meta ``key`` holds at the head (newest-wins)."""
+    raw = table_meta(table_dir).get(key)
+    return json.loads(raw) if raw else {}
+
+
+def _publish_rule(
+    table_dir: str, key: str, name: str, rule=None, spark=None,
+    validate=None,
+) -> int:
+    """Metadata-only commit of the ``key`` rule map with ``name`` set to
+    ``rule`` (None drops it). An added rule is first validated against
+    the existing rows by ``validate`` per CAS attempt
+    (:func:`_revalidating_hook`)."""
+    cur = _rules(table_dir, key)
+    if rule is None:
+        cur.pop(name, None)
+    else:
+        cur[name] = rule
+    return commit_segments(
+        table_dir,
+        added=[],
+        removed=[],
+        op="drop_constraint" if rule is None else "add_constraint",
+        meta={key: json.dumps(cur)},
+        pre_commit=(
+            None
+            if validate is None
+            else _revalidating_hook(spark, table_dir, validate)
+        ),
+    )
+
+
 def table_constraints(table_dir: str) -> dict[str, str]:
     """Effective CHECK constraints at the head (newest-wins meta)."""
-    import json as _json
-
-    raw = table_meta(table_dir).get(CONSTRAINTS_KEY)
-    return _json.loads(raw) if raw else {}
+    return _rules(table_dir, CONSTRAINTS_KEY)
 
 
-def _head_df_at(
-    spark: SparkSession, table_dir: str, head: int
-) -> DataFrame | None:
-    """The table's full contents AT a specific version, for ADD-time
-    constraint validation (None = empty, vacuously satisfied).
-    Schema-tracked tables (sources/evolution.py) read through the
-    declared schema so heterogeneous segments backfill typed NULLs
-    instead of failing analysis on a column their files predate."""
-    try:
-        if table_meta(table_dir, head).get("schema") is not None:
-            from .evolution import read_evolved
-
-            return read_evolved(spark, table_dir, head)
-        return read_table(spark, table_dir, head)
-    except ValueError:
-        return None
-
-
-def _revalidating_hook(validate):
-    """ADD CONSTRAINT pre-commit hook: runs ``validate(head)`` on
-    EVERY CAS attempt, memoized per head — so a writer whose commit
-    lands between one attempt's validation and the CAS (the writer's
-    own pre_commit hook did not see the new rule yet) is re-checked
-    before the rule is published. Without this the ADD's retry would
-    blind-replay the metadata commit over data the rule forbids —
-    the exact 'guarantee becomes a lie' the docstrings promise to
-    prevent (ADVICE r8)."""
+def _revalidating_hook(spark: SparkSession, table_dir: str, validate):
+    """ADD CONSTRAINT pre-commit hook: runs ``validate(rows)`` over the
+    table's contents at the head of EVERY CAS attempt (a table with no
+    base segments satisfies every rule), memoized per head — so a
+    writer whose commit lands between one attempt's validation and
+    the CAS (the writer's own pre_commit hook did not see the new rule
+    yet) is re-checked before the rule is published. Without this the
+    ADD's retry would blind-replay the metadata commit over data the
+    rule forbids — the exact 'guarantee becomes a lie' the docstrings
+    promise to prevent (ADVICE r8)."""
     state = {"ok_at": None}
 
     def hook(head: int) -> None:
         if state["ok_at"] == head:
             return
-        validate(head)
+        try:
+            rows = read_table(spark, table_dir, head)
+        except ValueError:
+            pass  # no base segments: every rule holds vacuously
+        else:
+            validate(rows)
         state["ok_at"] = head
 
     return hook
@@ -1717,15 +1779,8 @@ def add_check_constraint(
     refuses the commit on violation — a constraint holds for every
     committed version at or after its own, which is also what time
     travel observes."""
-    import json as _json
 
-    cur = table_constraints(table_dir)
-    cur[name] = predicate
-
-    def validate(head: int) -> None:
-        head_df = _head_df_at(spark, table_dir, head)
-        if head_df is None:
-            return
+    def validate(head_df: DataFrame) -> None:
         bad = head_df.where(
             ~F.coalesce(F.expr(predicate), F.lit(False))
         ).count()
@@ -1735,28 +1790,13 @@ def add_check_constraint(
                 f"row(s) violate ({predicate})"
             )
 
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="add_constraint",
-        meta={CONSTRAINTS_KEY: _json.dumps(cur)},
-        pre_commit=_revalidating_hook(validate),
+    return _publish_rule(
+        table_dir, CONSTRAINTS_KEY, name, predicate, spark, validate
     )
 
 
 def drop_check_constraint(table_dir: str, name: str) -> int:
-    import json as _json
-
-    cur = table_constraints(table_dir)
-    cur.pop(name, None)
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="drop_constraint",
-        meta={CONSTRAINTS_KEY: _json.dumps(cur)},
-    )
+    return _publish_rule(table_dir, CONSTRAINTS_KEY, name)
 
 
 def check_violations(staged: DataFrame, cons: dict[str, str],
@@ -1792,10 +1832,7 @@ FOREIGN_KEYS_KEY = "foreign_keys"
 
 def table_foreign_keys(table_dir: str) -> dict[str, dict]:
     """Effective FOREIGN KEY constraints at the head."""
-    import json as _json
-
-    raw = table_meta(table_dir).get(FOREIGN_KEYS_KEY)
-    return _json.loads(raw) if raw else {}
+    return _rules(table_dir, FOREIGN_KEYS_KEY)
 
 
 def _fk_orphans(
@@ -1844,16 +1881,9 @@ def add_foreign_key(
     parent DELETE is not blocked (no reverse trigger), which is the
     expectations-suite's job to audit; enforcement here stops orphans
     from ever being WRITTEN."""
-    import json as _json
-
     fk = {"col": col, "parent": parent_dir, "parent_col": parent_col}
-    cur = table_foreign_keys(table_dir)
-    cur[name] = fk
 
-    def validate(head: int) -> None:
-        head_df = _head_df_at(spark, table_dir, head)
-        if head_df is None:
-            return
+    def validate(head_df: DataFrame) -> None:
         bad = _fk_orphans(spark, head_df, fk)
         if bad:
             raise ConstraintViolationError(
@@ -1861,28 +1891,13 @@ def add_foreign_key(
                 f"row(s) have no parent in {parent_dir}:{parent_col}"
             )
 
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="add_constraint",
-        meta={FOREIGN_KEYS_KEY: _json.dumps(cur)},
-        pre_commit=_revalidating_hook(validate),
+    return _publish_rule(
+        table_dir, FOREIGN_KEYS_KEY, name, fk, spark, validate
     )
 
 
 def drop_foreign_key(table_dir: str, name: str) -> int:
-    import json as _json
-
-    cur = table_foreign_keys(table_dir)
-    cur.pop(name, None)
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="drop_constraint",
-        meta={FOREIGN_KEYS_KEY: _json.dumps(cur)},
-    )
+    return _publish_rule(table_dir, FOREIGN_KEYS_KEY, name)
 
 
 #: Manifest meta key holding the UNIQUE-constraint map
@@ -1892,10 +1907,7 @@ UNIQUE_KEYS_KEY = "unique_keys"
 
 def table_unique_constraints(table_dir: str) -> dict[str, dict]:
     """Effective UNIQUE constraints at the head."""
-    import json as _json
-
-    raw = table_meta(table_dir).get(UNIQUE_KEYS_KEY)
-    return _json.loads(raw) if raw else {}
+    return _rules(table_dir, UNIQUE_KEYS_KEY)
 
 
 def _non_null_keyed(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -1957,7 +1969,9 @@ def _unique_violation(
         ]
     if not cands:
         return None
-    existing = _read_segments(spark, table_dir, cands).select(*cols)
+    existing = read_segments(
+        spark, table_dir, cands, recorded_schema(table_dir, head)
+    ).select(*cols)
     clash = (
         keyed.select(*cols)
         .join(existing, on=cols, how="inner")
@@ -1985,14 +1999,9 @@ def add_unique_constraint(
     constraints their fold identity already guarantees (identity
     ⊆ constraint cols). NULL keys are ignored, SQL UNIQUE semantics:
     any number of rows whose key is (even partially) NULL coexist."""
-    import json as _json
-
     cols = list(cols)
 
-    def validate(head: int) -> None:
-        head_df = _head_df_at(spark, table_dir, head)
-        if head_df is None:
-            return
+    def validate(head_df: DataFrame) -> None:
         dup = (
             _non_null_keyed(head_df, cols)
             .groupBy(*cols)
@@ -2007,38 +2016,23 @@ def add_unique_constraint(
                 f"rows repeat {cols}"
             )
 
-    cur = table_unique_constraints(table_dir)
-    cur[name] = {"cols": cols}
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="add_constraint",
-        meta={UNIQUE_KEYS_KEY: _json.dumps(cur)},
-        pre_commit=_revalidating_hook(validate),
+    return _publish_rule(
+        table_dir, UNIQUE_KEYS_KEY, name, {"cols": cols}, spark, validate
     )
 
 
 def drop_unique_constraint(table_dir: str, name: str) -> int:
-    import json as _json
-
-    cur = table_unique_constraints(table_dir)
-    cur.pop(name, None)
-    return commit_segments(
-        table_dir,
-        added=[],
-        removed=[],
-        op="drop_constraint",
-        meta={UNIQUE_KEYS_KEY: _json.dumps(cur)},
-    )
+    return _publish_rule(table_dir, UNIQUE_KEYS_KEY, name)
 
 
 def _constraints_pre_commit(
     spark: SparkSession,
     table_dir: str,
     new_rels: list[str],
+    fields: list[dict] | None = None,
     removed: list[str] | None = None,
     fold_identity: tuple | None = None,
+    widens: bool = False,
 ):
     """Per-CAS-attempt enforcement hook for
     :func:`~.snapshot_log.commit_segments`: re-reads the constraint
@@ -2058,14 +2052,25 @@ def _constraints_pre_commit(
     is then guaranteed by construction and skips the probe (identity
     ⊆ cols is the sound direction: fold-unique on (p, k) implies
     unique on (p, k, extra) but NOT on (k) alone, which a second
-    partition may repeat — so everything else is probed normally)."""
+    partition may repeat — so everything else is probed normally).
+
+    The staged segments read with ``fields``, the schema the commit
+    publishes, so a row that omits a constrained column is checked
+    on NULL. A commit that ``widens`` that schema is refused with
+    :class:`CommitConflictError` when the head's recorded schema is no
+    longer the one it widened (a concurrent widening would be lost)."""
     state = {"ok_for": None}
     identity = set(fold_identity) if fold_identity else None
     exclude = set(new_rels) | set(removed or ())
 
     def hook(head: int) -> None:
-        import json as _json
-
+        if widens:
+            now = recorded_schema(table_dir, head) or []
+            if fields[: len(now)] != now:
+                raise CommitConflictError(
+                    f"the schema of {table_dir} changed at v{head} "
+                    "under a write that widens it"
+                )
         cons = table_constraints(table_dir)
         fks = table_foreign_keys(table_dir)
         uniqs = {
@@ -2075,10 +2080,10 @@ def _constraints_pre_commit(
         }
         if (not cons and not fks and not uniqs) or not new_rels:
             return
-        key = _json.dumps([cons, fks, uniqs], sort_keys=True)
+        key = json.dumps([cons, fks, uniqs], sort_keys=True)
         if state["ok_for"] == key:
             return
-        staged = _read_segments(spark, table_dir, new_rels)
+        staged = read_segments(spark, table_dir, new_rels, fields)
         if cons:
             check_violations(staged, cons, table_dir)
         for name, fk in sorted(fks.items()):

@@ -395,11 +395,50 @@ class TestIvfIndexed:
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         assert 0 < n_jobs <= 10, n_jobs
 
+    def test_read_paths_build_with_recorded_schema(self, spark, tmp_path):
+        """The index records its schema at create, so building a
+        read_table runs no Spark job and building an ivf_table_topk
+        runs one (the query-vector collect): no footer inference."""
+        from conversation_with_vector_db_spark.operators.ann import (
+            ivf_table_create,
+            ivf_table_topk,
+        )
+        from conversation_with_vector_db_spark.sources.transactional import (
+            read_table,
+        )
+
+        corpus = self._clustered_corpus(spark)
+        t = str(tmp_path / "ivf_read_jobs")
+        ivf_table_create(spark, corpus, t, nlist=8)
+        queries = corpus.filter(F.col("vec_id") < 3)
+        sc = spark.sparkContext
+
+        def build_jobs(name, fn):
+            group = f"{name}-{tmp_path.name}"
+            sc.setJobGroup(group, name)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        table, n_read = build_jobs(
+            "read-table", lambda: read_table(spark, t)
+        )
+        top, n_topk = build_jobs(
+            "ivf-topk", lambda: ivf_table_topk(spark, t, queries, k=5)
+        )
+        assert (n_read, n_topk) == (0, 1)
+        assert table.count() == corpus.count()
+        assert top.count() == 15
+
     def test_delete_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
         """ivf_table_delete collects its id frame once and joins the
         collected ids: one collect, one segment read for the hit set
-        and one for the survivors' write, which reuses the hit-set
-        scan's schema — at most 7 Spark jobs."""
+        and one for the survivors' write, both with the recorded
+        schema (no inference job) — at most 6 Spark jobs."""
         from conversation_with_vector_db_spark.operators.ann import (
             ivf_table_create,
             ivf_table_delete,
@@ -422,16 +461,16 @@ class TestIvfIndexed:
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n_jobs <= 7, n_jobs
+        assert 0 < n_jobs <= 6, n_jobs
         left = read_table(spark, t)
         assert left.count() == corpus.count() - 3
         assert left.filter(F.col("vec_id").isin(3, 17, 200)).count() == 0
 
     def test_upsert_runs_a_bounded_number_of_jobs(self, spark, tmp_path):
-        """ivf_table_upsert reads the table schema, collects the update
-        ids once, reads the candidate segments for the hit set and
-        writes survivors plus assigned updates — at most 9 Spark jobs
-        (no min/max aggregate, no second schema inference)."""
+        """ivf_table_upsert takes the table's recorded schema, collects
+        the update ids once, reads the candidate segments for the hit
+        set and writes survivors plus assigned updates — at most 6
+        Spark jobs (no min/max aggregate, no schema inference)."""
         from conversation_with_vector_db_spark.operators.ann import (
             ivf_table_create,
             ivf_table_upsert,
@@ -459,7 +498,7 @@ class TestIvfIndexed:
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert 0 < n_jobs <= 9, n_jobs
+        assert 0 < n_jobs <= 6, n_jobs
         assert read_table(spark, t).count() == corpus.count() + 1
 
     def test_upsert_of_unchanged_rows_keeps_their_cells(self, spark, tmp_path):
